@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query seconds.
@@ -40,11 +42,14 @@ object BenchFormat {
     * contended batches were discarded, and whether the entry serves
     * from a memoized artifact ([[graft.SparkEntry.memoizedEntries]] —
     * flagged so near-identical draws on those rows are read as
-    * memo-serving, not as a suspiciously stable live plan).
+    * memo-serving, not as a suspiciously stable live plan). `failed`
+    * marks a row where any draw threw: its times measure the failure,
+    * not the query.
     */
   final case class Rec(name: String, cold: Double, warm: Double,
       draws: Seq[Double], probeRatio: Double, retries: Int,
-      memoized: Boolean = false, stormed: Boolean = false)
+      memoized: Boolean = false, stormed: Boolean = false,
+      failed: Boolean = false)
 
   /** One interleaved throughput window: the light-only and mixed
     * figures plus, for EACH half, the max bracketing-probe ratio that
@@ -127,7 +132,8 @@ object BenchFormat {
         // still >1.5× baseline shipped a STORMED median — flagged so
         // cross-round driver-line comparisons can filter mechanically
         // instead of digging through draw arrays (the r14 m8/m9 rows)
-        (if (r.stormed) ",\"stormed\":true" else "") + "}"
+        (if (r.stormed) ",\"stormed\":true" else "") +
+        (if (r.failed) ",\"failed\":true" else "") + "}"
     }.mkString("{", ",", "}")
     val total = recs.map(_.warm).sum
     // every interleaved (light, mixed) throughput window, in run
@@ -229,13 +235,18 @@ object Bench {
     // draws of 3 queries at 10s each — under this scheme those batches
     // would have been rejected and re-drawn post-storm.
     val recs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val cold = time { try fn(spark, sfDir).count() catch { case _: Throwable => () } }
+      // a throwing draw still yields a time (the row stays in the
+      // contract line) but stamps the row failed in bench_full.json
+      var failed = false
+      def draw(): Double = time {
+        try fn(spark, sfDir).count()
+        catch { case NonFatal(_) => failed = true }
+      }
+      val cold = draw()
       def drawBatch(): Seq[Double] = {
-        val warms = Seq.fill(3)(
-          time { try fn(spark, sfDir).count() catch { case _: Throwable => () } })
+        val warms = Seq.fill(3)(draw())
         if (warms.min > 0.05 && warms.max > 2.5 * warms.min)
-          warms ++ Seq.fill(2)(
-            time { try fn(spark, sfDir).count() catch { case _: Throwable => () } })
+          warms ++ Seq.fill(2)(draw())
         else warms
       }
       var allDraws = Vector.empty[Double]
@@ -260,7 +271,7 @@ object Bench {
         memoized = SparkEntry.memoizedEntries.contains(name),
         // redraws exhausted with the probe still hot: the reported
         // median is storm-contaminated — stamp it machine-readably
-        stormed = ratio > 1.5)
+        stormed = ratio > 1.5, failed = failed)
     }
     val results = recs.map(r => (r.name, r.cold, r.warm))
     // settle before the throughput section: the serial section leaves

@@ -1199,8 +1199,8 @@ object HttpApi {
     // playing the role of its replay-safe batch commit (a crash
     // between the table append and the chunk append leaves the marker
     // absent, and heal rebuilds the store from the table). Like the
-    // streaming twin, per-batch chunks are short; ChunkStore.compact
-    // behind the write watermark restores full chunks.
+    // streaming twin, per-batch chunks are short; the background
+    // compactor (ChunkStore.stageCompaction) restores full chunks.
     val chunksPath = new org.apache.hadoop.fs.Path(path, "_chunks").toString
     def rollupPath(b: Long) = Ingest.rollupPath(path, b)
     // tier-freshness marker: the sink DELETES it before the append
@@ -1253,9 +1253,9 @@ object HttpApi {
         Ingest.appendSeriesIndex(Ingest.readTable(spark, path), indexPath)
         if (chunks) {
           // full rebuild: collapse cross-batch duplicate (sig, t) rows
-          // exactly like ChunkStore.compact (the encoder's strictly-
-          // increasing contract; smallest value wins, stale beats
-          // plain at one timestamp), then re-cut the whole store
+          // exactly like ChunkStore.stageCompaction (the encoder's
+          // strictly-increasing contract; smallest value wins, stale
+          // beats plain at one timestamp), then re-cut the whole store
           val collapsed = ChunkStore.collapseDupSamples(
             Ingest.readTable(spark, path))
           ChunkStore.write(collapsed, chunksPath, overwrite = true)
@@ -1512,14 +1512,17 @@ object HttpApi {
       dates.foreach { date =>
         val key = (if (samplesTier) "s:" else "c:") + date
         if (compactPending.add(key)) {
-          try compactExec.submit(new Runnable {
+          // execute, not submit: a Future nobody reads would capture
+          // and drop a fatal error the task rethrows
+          try compactExec.execute(new Runnable {
             def run(): Unit =
               try checkAndCompact(samplesTier, date)
               catch {
-                case t: Throwable =>
+                case scala.util.control.NonFatal(t) =>
                   // abandon: clean the staging dir, count it, let the
                   // gate refire on a later write — a compaction must
-                  // never take the serving path down with it
+                  // never take the serving path down with it (a fatal
+                  // error still propagates to the thread's handler)
                   api.compactionErrors.incrementAndGet()
                   graft.storage.StagedSwap.abort(tableFs,
                     if (samplesTier) tableRoot else chunkRoot, date)

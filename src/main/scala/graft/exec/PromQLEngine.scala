@@ -73,8 +73,8 @@ class PromQLEngine(
     // ErrAmendSample policy, storage/Ingest.dedup) cannot see prior
     // batches, so the raw table keeps both rows, while chunk
     // compaction / heal collapse them (smallest value wins, stale
-    // beats plain — ChunkStore.compact). The reference rejects such
-    // amends at append time via its head lookup; replicating that
+    // beats plain — ChunkStore.stageCompaction). The reference rejects
+    // such amends at append time via its head lookup; replicating that
     // here would cost a per-write history anti-join over the touched
     // partitions. Clients honoring remote-write's no-amend contract
     // never diverge.

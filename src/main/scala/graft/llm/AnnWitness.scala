@@ -30,13 +30,11 @@ import org.apache.spark.sql.functions._
   * full distributed path of both the approximate operator and its
   * baseline, then reduce to one row the driver can hash.
   *
-  * ID contract (r17, advice): both witnesses assume NON-NULL ids
-  * (`qid`/`neighbor_id`, `ia`/`ib`). The r16 groupBy forms treat NULL
-  * keys as equal, where the former join forms never matched them — a
-  * null-id approx row would count as a hit instead of a false
-  * positive. Every in-repo caller keys on `vec_id` (non-null by the
-  * embeddings fixture/store schema); callers with nullable ids must
-  * filter or tag them before witnessing.
+  * Null ids: the r16 groupBy forms put NULL keys in one group, where
+  * the former join forms never matched them. A key group with a null
+  * id (`qid`/`neighbor_id`, `ia`/`ib`) therefore never counts as a
+  * hit, and a null-id approximate pair counts as a false positive —
+  * the join forms' semantics, pinned by `LlmOpsSpec`.
   */
 object AnnWitness {
 
@@ -72,13 +70,16 @@ object AnnWitness {
         min(when(col("_a") === 1, col("c"))).as("minA"),
         max(when(col("_e") === 1, col("c"))).as("maxE"),
         min(when(col("_e") === 1, col("c"))).as("minE"))
+      .withColumn("keyed",
+        col("qid").isNotNull && col("neighbor_id").isNotNull)
       .agg(
         coalesce(countDistinct(when(col("ca") > 0, col("qid"))), lit(0L))
           .as("n_queries"),
         coalesce(sum(col("ca")), lit(0L)).as("ann_rows"),
         coalesce(sum(col("ce")), lit(0L)).as("exact_rows"),
-        coalesce(sum(col("ca") * col("ce")), lit(0L)).as("hits"),
-        coalesce(max(when(col("ca") > 0 && col("ce") > 0,
+        coalesce(sum(when(col("keyed"), col("ca") * col("ce"))), lit(0L))
+          .as("hits"),
+        coalesce(max(when(col("keyed") && col("ca") > 0 && col("ce") > 0,
           greatest(col("maxA") - col("minE"), col("maxE") - col("minA")))),
           lit(0.0)).as("max_err"))
       .select(col("n_queries"), col("ann_rows"), col("exact_rows"),
@@ -112,34 +113,15 @@ object AnnWitness {
     a.unionByName(e)
       .groupBy(col("ia"), col("ib"))
       .agg(sum(col("_a")).as("ca"), sum(col("_e")).as("ce"))
+      .withColumn("keyed", col("ia").isNotNull && col("ib").isNotNull)
       .agg(
         coalesce(sum(col("ce")), lit(0L)).as("exact_pairs"),
-        coalesce(sum(when(col("ce") === 0, col("ca")).otherwise(0L)),
-          lit(0L)).as("false_pos"),
-        coalesce(sum(col("ca") * col("ce")), lit(0L)).as("hits"))
+        coalesce(sum(when(col("ce") === 0 || !col("keyed"), col("ca"))
+          .otherwise(0L)), lit(0L)).as("false_pos"),
+        coalesce(sum(when(col("keyed"), col("ca") * col("ce"))), lit(0L))
+          .as("hits"))
       .select(col("exact_pairs"), col("false_pos"),
         (col("hits").cast("double") / col("exact_pairs") >= minRecall)
           .cast("long").as("recall_ok"))
-  }
-
-  /** Raw (unthresholded) stats for threshold tuning — not a contract
-    * surface. */
-  def rawTopkStats(ann: DataFrame, exact: DataFrame): String = {
-    val a = ann.select(col("qid"), col("neighbor_id"),
-      col("cos").cast("double").as("acos"))
-    val e = exact.select(col("qid"), col("neighbor_id"),
-      col("cos").cast("double").as("ecos"))
-    val hits = a.join(e, Seq("qid", "neighbor_id")).count()
-    val (na, ne) = (a.count(), e.count())
-    s"ann_rows=$na exact_rows=$ne hits=$hits recall=${hits.toDouble / ne}"
-  }
-
-  def rawPairStats(approx: DataFrame, exact: DataFrame): String = {
-    val a = approx.select(col("ia"), col("ib"))
-    val e = exact.select(col("ia"), col("ib"))
-    val fp = a.join(e, Seq("ia", "ib"), "left_anti").count()
-    val hits = a.join(e, Seq("ia", "ib")).count()
-    val (na, ne) = (a.count(), e.count())
-    s"approx=$na exact=$ne hits=$hits fp=$fp recall=${hits.toDouble / ne}"
   }
 }

@@ -80,8 +80,9 @@ final class CorpusStore private (
   /** Rewrite the corpus table (bounding the file fragmentation a
     * daily append cadence accumulates) and refresh the index tier.
     * The rows are materialized BEFORE the overwrite so the job never
-    * reads files it is deleting — the [[graft.storage.Ingest.compact]]
-    * single-writer contract. */
+    * reads files it is deleting — a single-writer contract (the
+    * samples table stages its rewrite instead, see
+    * [[graft.storage.Ingest.compactStaged]]). */
   def compact(): Unit = {
     val snap = docs.localCheckpoint(true)
     try {

@@ -1,5 +1,7 @@
 package graft.llm
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 
 /** Bounded access-order LRU for plan-keyed, Spark-CACHED frames —
@@ -26,7 +28,7 @@ private[graft] object PlanCache {
     * teardown race into a caller's cache insert). */
   private def safeUnpersist(v: DataFrame): Unit =
     if (!v.sparkSession.sparkContext.isStopped)
-      try v.unpersist(false) catch { case _: Throwable => () }
+      try v.unpersist(false) catch { case NonFatal(_) => () }
 
   def bounded[K](max: Int): java.util.Map[K, DataFrame] =
     java.util.Collections.synchronizedMap(

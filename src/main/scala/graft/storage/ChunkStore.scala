@@ -173,8 +173,8 @@ object ChunkStore {
     * batch-id commit markers as [[Ingest.appendOnce]] (a parquet
     * append of chunk rows is no more idempotent than one of sample
     * rows). Per-batch chunks are SHORT by construction; run
-    * [[compact]] behind the ingest watermark to restore full chunks,
-    * exactly like the reference's background compactor. */
+    * [[compactStaged]] behind the ingest watermark to restore full
+    * chunks, exactly like the reference's background compactor. */
   def stream(edge: Dataset[Ingest.WriteSample], path: String,
       checkpoint: String,
       maxPerChunk: Int = DefaultMaxPerChunk): StreamingQuery =
@@ -190,24 +190,20 @@ object ChunkStore {
       }
       .start()
 
-  /** Compact one `date` partition: every append cuts its own chunks,
-    * so a day receiving many write batches accumulates short chunks
-    * per series (an interleaved append can't extend a sealed blob —
-    * the same reason the reference rewrites whole blocks when
-    * compacting, `tsdb/compact.go`). Decode the partition, re-encode
-    * through the standard write pass (full chunks again), and swap it
-    * in via dynamic partition overwrite. The decoded rows are
-    * materialized first so the job never reads files it is deleting —
-    * the same single-writer contract as [[Ingest.compact]]. */
   /** Collapse cross-batch duplicate (sig, t) rows to the encoder's
     * strictly-increasing contract: smallest value wins, a stale marker
     * beats a plain value at one timestamp (the [[Ingest.dedup]]
-    * non-strict resolution). Shared by [[compact]] and the crash-
-    * rebuild path in `HttpApi.forTable` — a sample-volume aggregate,
-    * so it MUST stay a hash aggregate: `graft.exec.FirstLabels.first`
-    * keeps the map-typed label column out of the aggregation buffer
-    * (builtin `first(map)` demotes the whole thing to SortAggregate —
-    * the r11/r12 lesson, plan-pinned by `ChunkStoreSpec`). */
+    * non-strict resolution). Per-batch dedup cannot see across
+    * appends, so an at-least-once client re-sending a sample in a
+    * later batch leaves two rows at one (sig, t); without the collapse
+    * the re-encode would break the encoder's contract and the
+    * compaction would fail forever. Shared by [[stageCompaction]] and
+    * the crash-rebuild path in `HttpApi.forTable` — a sample-volume
+    * aggregate, so it MUST stay a hash aggregate:
+    * `graft.exec.FirstLabels.first` keeps the map-typed label column
+    * out of the aggregation buffer (builtin `first(map)` demotes the
+    * whole thing to SortAggregate — the r11/r12 lesson, plan-pinned
+    * by `ChunkStoreSpec`). */
   private[graft] def collapseDupSamples(decodedFrame: DataFrame): DataFrame =
     decodedFrame
       .groupBy(col("sig"), col("t"))
@@ -217,41 +213,15 @@ object ChunkStore {
         map_from_entries(array_sort(map_entries(col("_l0")))))
       .select(col("sig"), col("labels"), col("t"), col("v"), col("stale"))
 
-  def compact(spark: SparkSession, path: String, date: String,
-      maxPerChunk: Int = DefaultMaxPerChunk,
-      buckets: Int = Ingest.SeriesBuckets): Unit = {
-    // Collapse duplicate (series, t) samples across append batches:
-    // [[stream]] dedups only WITHIN a batch, so an at-least-once client
-    // re-sending a sample in two batches (distinct batch ids — the
-    // _commits markers can't catch it) leaves the day with two rows at
-    // one (sig, t). Without this, the re-encode pass would violate the
-    // encoder's strictly-increasing-timestamp contract and the
-    // compaction would fail forever. Resolution mirrors
-    // [[Ingest.dedup]] non-strict: smallest value wins, a stale marker
-    // wins over a plain value at the same timestamp.
-    val day = collapseDupSamples(decoded(readChunks(spark, path)
-      .filter(col("date") === date)))
-      .localCheckpoint(true)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try write(day, path, maxPerChunk, buckets, overwrite = true)
-    finally {
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      // free the checkpoint blocks now, not at GC time
-      day.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-    }
-  }
-
-  /** [[compact]] with the serve-through-rewrite commit discipline of
+  /** Compact one `date` partition: every append cuts its own chunks,
+    * so a day receiving many write batches accumulates short chunks
+    * per series (an interleaved append can't extend a sealed blob —
+    * the same reason the reference rewrites whole blocks when
+    * compacting, `tsdb/compact.go`). Decodes the partition, collapses
+    * cross-batch duplicates ([[collapseDupSamples]]) and re-encodes
+    * through the standard write pass (full chunks again).
+    *
+    * Commits with the serve-through-rewrite discipline of
     * [[Ingest.compactSeriesIndex]] (r15), upgraded in r16 to
     * [[StagedSwap]]'s marker-ordered FILE-level snapshot protocol: the
     * re-encode — minutes of work on a hot date, geometrically

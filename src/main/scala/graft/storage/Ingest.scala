@@ -303,9 +303,8 @@ object Ingest {
 
   /** Run `body` with dynamic partition-overwrite mode, restoring the
     * prior session setting afterwards — the one save/set/restore
-    * shared by every partition-rewrite path ([[compact]],
-    * [[compactBucketedStore]], [[refreshFoldPartials]]); three
-    * hand-maintained copies were drifting apart. */
+    * shared by the in-place partition-rewrite paths
+    * ([[compactBucketedStore]], [[refreshFoldPartials]]). */
   private def withDynamicPartitionOverwrite(spark: SparkSession)(
       body: => Unit): Unit = {
     val key = "spark.sql.sources.partitionOverwriteMode"
@@ -374,44 +373,9 @@ object Ingest {
     * batches accumulates thousands of small files (the TSDB-compaction
     * problem in parquet form — degraded scan parallelism and row-group
     * fragmentation). Rewrites the partition back to ≤ SeriesBuckets
-    * series-bucketed files via dynamic partition overwrite; query
-    * results are unchanged.
+    * series-bucketed files; query results are unchanged.
     *
-    * The partition is materialized (checkpoint) BEFORE the overwrite so
-    * the job never reads files it is deleting. A production deployment
-    * on object storage would stage to a temp prefix and swap — the
-    * single-writer semantics here match the reference's background
-    * compactor, which also assumes no concurrent writer per block. */
-  def compact(spark: SparkSession, path: String, date: String): Unit = {
-    val raw = spark.read.parquet(path).filter(col("date") === date)
-    // preserve the stored sig across the rewrite (a mixed layout would
-    // surface nulls through readTable's sig projection); pre-sig
-    // layouts compact as they were written
-    val hasSig = raw.columns.contains("sig")
-    val sigCol =
-      if (hasSig) col("sig") else Samples.sigExpr(col("labels"))
-    val cols = (if (hasSig) Seq(col("sig")) else Nil) ++
-      Seq(col("labels"), col("t"), col("v"), col("stale"))
-    val part = raw
-      .select(cols: _*)
-      .repartition(pmod(sigCol, lit(SeriesBuckets)))
-      // TIME-major order inside each rewritten file: row-group min/max
-      // t stats must stay tight or every lookback-window scan reads
-      // the whole day (the r15 soak measured exactly that — a
-      // compacted-without-sort day made 5m-lookback queries scan all
-      // 150M accumulated rows: reader qps 4 -> 0.3, and their task
-      // load dragged writes 20 -> 55 s). Appends get this locality
-      // for free (each file covers its batch's window); compaction
-      // must preserve it.
-      .sortWithinPartitions(col("t"), sigCol)
-      .localCheckpoint(true)
-    withDynamicPartitionOverwrite(spark) {
-      part.withColumn("date", lit(date))
-        .write.mode("overwrite").partitionBy("date").parquet(path)
-    }
-  }
-
-  /** [[compact]] with the serve-through-rewrite commit discipline of
+    * Commits with the serve-through-rewrite discipline of
     * [[compactSeriesIndex]] (r15), upgraded in r16 to the FILE-level
     * snapshot protocol of [[StagedSwap]]: the rewrite reads an
     * explicit snapshot of the partition's files into an
@@ -461,9 +425,14 @@ object Ingest {
       Seq(col("labels"), col("t"), col("v"), col("stale"))
     raw.select(cols: _*)
       .repartition(pmod(sigCol, lit(SeriesBuckets)))
-      // time-major within each file — see [[compact]]: without tight
-      // row-group t stats a compacted day turns every lookback window
-      // into a full-day scan (measured by the r15 serving soak)
+      // TIME-major order inside each rewritten file: row-group min/max
+      // t stats must stay tight or every lookback-window scan reads
+      // the whole day (the r15 soak measured exactly that — a
+      // compacted-without-sort day made 5m-lookback queries scan all
+      // 150M accumulated rows: reader qps 4 -> 0.3, and their task
+      // load dragged writes 20 -> 55 s). Appends get this locality
+      // for free (each file covers its batch's window); compaction
+      // must preserve it.
       .sortWithinPartitions(col("t"), sigCol)
       .withColumn("date", lit(date))
       .write.mode("overwrite").partitionBy("date").parquet(staging.toString)
@@ -536,15 +505,15 @@ object Ingest {
     spark.table(table)
       .select(col("sig"), col("labels"), col("t"), col("v"), col("stale"))
 
-  /** Compact one `date` partition of the bucketed store: like
-    * [[compact]], every append adds a file per (date, bucket), so a
-    * hot day fragments. `insertInto` routes the rewrite through the
-    * catalog table, so the writer re-applies the table's OWN bucket
-    * spec (datasource-table inserts bucket-hash their output files) —
-    * the scan's `HashPartitioning(sig, n)` contract survives
-    * compaction, it is not a path-based parquet write like [[compact]].
-    * Same single-writer assumption: partition materialized before the
-    * dynamic overwrite. */
+  /** Compact one `date` partition of the bucketed store: like the
+    * samples table ([[compactStaged]]), every append adds a file per
+    * (date, bucket), so a hot day fragments. `insertInto` routes the
+    * rewrite through the catalog table, so the writer re-applies the
+    * table's OWN bucket spec (datasource-table inserts bucket-hash
+    * their output files) — the scan's `HashPartitioning(sig, n)`
+    * contract survives compaction, it is not a path-based parquet
+    * write like [[stageCompaction]]. Single-writer assumption:
+    * partition materialized before the dynamic overwrite. */
   def compactBucketedStore(spark: SparkSession, table: String,
       date: String): Unit = {
     val cols = spark.table(table).columns
@@ -641,14 +610,15 @@ object Ingest {
     * from the committed listing and swapped in via dynamic partition
     * overwrite.
     *
-    * Concurrency caveat (same class as [[compact]]): the overwrite
-    * deletes the partition's previous files, so a query started
-    * BEFORE the refresh that reads the rung mid-rewrite can fail on a
-    * missing file and needs a retry against the swapped listing — the
-    * serving path bounds the window by swapping engines right after
-    * the refresh. A production deployment on object storage stages
-    * the partition to a temp prefix and commits with a rename, the
-    * same trade the reference's compactor makes per block. */
+    * Concurrency caveat (the in-place overwrite [[compactStaged]]
+    * avoids): the overwrite deletes the partition's previous files, so
+    * a query started BEFORE the refresh that reads the rung mid-rewrite
+    * can fail on a missing file and needs a retry against the swapped
+    * listing — the serving path bounds the window by swapping engines
+    * right after the refresh. A production deployment on object
+    * storage stages the partition to a temp prefix and commits with a
+    * rename, the same trade the reference's compactor makes per
+    * block. */
   def refreshFoldPartials(spark: SparkSession, tablePath: String,
       partialsPath: String, bucketMs: Long,
       dates: Option[Seq[String]] = None): Unit = {
@@ -859,11 +829,11 @@ object Ingest {
   /** Compact a series index: every [[appendSeriesIndex]] adds one
     * parquet file per batch that carried novel sigs, so a long-running
     * writer fragments the index into thousands of tiny files — the
-    * same operational hazard [[compact]] addresses for the samples
-    * table, on the dimension table the matcher path scans every query.
-    * Rewrites the index to ≤ [[SeriesBuckets]] sig-partitioned files;
-    * content is unchanged. Same single-writer assumption as
-    * [[compact]].
+    * same operational hazard [[compactStaged]] addresses for the
+    * samples table, on the dimension table the matcher path scans
+    * every query. Rewrites the index to ≤ [[SeriesBuckets]]
+    * sig-partitioned files; content is unchanged. Single writer
+    * assumed.
     *
     * Concurrency: the rewrite is STAGED — the compacted files are
     * written to a sibling temp prefix while the live index keeps

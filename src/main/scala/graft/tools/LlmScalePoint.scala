@@ -13,8 +13,7 @@ import graft.llm.{Dedup, Similarity, TextOps}
   * (SCALE.md §2/§3 scale-point paragraphs).
   *
   * Usage: runMain graft.tools.LlmScalePoint [--ops a,b] <dir> [dir2 ...]
-  * Cold run then median of three warm, per op, noop-sink like
-  * ProfileLlm.
+  * Cold run then median of three warm, per op, into a noop sink.
   *
   * `--ops` (r9, fresh-JVM protocol): restrict to the named ops so a
   * shell loop can run ONE JVM PER (op, scale) POINT. The r8 ×100 LSH

@@ -100,6 +100,28 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(full.contains("\"c5_semdedup_apply\":{\"warm\":1.220"))
   }
 
+  test("a row whose draw threw carries failed:true in the full json; " +
+      "the stdout line keeps its shape") {
+    val recs = Seq(
+      BenchFormat.Rec("d7_embed_lsh", 0.01, 0.01, Seq(0.01, 0.01, 0.01),
+        probeRatio = 1.02, retries = 0, failed = true),
+      BenchFormat.Rec("f1_rate", 0.9, 0.5, Seq(0.6, 0.5, 0.4),
+        probeRatio = 1.02, retries = 0))
+    val full = BenchFormat.fullJson(recs, 0.91, 2.0, 3.0, "0.1", 0.041)
+    assert(full.contains(
+      "\"d7_embed_lsh\":{\"warm\":0.010,\"cold\":0.010," +
+        "\"draws\":[0.010,0.010,0.010],\"probe_ratio\":1.02," +
+        "\"retries\":0,\"failed\":true}"))
+    assert(full.contains(
+      "\"f1_rate\":{\"warm\":0.500,\"cold\":0.900," +
+        "\"draws\":[0.600,0.500,0.400],\"probe_ratio\":1.02," +
+        "\"retries\":0}"), "a clean row must not carry the failed flag")
+    val line = BenchFormat.line(recs.map(r => (r.name, r.cold, r.warm)),
+      0.91, 2.0, 3.0, "0.1")
+    assert(!line.contains("failed"))
+    assert(line.startsWith("{\"metric\":\"total\",\"value\":0.51,"))
+  }
+
   test("calibration probe does fixed work in bounded time") {
     val t = Bench.probeOnce()
     assert(t > 0.0 && t < 2.0, s"probe took ${t}s — not a usable probe")

@@ -2078,4 +2078,30 @@ class LlmOpsSpec extends SparkTestBase {
     }
     assert(got.nonEmpty)
   }
+
+  test("AnnWitness: a null-id key group is never a hit; a null-id " +
+      "approx pair is a false positive") {
+    // one keyed match plus one null-id row present on BOTH sides: the
+    // groupBy collects the null rows into one group, which must not
+    // score as a hit (nor feed the cosine check) the way the former
+    // join forms never matched null keys
+    val ann = Seq((Some(1L), Some(2L), 0.9), (None, Some(3L), 0.8))
+      .toDF("qid", "neighbor_id", "cos")
+    val exact = Seq((Some(1L), Some(2L), 0.9), (None, Some(3L), 0.5))
+      .toDF("qid", "neighbor_id", "cos")
+    val t = AnnWitness.topkWitness(ann, exact, 0.75).head()
+    assert(t.getAs[Long]("n_queries") == 1L)
+    assert(t.getAs[Long]("ann_rows") == 2L)
+    assert(t.getAs[Long]("exact_rows") == 2L)
+    assert(t.getAs[Long]("recall_ok") == 0L, "null-id group counted as a hit")
+    assert(t.getAs[Long]("cos_exact_ok") == 1L,
+      "null-id group fed the cosine-exactness check")
+    val approx = Seq((Some(1L), Some(2L)), (None, Some(3L))).toDF("ia", "ib")
+    val pairs = Seq((Some(1L), Some(2L)), (None, Some(3L))).toDF("ia", "ib")
+    val p = AnnWitness.pairsWitness(approx, pairs, 0.75).head()
+    assert(p.getAs[Long]("exact_pairs") == 2L)
+    assert(p.getAs[Long]("false_pos") == 1L,
+      "null-id approx pair must count as a false positive")
+    assert(p.getAs[Long]("recall_ok") == 0L, "null-id pair counted as a hit")
+  }
 }

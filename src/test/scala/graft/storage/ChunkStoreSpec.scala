@@ -122,7 +122,7 @@ class ChunkStoreSpec extends SparkTestBase {
     ChunkStore.write(mk(1), dir)
     val before = asSet(ChunkStore.read(spark, dir))
     assert(ChunkStore.readChunks(spark, dir).count() == 6) // 2 × 720/240
-    ChunkStore.compact(spark, dir, "2024-01-01")
+    ChunkStore.compactStaged(spark, dir, "2024-01-01")
     // 1440 samples → 6 full chunks, but now each spans the MERGED
     // sample stream (interleaving gone, delta-of-delta regular again)
     val chunks = ChunkStore.readChunks(spark, dir)
@@ -284,7 +284,7 @@ class ChunkStoreSpec extends SparkTestBase {
       labels -> Seq((t0 + 60000L, 7.0), (t0 + 120000L, 3.0))), dir)
     // pre-compaction the day holds 4 rows (the dup twice)
     assert(ChunkStore.read(spark, dir).count() == 4)
-    ChunkStore.compact(spark, dir, "2024-01-01")
+    ChunkStore.compactStaged(spark, dir, "2024-01-01")
     val back = ChunkStore.read(spark, dir)
       .select(col("t"), col("v")).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
@@ -292,7 +292,7 @@ class ChunkStoreSpec extends SparkTestBase {
     // conflicting-value dups resolve like Ingest.dedup: smallest wins
     ChunkStore.write(samplesDF(
       labels -> Seq((t0 + 120000L, 2.0))), dir)
-    ChunkStore.compact(spark, dir, "2024-01-01")
+    ChunkStore.compactStaged(spark, dir, "2024-01-01")
     val vAt = ChunkStore.read(spark, dir).filter(col("t") === t0 + 120000L)
       .select(col("v")).collect().map(_.getDouble(0)).toSeq
     assert(vAt == Seq(2.0))

@@ -108,7 +108,7 @@ class IngestSpec extends SparkTestBase {
     val fragmented = files("1970-01-01")
     assert(fragmented >= 8,
       s"expected a fragmented partition, got $fragmented files")
-    Ingest.compact(spark, path, "1970-01-01")
+    Ingest.compactStaged(spark, path, "1970-01-01")
     val compacted = files("1970-01-01")
     assert(compacted < fragmented && compacted <= Ingest.SeriesBuckets,
       s"expected fewer, bucketed files; $fragmented -> $compacted")

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Generate a k-times scaled copy of the sf0.1 documents/embeddings
-tables for local scaling profiles (ProfileLlm).
+tables for local scaling profiles (LlmScalePoint, TierScaleBench).
 
 Scaling model: k INDEPENDENT shards of the same distribution — the way
 a real corpus grows — not k literal copies (which would multiply every
