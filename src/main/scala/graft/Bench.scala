@@ -54,11 +54,16 @@ object BenchFormat {
   /** One interleaved throughput window: the light-only and mixed
     * figures plus, for EACH half, the max bracketing-probe ratio that
     * accepted it and how many contended halves were discarded first —
-    * the storm evidence the serial section has carried since r5. */
+    * the storm evidence the serial section has carried since r5 — and
+    * how many light-thread and heavy-thread queries THREW in the two
+    * accepted halves (a heavy query that fails at once frees its
+    * slots, so the mixed figure would otherwise read as light-only
+    * throughput with nothing flagged). */
   final case class QpsWindow(light: Double, mixed: Double,
       lightRatio: Double, mixedRatio: Double,
       lightRetries: Int = 0, mixedRetries: Int = 0,
-      lightStormed: Boolean = false, mixedStormed: Boolean = false)
+      lightStormed: Boolean = false, mixedStormed: Boolean = false,
+      lightFailed: Long = 0, heavyFailed: Long = 0)
 
   /** Shortest-unique underscore-token prefix per query name:
     * `a1_sum` → `a1`, but `f1_rate`/`f1_delta` keep their second token
@@ -143,15 +148,18 @@ object BenchFormat {
     // adjudicate storm vs regression — now each window carries the
     // same contention evidence the serial batches have had since r5):
     // [light, mixed, light_ratio, mixed_ratio, light_retries,
-    //  mixed_retries, light_stormed, mixed_stormed] — the last two
-    // are 0/1 (r15): 1 marks a half whose redraws were exhausted with
-    // the probe still >1.5×, i.e. the figure shipped stormed
+    //  mixed_retries, light_stormed, mixed_stormed, light_failed,
+    //  heavy_failed] — the stormed pair is 0/1 (r15): 1 marks a half
+    // whose redraws were exhausted with the probe still >1.5×, i.e.
+    // the figure shipped stormed; the failed pair counts the light-
+    // and heavy-thread queries that threw in the accepted halves
     val wins = qpsWindows
       .map { w => "[" + r2(w.light) + "," + r2(w.mixed) + "," +
         r2(w.lightRatio) + "," + r2(w.mixedRatio) + "," +
         w.lightRetries + "," + w.mixedRetries + "," +
         (if (w.lightStormed) 1 else 0) + "," +
-        (if (w.mixedStormed) 1 else 0) + "]" }
+        (if (w.mixedStormed) 1 else 0) + "," +
+        w.lightFailed + "," + w.heavyFailed + "]" }
       .mkString("[", ",", "]")
     // top-level mirror of the per-window stormed flags (r16): true iff
     // any accepted half exhausted its redraws with the probe >1.5×
@@ -291,9 +299,12 @@ object Bench {
     // bounded under mixed load (the reference's 20-concurrent
     // envelope), rather than letting one expensive query starve the
     // instant path.
-    def runQps(heavy: Int, windowSec: Long = 5): Double = {
+    // Returns (completions/s, light failures, heavy failures).
+    def runQps(heavy: Int, windowSec: Long = 5): (Double, Long, Long) = {
       val stopAt = System.nanoTime() + windowSec * 1000 * 1000 * 1000
       val done = new java.util.concurrent.atomic.AtomicLong(0)
+      val lightFailed = new java.util.concurrent.atomic.AtomicLong(0)
+      val heavyFailed = new java.util.concurrent.atomic.AtomicLong(0)
       val lightThreads = (0 until 8).map { k =>
         new Thread(() => {
           spark.sparkContext.setLocalProperty(
@@ -302,10 +313,11 @@ object Bench {
           while (System.nanoTime() < stopAt) {
             val name = lightNames(i % lightNames.length)
             // only a SUCCESSFUL count() is a completion — a failing
-            // query must not inflate the reported throughput
+            // query must not inflate the reported throughput, and is
+            // counted so the window can be read as failed
             try { SparkEntry.queries(name)(spark, sfDir).count()
                   done.incrementAndGet() }
-            catch { case _: Throwable => () }
+            catch { case NonFatal(_) => lightFailed.incrementAndGet() }
             i += 1
           }
         })
@@ -316,14 +328,15 @@ object Bench {
             "spark.scheduler.pool", s"bench-heavy-$h")
           while (System.nanoTime() < stopAt) {
             try SparkEntry.queries("p7_fine_grid")(spark, sfDir).count()
-            catch { case _: Throwable => () }
+            catch { case NonFatal(_) => heavyFailed.incrementAndGet() }
           }
         })
       }
       val t0 = System.nanoTime()
       (lightThreads ++ heavyThreads).foreach(_.start())
       (lightThreads ++ heavyThreads).foreach(_.join())
-      done.get().toDouble / ((System.nanoTime() - t0) / 1e9)
+      (done.get().toDouble / ((System.nanoTime() - t0) / 1e9),
+        lightFailed.get(), heavyFailed.get())
     }
     // untimed warmup: the FIRST concurrent round pays scheduler/JIT
     // lazy-init that serial runs never touch (measured: a cold first
@@ -352,7 +365,7 @@ object Bench {
     // draws of 61–64) could not be adjudicated storm-vs-regression
     // from the artifact; now they can (two clean HEAD re-runs showed
     // no decay: stable 55–64 q/s windows, see SCALE.md r14).
-    def qpsHalf(heavy: Int): (Double, Double, Int, Boolean) = {
+    def qpsHalf(heavy: Int): ((Double, Long, Long), Double, Int, Boolean) = {
       var pre = probeOnce() / probeBaseline
       var q = runQps(heavy)
       var post = probeOnce() / probeBaseline
@@ -370,9 +383,10 @@ object Bench {
       (q, ratio, retries, ratio > 1.5)
     }
     val windows = Seq.fill(3) {
-      val (l, lr, lt, ls) = qpsHalf(0)
-      val (x, xr, xt, xs) = qpsHalf(2)
-      BenchFormat.QpsWindow(l, x, lr, xr, lt, xt, ls, xs)
+      val ((l, lf, _), lr, lt, ls) = qpsHalf(0)
+      val ((x, xlf, xhf), xr, xt, xs) = qpsHalf(2)
+      BenchFormat.QpsWindow(l, x, lr, xr, lt, xt, ls, xs,
+        lightFailed = lf + xlf, heavyFailed = xhf)
     }
     val qps = windows.map(_.light).max
     val mixedQps = windows.map(_.mixed).max

@@ -164,12 +164,11 @@ object SparkEntry {
       .withColumn("sig", Samples.sigExpr(col("labels")))
   }
 
-  /** Hourly per-series partials parquet — the batch twin of
-    * [[graft.storage.Ingest.streamBucketed]]'s layout (count/sum/min/
-    * max per (series, step-aligned bucket)), built ONCE per fixture dir
-    * and memoized: the p8 read path models a table a production ingest
-    * materializes continuously, so its build cost is index-build cost,
-    * not query cost. */
+  /** Hourly per-series partials parquet for p8 — its own layout
+    * (count/sum/min/max per (series, step-aligned bucket)), built ONCE
+    * per fixture dir and memoized: the p8 read path models a table an
+    * ingest materializes ahead of queries, so its build cost is
+    * index-build cost, not query cost. */
   private val partialsCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def hourlyPartialsPath(spark: SparkSession, dir: String): String =
@@ -551,8 +550,8 @@ object SparkEntry {
       Seq("event_type"), start = START + 9 * DAY, end = START + 10 * DAY,
       step = 300000L),
     // P8: range aggregation served from MATERIALIZED step-aligned
-    // partials (the Ingest.streamBucketed read path, SCALE.md §6):
-    // hourly per-series count/sum partials are written to parquet once
+    // partials (SCALE.md §6): p8's own hourly table of per-series
+    // count/sum partials (hourlyPartialsPath) is written to parquet once
     // per fixture — the ingest-time materialization — and the query
     // touches ONLY the partials table (≤ 720 rows/series/month instead
     // of the raw sample volume). Day-aligned windows decompose exactly
@@ -586,7 +585,7 @@ object SparkEntry {
     "p9_engine_partials" -> ((spark, dir) => {
       val tbl = spark.read.parquet(foldPartialsPath(spark, dir))
       val eng = new PromQLEngine(spark, Samples.fromEventsDir(spark, dir),
-        foldPartials = Some((tbl, 3600000L)))
+        partialsLadder = Seq((tbl, 3600000L)))
       eng.rangeQuery("count_over_time(events_value[1d])", START, END, DAY / 2)
         .select(col("labels")("event_type").as("event_type"),
           col("labels")("user_id").as("user_id"), col("t"), col("v"))
@@ -600,8 +599,7 @@ object SparkEntry {
       val hourly = spark.read.parquet(foldPartialsPath(spark, dir))
       val daily = spark.read.parquet(foldPartialsPath(spark, dir, DAY))
       val eng = new PromQLEngine(spark, Samples.fromEventsDir(spark, dir),
-        foldPartials = Some((hourly, 3600000L)),
-        partialsLadder = Seq((daily, DAY)))
+        partialsLadder = Seq((hourly, 3600000L), (daily, DAY)))
       eng.rangeQuery("sum_over_time(events_value[2d])", START, END, DAY)
         .select(col("labels")("event_type").as("event_type"),
           col("labels")("user_id").as("user_id"), col("t"),

@@ -1177,7 +1177,7 @@ object HttpApi {
       rules: Option[graft.streaming.RecordingRules.Group] = None,
       rollups: Seq[Long] = Nil,
       indexCompactThreshold: Int = 4 * graft.storage.Ingest.SeriesBuckets,
-      refreshEveryWrites: Int = 1, refreshMaxLagMs: Long = 0L,
+      refreshEveryWrites: Int = 1,
       chunks: Boolean = false,
       chunkCompactThreshold: Int = 4 * graft.storage.Ingest.SeriesBuckets,
       sampleCompactThreshold: Int = 8 * graft.storage.Ingest.SeriesBuckets)
@@ -1328,7 +1328,7 @@ object HttpApi {
     //  - pendingDates: dates whose rung partitions lag the table
     //    because their refresh was deferred (refreshEveryWrites > 1);
     //    nonempty ⇔ the marker is absent FOR A KNOWN, HEALTHY reason
-    //  - writesSinceRefresh / lastRefreshNs: the two debounce triggers
+    //  - writesSinceRefresh: the debounce trigger
     //  - failedDirty: a sink invocation threw mid-write in this
     //    process (handler() answers 500 and keeps serving), so the
     //    failed batch's rows are in the table but its novel sigs and
@@ -1386,7 +1386,6 @@ object HttpApi {
     // bounded by the debounce window, freed at every flush/heal.
     var pendingBatches = Vector.empty[DataFrame]
     var writesSinceRefresh = 0
-    var lastRefreshNs = System.nanoTime()
     var failedDirty = false
     def refreshRungs(dates: Option[Seq[String]]): Unit = {
       rollups.foreach { b =>
@@ -1397,7 +1396,6 @@ object HttpApi {
       pendingDates = Set.empty
       pendingBatches = Vector.empty
       writesSinceRefresh = 0
-      lastRefreshNs = System.nanoTime()
     }
     // r14: the non-debounced common path merges just THIS write's
     // partials into the touched rungs (associative, O(batch +
@@ -1441,7 +1439,6 @@ object HttpApi {
       pendingDates = Set.empty
       pendingBatches = Vector.empty
       writesSinceRefresh = 0
-      lastRefreshNs = System.nanoTime()
     }
     // One background-compactor check for (tier, date): list THAT
     // partition, apply the tier's gate, and if it fires run the
@@ -1612,7 +1609,6 @@ object HttpApi {
           pendingDates = Set.empty
           pendingBatches = Vector.empty
           writesSinceRefresh = 0
-          lastRefreshNs = System.nanoTime()
         } else {
           // invalidate the index listing BEFORE the upsert's left_anti
           // probe: a stale cached listing would miss recently appended
@@ -1631,16 +1627,14 @@ object HttpApi {
             // rewrites one partials partition. With
             // refreshEveryWrites > 1 the refresh is DEBOUNCED: the
             // touched dates accumulate and the rungs are rewritten
-            // once per k writes (or once refreshMaxLagMs has passed),
-            // amortizing the ~per-write rewrite cost across a burst;
-            // until then the marker stays deleted and the swapped
+            // once per k writes, amortizing the ~per-write rewrite
+            // cost across a burst; until then the marker stays
+            // deleted and the swapped
             // engine skips the stale rungs (raw-path correctness)
             pendingDates ++= touched
             pendingBatches :+= df
             writesSinceRefresh += 1
-            val lagged = refreshMaxLagMs > 0 &&
-              (System.nanoTime() - lastRefreshNs) / 1000000L >= refreshMaxLagMs
-            if (writesSinceRefresh >= refreshEveryWrites || lagged) {
+            if (writesSinceRefresh >= refreshEveryWrites) {
               // r15: the flush is the associative pending-union merge
               // whenever the buffer provably covers every deferred
               // write (they are maintained together under writeLock —

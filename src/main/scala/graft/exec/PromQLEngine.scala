@@ -32,18 +32,19 @@ class PromQLEngine(
     samples: DataFrame,
     lookbackMs: Long = PromQLEngine.DefaultLookbackMs,
     maxPointsPerSeries: Int = 11000,
-    // (table, bucketMs) from graft.storage.Ingest.foldPartials over the
-    // SAME samples: aligned *_over_time queries route to it and never
-    // touch the raw sample volume (see materializedStepPartials)
-    foldPartials: Option[(DataFrame, Long)] = None,
-    // additional fold-partials tables at OTHER bucket sizes — the
-    // downsampling resolution ladder (e.g. 1m + 1h + 1d). For each
-    // aligned query the engine serves from the COARSEST table whose
-    // bucket divides the step: coarser buckets mean fewer rows, and
-    // every rung reconstructs exactly (the partials are lossless
-    // associative shapes, not approximations), so resolution selection
-    // never changes results — only scan volume.
-    partialsLadder: Seq[(DataFrame, Long)] = Nil,
+    // (table, bucketMs) rungs from graft.storage.Ingest.foldPartials
+    // over the SAME samples — the downsampling resolution ladder (one
+    // rung or several, e.g. 1m + 1h + 1d). Aligned instant selectors,
+    // folds, the rate family and irate/idelta read the COARSEST rung
+    // whose bucket divides the step instead of the raw sample volume;
+    // the rung is chosen once per selector, in vectorSelect and
+    // evalRangeFunc. Coarser buckets mean fewer rows, and every rung
+    // reconstructs exactly (the partials are lossless associative
+    // shapes, not approximations), so resolution selection never
+    // changes results — only scan volume. `private[graft]` so
+    // deployment specs can assert a swapped-in engine actually carries
+    // its tiers (HttpApi.forTable).
+    private[graft] val partialsLadder: Seq[(DataFrame, Long)] = Nil,
     // (sig, labels) one row per distinct series, from
     // graft.storage.Ingest.seriesIndex over the SAME samples: matchers
     // then evaluate on the series DIMENSION and the sample scan becomes
@@ -451,16 +452,15 @@ class PromQLEngine(
     * `engine.go:1469-1471`). A staleness marker as the NEWEST lookback
     * point excludes the series — older points are not resurrected
     * (engine.go:789-798 takes the latest point, then drops it if stale). */
-  private def vectorSelect(vs: VectorSelector, tr: EvalRange): DataFrame =
-    if ((lookbackMs >= 2 * tr.stepMs && lookbackMs % tr.stepMs == 0 &&
-      lookbackMs / tr.stepMs <= 512 && tr.numSteps >= 8) ||
-      // materialized route (a rung's bucket divides the step, aligned
-      // grid): beneficial at any m. Routing checks ONLY the cheap
-      // alignment predicate here — the partials plan itself is built
-      // once, inside bucketedSelect
-      (lookbackMs % tr.stepMs == 0 && lookbackMs / tr.stepMs <= 512 &&
-        materializedSelectAligned(vs, tr)))
-      bucketedSelect(vs, tr)
+  private def vectorSelect(vs: VectorSelector, tr: EvalRange): DataFrame = {
+    val m = lookbackMs / tr.stepMs
+    val aligned = lookbackMs % tr.stepMs == 0 && m <= 512
+    // a rung route is beneficial at any m; query-time bucketing only
+    // on a real range query with fan-out to save
+    val rung =
+      if (aligned) bestPartials(tr.stepMs, tr.startMs - vs.offsetMs) else None
+    if (aligned && (rung.nonEmpty || (m >= 2 && tr.numSteps >= 8)))
+      bucketedSelect(vs, tr, rung)
     else
       // the former max_by(struct(st, v, stale), st) is decomposed into
       // per-field max_bys on the SAME key: sample timestamps are unique
@@ -477,30 +477,7 @@ class PromQLEngine(
             max_by(col("_stale"), col(ST)).as("_wstale"))
           .filter(!col("_wstale")))
         .select(col(SIG), col(L), col(T), col("_wst").as(ST), col("_wv").as(V))
-
-  /** Bucketed instant selector for fine step grids: the general path
-    * explodes every sample onto lookback/step covering steps (20× at a
-    * 5 m lookback and 15 s steps — THE production monitoring shape).
-    * Here samples reduce to one latest-point partial per (series,
-    * bucket) first; only those fan out, and the per-step winner is the
-    * max-timestamp partial among covering buckets plus the at-start
-    * point of the step's own bucket. Staleness travels with the
-    * partial: the winner being a marker hides the series, exactly like
-    * the general path. */
-  /** Step-bucket instant-select partials from the MATERIALIZED table
-    * (a rung's bucket divides the step, aligned grid — sub-bucket
-    * rows keep their own latest points, the per-step winner is the
-    * max-rel candidate): the stored last/at-start points CARRY the
-    * stale flag, so a marker as a bucket's newest point hides the
-    * series exactly like the raw path. Only sub-buckets ON a step
-    * boundary contribute their at-start point. Marker-only buckets
-    * are present by construction (the select columns aggregate over
-    * all rows — see [[graft.storage.Ingest.foldPartials]]). */
-  /** Every bound partials table — the downsampling resolution ladder.
-    * `private[graft]` so deployment specs can assert a swapped-in
-    * engine actually carries its tiers (HttpApi.forTable). */
-  private[graft] val allPartials: Seq[(DataFrame, Long)] =
-    foldPartials.toSeq ++ partialsLadder
+  }
 
   /** Spec surface: whether this engine resolves matchers on a series
     * index (the postings path) rather than per-sample filters. */
@@ -509,83 +486,104 @@ class PromQLEngine(
   /** Spec surface: whether selector scans serve from the chunk tier. */
   private[graft] def hasChunkTier: Boolean = chunkTier.isDefined
 
-  /** The COARSEST bound partials table servable for a grid: bucket
-    * divides the step and the (offset-shifted) start sits on a bucket
-    * boundary. Coarser buckets hold fewer rows, and every rung is an
-    * exact associative shape, so resolution selection changes scan
-    * volume only, never results. `needTop2` additionally requires the
-    * table's instant-value (lt2/lv2) columns. */
-  private def bestPartials(stepMs: Long, anchor: Long,
-      needTop2: Boolean = false): Option[(DataFrame, Long)] =
-    allPartials
-      .filter { case (tbl, bkt) =>
-        stepMs % bkt == 0 && Math.floorMod(anchor, bkt) == 0 &&
-          (!needTop2 || tbl.columns.contains("lt2")) }
+  /** The COARSEST bound rung servable for a grid: bucket divides the
+    * step and the (offset-shifted) start sits on a bucket boundary.
+    * Coarser buckets hold fewer rows, and every rung is an exact
+    * associative shape, so resolution selection changes scan volume
+    * only, never results. Called once per selector, by [[vectorSelect]]
+    * and [[evalRangeFunc]]; the bucketed evaluators take their choice. */
+  private def bestPartials(stepMs: Long,
+      anchor: Long): Option[(DataFrame, Long)] =
+    partialsLadder
+      .filter { case (_, bkt) =>
+        stepMs % bkt == 0 && Math.floorMod(anchor, bkt) == 0 }
       .sortBy(-_._2).headOption
 
-  /** Cheap routing predicate for [[materializedSelectPartials]]: true
-    * iff a partials table exists whose bucket divides the step on an
-    * aligned grid. Keeping this separate lets [[vectorSelect]] route
-    * without building (and discarding) the partials plan it would
-    * build again inside [[bucketedSelect]]. */
-  private def materializedSelectAligned(vs: VectorSelector,
-      tr: EvalRange): Boolean =
-    bestPartials(tr.stepMs, tr.startMs - vs.offsetMs).nonEmpty
-
-  private def materializedSelectPartials(vs: VectorSelector,
-      tr: EvalRange): Option[DataFrame] = {
-    val o = vs.offsetMs
-    val anchor = tr.startMs - o
-    bestPartials(tr.stepMs, anchor).map { case (tbl, bkt) =>
-      countRoute("select_partials", bkt)
-      val ms = allMatchers(vs)
-      val rel = col("bucket_start") - anchor
-      val onStep = pmod(rel, lit(tr.stepMs)) === 0
-      tbl
-        .filter(ms.map(matcherCond).reduce(_ && _))
-        .filter(col("bucket_start") >= anchor - lookbackMs &&
-          col("bucket_start") <= tr.endMs - o)
-        .select(col("sig").as(SIG),
-          ((rel - pmod(rel, lit(tr.stepMs))) / lit(tr.stepMs.toDouble))
-            .cast("long").as("_b"),
-          (col("lta") - anchor).as("_lprel"), col("lva").as("_lpv"),
-          col("lsa").as("_lpstale"),
-          when(onStep, col("v0a")).as("_spv"),
-          when(onStep, col("s0a")).as("_spstale"),
-          when(onStep, col("has0a")).otherwise(0).as("has0"))
-    }
+  /** The rung rows a bucketed evaluator reads instead of raw samples:
+    * matchers evaluated on the rung's own labels, buckets inside
+    * `[anchor − w, end − o]` (the grid is aligned and w a multiple of
+    * the step, so the closed window's low edge is a bucket boundary),
+    * plus the [[gridCols]] of the bucket start (q = step/bucket
+    * sub-bucket rows share one `_b`; only sub-buckets with `_s0`
+    * contribute their at-start point, the others' start points are
+    * interior samples of the step window, already inside their full
+    * partial). Input volume: series × buckets, never samples. */
+  private def rungSlice(tbl: DataFrame, vs: VectorSelector, w: Long,
+      tr: EvalRange): DataFrame = {
+    val anchor = tr.startMs - vs.offsetMs
+    tbl
+      .filter(allMatchers(vs).map(matcherCond).reduce(_ && _))
+      .filter(col("bucket_start") >= anchor - w &&
+        col("bucket_start") <= tr.endMs - vs.offsetMs)
+      .select(col("*") +:
+        gridCols(col("bucket_start"), anchor, tr.stepMs): _*)
   }
 
-  private def bucketedSelect(vs: VectorSelector, tr: EvalRange): DataFrame = {
+  /** The covering-step fan-out every bucketed evaluator shares. Window
+    * semantics are CLOSED [t-w, t], which half-open buckets cannot
+    * express alone: step k combines the FULL partials of buckets
+    * k-m … k-1 plus bucket k's AT-START partial (its samples exactly
+    * on the step boundary). So each (series, step-bucket `_b`) row
+    * sends `full` to steps `_b+1 … _b+m` and, when `hasStart`, `start`
+    * to step `_b` — both clipped to the grid. Output: (sig, _c) with
+    * `_c = struct(k = step index, p = partial of type pType)`. */
+  private def fanOut(partials: DataFrame, m: Int, tr: EvalRange,
+      pType: String, full: Column, hasStart: Column,
+      start: Column): DataFrame = {
+    val contribType = s"array<struct<k:bigint,p:$pType>>"
+    val lo = greatest(col("_b") + 1, lit(0L))
+    val hi = least(col("_b") + m, lit(tr.numSteps - 1))
+    val fullSeq = when(lo <= hi, sequence(lo, hi, lit(1L)))
+      .otherwise(array().cast("array<bigint>"))
+    val fullContrib = transform(fullSeq, k => struct(k.as("k"), full.as("p")))
+    val startContrib =
+      when(col("_b").between(0, tr.numSteps - 1) && hasStart,
+        array(struct(col("_b").as("k"), start.as("p"))))
+        .otherwise(array().cast(contribType))
+    partials.select(col(SIG), explode(concat(
+      fullContrib.cast(contribType), startContrib)).as("_c"))
+  }
+
+  /** Bucketed instant selector: the general path explodes every sample
+    * onto lookback/step covering steps (20× at a 5 m lookback and 15 s
+    * steps — THE production monitoring shape). Here samples reduce to
+    * one latest-point partial per (series, bucket) first; only those
+    * fan out, and the per-step winner is the max-timestamp partial
+    * among covering buckets plus the at-start point of the step's own
+    * bucket. Staleness travels with the partial: the winner being a
+    * marker hides the series, exactly like the general path. A rung's
+    * stored last/at-start points carry the stale flag too, and its
+    * sub-bucket rows keep their own latest points (the winner is the
+    * max-rel candidate); marker-only buckets are present by
+    * construction (see [[graft.storage.Ingest.foldPartials]]). */
+  private def bucketedSelect(vs: VectorSelector, tr: EvalRange,
+      rung: Option[(DataFrame, Long)]): DataFrame = {
     val step = tr.stepMs
     val m = (lookbackMs / step).toInt
-    val o = vs.offsetMs
-    val anchor = tr.startMs - o
-    val b = bucketCol(step)
-    val isStart = pmod(col("_rel"), lit(step)) === 0
+    val anchor = tr.startMs - vs.offsetMs
     // per-field max_by decomposition (unique _rel per series+bucket; the
     // at-start row is unique per bucket) — primitive buffers keep the
     // aggregation hash-based where struct-valued max_by would sort
-    val partials0 = materializedSelectPartials(vs, tr).getOrElse {
-      // (not bucketedBase: that drops stale rows, instant selection
-      // keeps them)
-      val hasStale = scanSamples.columns.contains("stale")
-      val staleCol = if (hasStale) col("stale") else lit(false)
-      val ms = allMatchers(vs)
-      applyMatchers(scanSource, ms)
-        .filter(col(T) >= tr.startMs - o - lookbackMs &&
-          col(T) <= tr.endMs - o)
-        .select(sigCol.as(SIG), col(L),
-          (col(T) - anchor).as("_rel"), col(V), staleCol.as("_st0"))
-        .withColumn("_b", b).withColumn("_s0", isStart)
-        .groupBy(col(SIG), col("_b"))
-        .agg(
-          max(col("_rel")).as("_lprel"),
-          max_by(col(V), col("_rel")).as("_lpv"),
-          max_by(col("_st0"), col("_rel")).as("_lpstale"),
-          max(when(col("_s0"), col(V))).as("_spv"),
-          max(when(col("_s0"), col("_st0"))).as("_spstale"),
-          max(when(col("_s0"), 1).otherwise(0)).as("has0"))
+    val partials0 = rung match {
+      case Some((tbl, bkt)) =>
+        countRoute("select_partials", bkt)
+        rungSlice(tbl, vs, lookbackMs, tr)
+          .select(col("sig").as(SIG), col("_b"),
+            (col("lta") - anchor).as("_lprel"), col("lva").as("_lpv"),
+            col("lsa").as("_lpstale"),
+            when(col("_s0"), col("v0a")).as("_spv"),
+            when(col("_s0"), col("s0a")).as("_spstale"),
+            when(col("_s0"), col("has0a")).otherwise(0).as("has0"))
+      case None =>
+        bucketedBase(vs, lookbackMs, tr, keepStale = true)
+          .groupBy(col(SIG), col("_b"))
+          .agg(
+            max(col("_rel")).as("_lprel"),
+            max_by(col(V), col("_rel")).as("_lpv"),
+            max_by(col("_st0"), col("_rel")).as("_lpstale"),
+            max(when(col("_s0"), col(V))).as("_spv"),
+            max(when(col("_s0"), col("_st0"))).as("_spstale"),
+            max(when(col("_s0"), 1).otherwise(0)).as("has0"))
     }
     val partials = partials0
       .withColumn("lp", struct(col("_lprel").as("rel"), col("_lpv").as("v"),
@@ -593,25 +591,12 @@ class PromQLEngine(
       .withColumn("sp", struct((col("_b") * step).as("rel"),
         col("_spv").as("v"), coalesce(col("_spstale"), lit(false)).as("stale")))
 
-    val pType = "struct<rel:bigint,v:double,stale:boolean>"
-    val contribType = s"array<struct<k:bigint,p:$pType>>"
-    val lo = greatest(col("_b") + 1, lit(0L))
-    val hi = least(col("_b") + m, lit(tr.numSteps - 1))
-    val fullSeq = when(lo <= hi, sequence(lo, hi, lit(1L)))
-      .otherwise(array().cast("array<bigint>"))
-    val fullContrib = transform(fullSeq,
-      k => struct(k.as("k"), col("lp").as("p")))
-    val startContrib =
-      when(col("_b").between(0, tr.numSteps - 1) && col("has0") === 1,
-        array(struct(col("_b").as("k"), col("sp").as("p"))))
-        .otherwise(array().cast(contribType))
     // contributing rels are unique within a (series, step) group (lp
     // rels of distinct buckets lie in disjoint ranges; the sp rel is
     // the step boundary itself), so per-field max_bys agree on one row
     joinLabels(
-      partials
-        .select(col(SIG), explode(concat(
-          fullContrib.cast(contribType), startContrib)).as("_c"))
+      fanOut(partials, m, tr, "struct<rel:bigint,v:double,stale:boolean>",
+        col("lp"), col("has0") === 1, col("sp"))
         .groupBy(col(SIG), col("_c.k").as("_k"))
         .agg(
           max(col("_c.p.rel")).as("_wrel"),
@@ -726,11 +711,12 @@ class PromQLEngine(
       partials * m > 3.0 * (tr.numSteps + m)
     }
 
-  /** Cost gate on the fold-rung route for TUMBLING windows (m =
-    * range/step = 1). At m ≥ 2 a rung substitutes the query-time
-    * bucketing stage one-for-one (same downstream fan-out/merge), so
-    * routing never costs more than it saves; at m = 1 the raw path is
-    * a SINGLE-stage fold over narrow sample rows, and reading the
+  /** Cost gate on the fold-rung route: pays at m = range/step ≥ 2
+    * unconditionally, for TUMBLING windows (m = 1) only when the rung
+    * compresses. At m ≥ 2 a rung substitutes the query-time bucketing
+    * stage one-for-one (same downstream fan-out/merge), so routing
+    * never costs more than it saves; at m = 1 the raw path is a
+    * SINGLE-stage fold over narrow sample rows, and reading the
     * rung's ~dozen partial columns back from parquet plus re-merging
     * them only pays when buckets actually compress — on a sparse
     * table (≲1 sample per bucket) the rung has as many rows as the
@@ -739,26 +725,19 @@ class PromQLEngine(
     * memoized [[tableStats]] under the same uniform-cadence
     * assumption as [[slidingWins]]; the 3× threshold is hysteresis
     * toward raw, the simpler single-stage plan — both routes are
-    * exact, so this gate is pure cost, never correctness. */
-  private def foldRungDense(bucketMs: Long): Boolean =
-    tableStats.exists { case (t0, t1, rows, series) =>
-      val span = math.max(1L, t1 - t0)
-      rows.toDouble * bucketMs / (math.max(1L, series) * span) >=
-        PromQLEngine.foldRungMinSamplesPerBucket
-    }
-
-  /** The fold-family routing gate over [[foldRungDense]]: pays at
-    * m ≥ 2 unconditionally, at m = 1 only when the rung compresses.
-    * Declines are counted (`fold_partials_declined:<bucketMs>`) so an
-    * operator can see the router refusing a bound rung — the flip
-    * side of `fold_partials:<bucketMs>`. */
-  private def foldRungPays(rangeMs: Long, stepMs: Long,
-      anchor: Long): Boolean =
-    rangeMs >= 2 * stepMs || bestPartials(stepMs, anchor).forall {
-      case (_, bkt) =>
-        val dense = foldRungDense(bkt)
-        if (!dense) countRoute("fold_partials_declined", bkt)
-        dense
+    * exact, so this gate is pure cost, never correctness. Declines
+    * are counted (`fold_partials_declined:<bucketMs>`) so an operator
+    * can see the router refusing a bound rung — the flip side of
+    * `fold_partials:<bucketMs>`. */
+  private def foldRungPays(m: Long, bucketMs: Long): Boolean =
+    m >= 2 || {
+      val dense = tableStats.exists { case (t0, t1, rows, series) =>
+        val span = math.max(1L, t1 - t0)
+        rows.toDouble * bucketMs / (math.max(1L, series) * span) >=
+          PromQLEngine.foldRungMinSamplesPerBucket
+      }
+      if (!dense) countRoute("fold_partials_declined", bucketMs)
+      dense
     }
 
   /** Drop this engine's cached series dimension (entry + Spark cache).
@@ -816,8 +795,12 @@ class PromQLEngine(
     * `graft_engine_route_total` on `/metrics` so an operator can SEE
     * whether production dashboards actually hit the materialized
     * tiers (the routing is silent by design: results are
-    * bit-identical either way, so only a counter can tell). Like
-    * [[reaggHits]], scoped to this engine instance. */
+    * bit-identical either way, so only a counter can tell). The rung
+    * is chosen once per selector, in [[vectorSelect]] (instant
+    * selectors) and [[evalRangeFunc]] (range functions, with the
+    * `fold_partials_declined:<bucketMs>` density gate); the bucketed
+    * evaluators count the route they were handed. Like [[reaggHits]],
+    * scoped to this engine instance. */
   private[graft] val routeHits = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.atomic.AtomicLong]()
   private def countRoute(route: String, bucketMs: Long = -1L): Unit =
@@ -1428,96 +1411,36 @@ class PromQLEngine(
   private val bucketFoldFuncs = Set("sum_over_time", "avg_over_time",
     "count_over_time", "min_over_time", "max_over_time")
 
-  /** Step-aligned bucketed evaluation of the fold-style `*_over_time`
-    * functions.
-    *
-    * The general `windowed()` path explodes every sample onto every
-    * covering grid step — row amplification = range/step (≈60× for
-    * `[1h]` @ 1m, 288× for `[1d]` @ 5m), the dominant scale cost of
-    * range queries. Here samples are first REDUCED to one partial row
-    * per (series, step-bucket) carrying associative aggregates
-    * (count/sum/sum²/min/max + NaN flag), and only those partials fan
-    * out to the range/step covering steps — amplification applies to
-    * rows already shrunk by the samples-per-bucket factor (e.g. 4
-    * samples per 1m bucket at 15s scrape ⇒ 4× less shuffle).
-    *
-    * Window semantics are CLOSED [t-w, t], which pure half-open buckets
-    * cannot express: a sample at exactly t belongs to the window ending
-    * at t AND to bucket t/step. Each bucket therefore carries a second
-    * partial restricted to samples at its exact start boundary; step k
-    * combines full buckets [k-m, k-1] plus bucket k's at-start partial.
-    *
-    * Applicable when range is a positive multiple of step; guarded to
-    * real range queries (several steps, bounded fan-out). */
-  /** Shared base for the bucketed paths: matched, time-bounded samples
-    * with grid-relative time `_rel` (anchor = first shifted eval time).
-    * Bucket index uses exact integer floor division. */
+  /** Shared base for the query-time bucketed paths: matched,
+    * time-bounded samples with their [[gridCols]] (anchor = first
+    * shifted eval time) and stale flag `_st0`. Staleness markers are
+    * dropped unless `keepStale`: instant selection keeps them, so a
+    * marker as the newest point hides the series. */
   private def bucketedBase(selector: VectorSelector, w: Long,
-      tr: EvalRange): DataFrame = {
+      tr: EvalRange, keepStale: Boolean = false): DataFrame = {
     val o = selector.offsetMs
     val ms = allMatchers(selector)
     require(ms.nonEmpty, "vector selector must contain at least one label matcher")
     val hasStale = scanSamples.columns.contains("stale")
     val src = scanSource
-    val unstale = if (hasStale) src.filter(!col("stale")) else src
-    val anchor = tr.startMs - o // bucket grid aligned to shifted eval times
+    val unstale = if (hasStale && !keepStale) src.filter(!col("stale")) else src
     applyMatchers(unstale, ms)
       .filter(col(T) >= tr.startMs - o - w && col(T) <= tr.endMs - o)
-      .select(sigCol.as(SIG), col(L),
-        (col(T) - anchor).as("_rel"), col(V))
+      .select(Seq(sigCol.as(SIG), col(L), col(V),
+        (if (hasStale) col("stale") else lit(false)).as("_st0")) ++
+        gridCols(col(T), tr.startMs - o, tr.stepMs): _*)
   }
 
-  private def bucketCol(step: Long): Column = {
-    // exact integer bucket index (floor): subtract the nonnegative
-    // remainder first so the division is of an exact multiple
-    val rem = pmod(col("_rel"), lit(step))
-    ((col("_rel") - rem) / lit(step.toDouble)).cast("long")
-  }
-
-  /** Step-bucket partials served from the MATERIALIZED fold-partials
-    * table instead of raw samples, when the query grid aligns: step a
-    * multiple of the table's bucket size and the (offset-shifted)
-    * start on a bucket boundary (w is then aligned too, since the
-    * caller guarantees w % step == 0 — so the closed window's low
-    * edge is also a bucket boundary). Materialized buckets merge into
-    * step buckets; only rows whose bucket start IS a step boundary
-    * contribute their at-start partials (the others' boundaries are
-    * interior points of the step bucket, already inside the full
-    * aggregates). Input volume: series × buckets, never samples. */
-  private def materializedStepPartials(selector: VectorSelector, w: Long,
-      tr: EvalRange): Option[DataFrame] = {
-    val o = selector.offsetMs
-    val anchor = tr.startMs - o
-    bestPartials(tr.stepMs, anchor)
-      // mirror of the dispatch-level foldRungPays gate (silent: the
-      // dispatch already counted the decline) so a declined tumbling
-      // fold entering via `bucketable` still reads raw, never the rung
-      .filter { case (_, bkt) => w >= 2 * tr.stepMs || foldRungDense(bkt) }
-      .map { case (tbl, bkt) =>
-      countRoute("fold_partials", bkt)
-      val ms = allMatchers(selector)
-      val rows = tbl
-        .filter(ms.map(matcherCond).reduce(_ && _))
-        .filter(col("bucket_start") >= anchor - w &&
-          col("bucket_start") <= tr.endMs - o)
-        .withColumn("_rel", col("bucket_start") - anchor)
-      val onStep = pmod(col("_rel"), lit(tr.stepMs)) === 0
-      rows
-        .filter(col("cnt").isNotNull) // marker-only buckets: no values
-        .withColumn("_b", bucketCol(tr.stepMs))
-        .groupBy(col("sig").as(SIG), col("_b"))
-        .agg(
-          sum(col("cnt")).as("cnt"), sum(col("sum")).as("sum"),
-          sum(col("sumsq")).as("sumsq"),
-          min(col("mn")).as("mn"), max(col("mx")).as("mx"),
-          max(col("nan")).as("nan"),
-          sum(when(onStep, col("cnt0")).otherwise(0L)).as("cnt0"),
-          sum(when(onStep, col("sum0"))).as("sum0"),
-          sum(when(onStep, col("sumsq0"))).as("sumsq0"),
-          min(when(onStep, col("mn0"))).as("mn0"),
-          max(when(onStep, col("mx0"))).as("mx0"),
-          max(when(onStep, col("nan0")).otherwise(0)).as("nan0"))
-    }
+  /** Grid coordinates of time column `t` on a step grid anchored at
+    * `anchor`: `_rel = t − anchor`, the step-bucket index `_b` (exact
+    * integer floor: the nonnegative remainder is subtracted first so
+    * the division is of an exact multiple) and `_s0` (t sits ON a
+    * step boundary). */
+  private def gridCols(t: Column, anchor: Long, step: Long): Seq[Column] = {
+    val rel = t - anchor
+    val rem = pmod(rel, lit(step))
+    Seq(rel.as("_rel"), ((rel - rem) / lit(step.toDouble)).cast("long").as("_b"),
+      (rem === 0).as("_s0"))
   }
 
   /** Range functions with SUBTRACTABLE folds, which slidingFold can
@@ -1564,12 +1487,10 @@ class PromQLEngine(
     val step = tr.stepMs
     val m = (w / step).toInt
     val n = tr.numSteps
-    val isStart = pmod(col("_rel"), lit(step)) === 0
     val finite = !isnan(col(V)) && col(V) =!= Double.PositiveInfinity &&
       col(V) =!= Double.NegativeInfinity
 
     val parts = bucketedBase(selector, w, tr)
-      .withColumn("_b", bucketCol(step)).withColumn("_s0", isStart)
       .groupBy(col(SIG), col("_b"))
       .agg(
         count(lit(1)).as("cnt"),
@@ -1623,8 +1544,7 @@ class PromQLEngine(
       span(greatest(col("_b") + m + 1, lit(0L)),
         least(nbc + m, lit(n - 1L))),
       k => cumStruct(k, -1))
-    // the closed window's own at-start point: k = _b (as the explode
-    // path's startContrib)
+    // the closed window's own at-start point: k = _b (as in fanOut)
     val start0 = when(col("_b").between(0, n - 1) && col("cnt0") > 0,
       array(struct(col("_b").as("k"), col("cnt0").as("cnt"),
         col("fsum0").as("fsum"),
@@ -1661,58 +1581,73 @@ class PromQLEngine(
       .transform(reSig)
   }
 
+  /** Step-aligned bucketed evaluation of the fold-style `*_over_time`
+    * functions. The general `windowed()` path explodes every sample
+    * onto every covering grid step — row amplification = range/step
+    * (≈60× for `[1h]` @ 1m, 288× for `[1d]` @ 5m), the dominant scale
+    * cost of range queries. Here samples are first REDUCED to one
+    * partial row per (series, step-bucket) carrying associative
+    * aggregates (count/sum/sum²/min/max + NaN flag, and the same over
+    * the bucket's at-start samples), and only those partials fan out
+    * ([[fanOut]]) — amplification applies to rows already shrunk by
+    * the samples-per-bucket factor (e.g. 4 samples per 1m bucket at
+    * 15s scrape ⇒ 4× less shuffle). With a `rung`, its buckets merge
+    * into the step buckets instead of raw samples. */
   private def bucketedFold(selector: VectorSelector, w: Long, tr: EvalRange,
-      name: String): DataFrame = {
+      name: String, rung: Option[(DataFrame, Long)]): DataFrame = {
     val step = tr.stepMs
     val m = (w / step).toInt
-    val b = bucketCol(step)
-    val isStart = pmod(col("_rel"), lit(step)) === 0
 
-    val partials = materializedStepPartials(selector, w, tr).getOrElse {
-      countRoute("bucketed_query_time")
-      bucketedBase(selector, w, tr)
-        .withColumn("_b", b).withColumn("_s0", isStart)
-        .groupBy(col(SIG), col("_b"))
-        .agg(
-          count(lit(1)).as("cnt"), sum(col(V)).as("sum"),
-          sum(col(V) * col(V)).as("sumsq"),
-          min(col(V)).as("mn"), max(col(V)).as("mx"),
-          max(when(isnan(col(V)), 1).otherwise(0)).as("nan"),
-          sum(when(col("_s0"), 1L).otherwise(0L)).as("cnt0"),
-          sum(when(col("_s0"), col(V))).as("sum0"),
-          sum(when(col("_s0"), col(V) * col(V))).as("sumsq0"),
-          min(when(col("_s0"), col(V))).as("mn0"),
-          max(when(col("_s0"), col(V))).as("mx0"),
-          max(when(col("_s0") && isnan(col(V)), 1).otherwise(0)).as("nan0"))
+    val partials = rung match {
+      case Some((tbl, bkt)) =>
+        countRoute("fold_partials", bkt)
+        val s0 = col("_s0")
+        rungSlice(tbl, selector, w, tr)
+          .filter(col("cnt").isNotNull) // marker-only buckets: no values
+          .groupBy(col("sig").as(SIG), col("_b"))
+          .agg(
+            sum(col("cnt")).as("cnt"), sum(col("sum")).as("sum"),
+            sum(col("sumsq")).as("sumsq"),
+            min(col("mn")).as("mn"), max(col("mx")).as("mx"),
+            max(col("nan")).as("nan"),
+            sum(when(s0, col("cnt0")).otherwise(0L)).as("cnt0"),
+            sum(when(s0, col("sum0"))).as("sum0"),
+            sum(when(s0, col("sumsq0"))).as("sumsq0"),
+            min(when(s0, col("mn0"))).as("mn0"),
+            max(when(s0, col("mx0"))).as("mx0"),
+            max(when(s0, col("nan0")).otherwise(0)).as("nan0"))
+      case None =>
+        countRoute("bucketed_query_time")
+        bucketedBase(selector, w, tr)
+          .groupBy(col(SIG), col("_b"))
+          .agg(
+            count(lit(1)).as("cnt"), sum(col(V)).as("sum"),
+            sum(col(V) * col(V)).as("sumsq"),
+            min(col(V)).as("mn"), max(col(V)).as("mx"),
+            max(when(isnan(col(V)), 1).otherwise(0)).as("nan"),
+            sum(when(col("_s0"), 1L).otherwise(0L)).as("cnt0"),
+            sum(when(col("_s0"), col(V))).as("sum0"),
+            sum(when(col("_s0"), col(V) * col(V))).as("sumsq0"),
+            min(when(col("_s0"), col(V))).as("mn0"),
+            max(when(col("_s0"), col(V))).as("mx0"),
+            max(when(col("_s0") && isnan(col(V)), 1).otherwise(0)).as("nan0"))
     }
 
-    val contribType =
-      "array<struct<k:bigint,cnt:bigint,sum:double,sumsq:double," +
-        "mn:double,mx:double,nan:int>>"
-    val lo = greatest(col("_b") + 1, lit(0L))
-    val hi = least(col("_b") + m, lit(tr.numSteps - 1))
-    val fullSeq = when(lo <= hi, sequence(lo, hi, lit(1L)))
-      .otherwise(array().cast("array<bigint>"))
-    val fullContrib = transform(fullSeq, k => struct(
-      k.as("k"), col("cnt").as("cnt"), col("sum").as("sum"),
-      col("sumsq").as("sumsq"), col("mn").as("mn"), col("mx").as("mx"),
-      col("nan").as("nan")))
-    val startContrib =
-      when(col("_b").between(0, tr.numSteps - 1) && col("cnt0") > 0,
-        array(struct(col("_b").as("k"), col("cnt0").as("cnt"),
-          col("sum0").as("sum"), col("sumsq0").as("sumsq"),
-          col("mn0").as("mn"), col("mx0").as("mx"), col("nan0").as("nan"))))
-        .otherwise(array().cast(contribType))
-
     val merged = joinLabels(
-      partials.select(col(SIG),
-        explode(concat(fullContrib.cast(contribType), startContrib)).as("_c"))
+      fanOut(partials, m, tr,
+        "struct<cnt:bigint,sum:double,sumsq:double,mn:double,mx:double,nan:int>",
+        full = struct(col("cnt"), col("sum"), col("sumsq"), col("mn"),
+          col("mx"), col("nan")),
+        hasStart = col("cnt0") > 0,
+        start = struct(col("cnt0").as("cnt"), col("sum0").as("sum"),
+          col("sumsq0").as("sumsq"), col("mn0").as("mn"),
+          col("mx0").as("mx"), col("nan0").as("nan")))
         .groupBy(col(SIG), col("_c.k").as("_k"))
         .agg(
-          sum(col("_c.cnt")).as("cnt"), sum(col("_c.sum")).as("sum"),
-          sum(col("_c.sumsq")).as("sumsq"),
-          min(col("_c.mn")).as("mn"), max(col("_c.mx")).as("mx"),
-          max(col("_c.nan")).as("nan")))
+          sum(col("_c.p.cnt")).as("cnt"), sum(col("_c.p.sum")).as("sum"),
+          sum(col("_c.p.sumsq")).as("sumsq"),
+          min(col("_c.p.mn")).as("mn"), max(col("_c.p.mx")).as("mx"),
+          max(col("_c.p.nan")).as("nan")))
 
     val cntD = col("cnt").cast("double")
     val value = name match {
@@ -1743,124 +1678,87 @@ class PromQLEngine(
     * count) fan out to covering steps and merge IN BUCKET ORDER with
     * the boundary-reset correction — associative, so amplification
     * applies to one partial row per (series, bucket) instead of every
-    * sample (see [[bucketedFold]] for the grid/boundary mechanics). */
-  /** Step-bucket rate partials served from the MATERIALIZED table when
-    * the step is a MULTIPLE of the bucket size (and the grid aligns).
-    * Rows stay at sub-bucket granularity: `_j` is the sub-bucket index
-    * (the ordered-merge sort key — [[PromUdfs.ratePartials]] folds
-    * partials in time order, adding the boundary reset at each seam,
-    * so q sub-bucket partials inside one step window merge exactly
-    * like the raw points they summarize), `_b` is the STEP index the
-    * fan-out targets. Only sub-buckets starting ON a step boundary
-    * contribute their at-start point (the others' start points are
-    * interior samples of the step window, already inside their full
-    * partial). In-bucket reset corrections are prepaid at ingest. */
-  private def materializedRatePartials(selector: VectorSelector, w: Long,
-      tr: EvalRange): Option[DataFrame] = {
-    val o = selector.offsetMs
-    val anchor = tr.startMs - o
-    bestPartials(tr.stepMs, anchor).map { case (tbl, bkt) =>
-      countRoute("rate_partials", bkt)
-      val ms = allMatchers(selector)
-      val rel = col("bucket_start") - anchor
-      val onStep = pmod(rel, lit(tr.stepMs)) === 0
-      val q = tr.stepMs / bkt
-      val sub = tbl
-        .filter(ms.map(matcherCond).reduce(_ && _))
-        .filter(col("bucket_start") >= anchor - w &&
-          col("bucket_start") <= tr.endMs - o)
-        .filter(col("cnt").isNotNull) // marker-only buckets: no values
-        .select(col("sig").as(SIG),
-          (rel / lit(bkt.toDouble)).cast("long").as("_j"),
-          ((rel - pmod(rel, lit(tr.stepMs))) / lit(tr.stepMs.toDouble))
-            .cast("long").as("_b"),
-          (col("ft") - anchor).as("ft"), col("fv"),
-          (col("lt") - anchor).as("lt"), col("lv"),
-          col("corr"), col("cnt"),
-          when(onStep, col("v0")).as("v0"),
-          when(onStep, col("has0")).otherwise(0).as("has0"))
-      // pre-merge the q sub-partials of each step bucket into ONE
-      // partial (ordered fold, boundary reset at each seam) BEFORE the
-      // m-fold fan-out: fanning out sub-bucket rows directly costs
-      // q × m exploded rows per (series, step bucket) — measured 1.4×
-      // SLOWER than raw at q = 60 (LadderBench, 15 s cadence / 1 m
-      // rung / 1 h steps) where the merged route reads the same rows
-      // and beats raw ~2×. _j of the merged row = the step bucket's
-      // first sub-index, keeping the downstream merge-ordering key.
-      if (q == 1) sub
-      else sub
-        .groupBy(col(SIG), col("_b"))
-        .agg(
-          array_sort(collect_list(struct(col("_j"), col("ft"), col("fv"),
-            col("lt"), col("lv"), col("corr"), col("cnt")))).as("_sub"),
-          max(col("v0")).as("v0"), max(col("has0")).as("has0"))
-        .withColumn("_m", PromUdfs.mergeRatePartsUdf(col("_sub")))
-        .select(col(SIG), (col("_b") * q).as("_j"), col("_b"),
-          col("_m._1").as("ft"), col("_m._2").as("fv"),
-          col("_m._3").as("lt"), col("_m._4").as("lv"),
-          col("_m._5").as("corr"), col("_m._6").as("cnt"),
-          col("v0"), col("has0"))
-    }
-  }
-
+    * sample. A `rung` serves steps that are a MULTIPLE of its bucket:
+    * `_j` is the sub-bucket index (the ordered-merge sort key —
+    * [[PromUdfs.ratePartials]] folds partials in time order, adding
+    * the boundary reset at each seam, so q sub-bucket partials inside
+    * one step window merge exactly like the raw points they
+    * summarize); in-bucket reset corrections are prepaid at ingest. */
   private def bucketedRate(selector: VectorSelector, w: Long, tr: EvalRange,
-      isCounter: Boolean, isRate: Boolean): DataFrame = {
+      isCounter: Boolean, isRate: Boolean,
+      rung: Option[(DataFrame, Long)]): DataFrame = {
     val step = tr.stepMs
     val m = (w / step).toInt
-    val b = bucketCol(step)
-    val isStart = pmod(col("_rel"), lit(step)) === 0
+    val anchor = tr.startMs - selector.offsetMs
 
-    val partials = materializedRatePartials(selector, w, tr).getOrElse {
-      countRoute("bucketed_query_time")
-      val wspec = Window.partitionBy(col(SIG), col("_b")).orderBy(col("_rel"))
-      val pv = lag(col(V), 1).over(wspec)
-      bucketedBase(selector, w, tr)
-        .withColumn("_b", b).withColumn("_s0", isStart)
-        .withColumn("_cinc", PromUdfs.counterResetCorrection(col(V), pv))
-        .groupBy(col(SIG), col("_b"))
-        .agg(
-          min(col("_rel")).as("ft"), min_by(col(V), col("_rel")).as("fv"),
-          max(col("_rel")).as("lt"), max_by(col(V), col("_rel")).as("lv"),
-          sum(col("_cinc")).as("corr"), count(lit(1)).as("cnt"),
-          max(when(col("_s0"), col(V))).as("v0"),
-          max(when(col("_s0"), 1).otherwise(0)).as("has0"))
-        // query-time partials ARE step-granular: sub-index == step index
-        .withColumn("_j", col("_b"))
+    val partials = rung match {
+      case Some((tbl, bkt)) =>
+        countRoute("rate_partials", bkt)
+        val q = step / bkt
+        val sub = rungSlice(tbl, selector, w, tr)
+          .filter(col("cnt").isNotNull) // marker-only buckets: no values
+          .select(col("sig").as(SIG),
+            (col("_rel") / lit(bkt.toDouble)).cast("long").as("_j"),
+            col("_b"),
+            (col("ft") - anchor).as("ft"), col("fv"),
+            (col("lt") - anchor).as("lt"), col("lv"),
+            col("corr"), col("cnt"),
+            when(col("_s0"), col("v0")).as("v0"),
+            when(col("_s0"), col("has0")).otherwise(0).as("has0"))
+        // pre-merge the q sub-partials of each step bucket into ONE
+        // partial (ordered fold, boundary reset at each seam) BEFORE the
+        // m-fold fan-out: fanning out sub-bucket rows directly costs
+        // q × m exploded rows per (series, step bucket) — measured 1.4×
+        // SLOWER than raw at q = 60 (LadderBench, 15 s cadence / 1 m
+        // rung / 1 h steps) where the merged route reads the same rows
+        // and beats raw ~2×. _j of the merged row = the step bucket's
+        // first sub-index, keeping the downstream merge-ordering key.
+        if (q == 1) sub
+        else sub
+          .groupBy(col(SIG), col("_b"))
+          .agg(
+            array_sort(collect_list(struct(col("_j"), col("ft"), col("fv"),
+              col("lt"), col("lv"), col("corr"), col("cnt")))).as("_sub"),
+            max(col("v0")).as("v0"), max(col("has0")).as("has0"))
+          .withColumn("_m", PromUdfs.mergeRatePartsUdf(col("_sub")))
+          .select(col(SIG), (col("_b") * q).as("_j"), col("_b"),
+            col("_m._1").as("ft"), col("_m._2").as("fv"),
+            col("_m._3").as("lt"), col("_m._4").as("lv"),
+            col("_m._5").as("corr"), col("_m._6").as("cnt"),
+            col("v0"), col("has0"))
+      case None =>
+        countRoute("bucketed_query_time")
+        val wspec = Window.partitionBy(col(SIG), col("_b")).orderBy(col("_rel"))
+        val pv = lag(col(V), 1).over(wspec)
+        bucketedBase(selector, w, tr)
+          .withColumn("_cinc", PromUdfs.counterResetCorrection(col(V), pv))
+          .groupBy(col(SIG), col("_b"))
+          .agg(
+            min(col("_rel")).as("ft"), min_by(col(V), col("_rel")).as("fv"),
+            max(col("_rel")).as("lt"), max_by(col(V), col("_rel")).as("lv"),
+            sum(col("_cinc")).as("corr"), count(lit(1)).as("cnt"),
+            max(when(col("_s0"), col(V))).as("v0"),
+            max(when(col("_s0"), 1).otherwise(0)).as("has0"))
+          // query-time partials ARE step-granular: sub-index == step index
+          .withColumn("_j", col("_b"))
     }
 
-    val lo = greatest(col("_b") + 1, lit(0L))
-    val hi = least(col("_b") + m, lit(tr.numSteps - 1))
-    val fullSeq = when(lo <= hi, sequence(lo, hi, lit(1L)))
-      .otherwise(array().cast("array<bigint>"))
-    // partial struct field `b` = the SUB-bucket index `_j`: the merge
-    // sort key. On the materialized route a step window holds q =
-    // step/bucket sub-partials; _j orders them in time (query-time
-    // path: _j == _b, one partial per window as before).
-    val fullContrib = transform(fullSeq, k => struct(
-      k.as("k"), struct(col("_j").as("b"), col("ft").as("ft"),
-        col("fv").as("fv"), col("lt").as("lt"), col("lv").as("lv"),
-        col("corr").as("corr"), col("cnt").as("cnt")).as("p")))
-    // a sample at exactly the step time belongs to the window ending
-    // there: contribute bucket k's at-start point as the FINAL partial
+    // partial field `b` = the SUB-bucket index `_j`, the merge sort
+    // key. A sample at exactly the step time belongs to the window
+    // ending there: bucket k's at-start point is the FINAL partial
     // (_j of an on-boundary sub-bucket = q·_b, sorting after every
     // full partial of window _b, whose sub-indices are < q·_b)
     val startRel = col("_b") * step
-    val startContrib =
-      when(col("_b").between(0, tr.numSteps - 1) && col("has0") === 1,
-        array(struct(col("_b").as("k"), struct(col("_j").as("b"),
-          startRel.as("ft"), col("v0").as("fv"), startRel.as("lt"),
-          col("v0").as("lv"), lit(0.0).as("corr"), lit(1L).as("cnt"))
-          .as("p"))))
-        .otherwise(array()
-          .cast("array<struct<k:bigint,p:struct<b:bigint,ft:bigint," +
-            "fv:double,lt:bigint,lv:double,corr:double,cnt:bigint>>>"))
-
     joinLabels(
-      partials
-        .select(col(SIG), explode(concat(
-          fullContrib.cast("array<struct<k:bigint,p:struct<b:bigint," +
-            "ft:bigint,fv:double,lt:bigint,lv:double,corr:double," +
-            "cnt:bigint>>>"), startContrib)).as("_c"))
+      fanOut(partials, m, tr,
+        "struct<b:bigint,ft:bigint,fv:double,lt:bigint,lv:double," +
+          "corr:double,cnt:bigint>",
+        full = struct(col("_j").as("b"), col("ft"), col("fv"), col("lt"),
+          col("lv"), col("corr"), col("cnt")),
+        hasStart = col("has0") === 1,
+        start = struct(col("_j").as("b"), startRel.as("ft"),
+          col("v0").as("fv"), startRel.as("lt"), col("v0").as("lv"),
+          lit(0.0).as("corr"), lit(1L).as("cnt")))
         .groupBy(col(SIG), col("_c.k").as("_k"))
         .agg(array_sort(collect_list(col("_c.p"))).as("_ps")))
       .withColumn(V, PromUdfs.ratePartialsUdf(col("_ps"),
@@ -1871,59 +1769,6 @@ class PromQLEngine(
       .select(col(SIG), Samples.dropMetricName(col(L)).as(L), col(T),
         col(T).as(ST), col(V))
       .transform(reSig)
-  }
-
-  /** Materialized route for the instant-value family: the partials
-    * table's (lt, lv, lt2, lv2) columns ARE each bucket's two newest
-    * live points, so aligned irate/idelta windows can draw their
-    * candidates from the table instead of raw samples. Gated on the
-    * columns' presence (tables written before the top-2 columns fall
-    * back to the query-time path). Same sub-bucket geometry as
-    * [[materializedRatePartials]]: `_b` is the STEP index the fan-out
-    * targets; only sub-buckets ON a step boundary contribute their
-    * at-start point. The candidate UDF picks the two globally newest,
-    * so multiple sub-partials per window need no ordering key. */
-  private def materializedInstantPartials(selector: VectorSelector,
-      w: Long, tr: EvalRange): Option[DataFrame] = {
-    val o = selector.offsetMs
-    val anchor = tr.startMs - o
-    bestPartials(tr.stepMs, anchor, needTop2 = true).map { case (tbl, bkt) =>
-      countRoute("instant_partials", bkt)
-      val ms = allMatchers(selector)
-      val rel = col("bucket_start") - anchor
-      val onStep = pmod(rel, lit(tr.stepMs)) === 0
-      val l2t = "array<struct<rel:bigint,v:double>>"
-      val sub = tbl
-        .filter(ms.map(matcherCond).reduce(_ && _))
-        .filter(col("bucket_start") >= anchor - w &&
-          col("bucket_start") <= tr.endMs - o)
-        .filter(col("cnt").isNotNull) // marker-only buckets: no values
-        .select(col("sig").as(SIG),
-          ((rel - pmod(rel, lit(tr.stepMs))) / lit(tr.stepMs.toDouble))
-            .cast("long").as("_b"),
-          concat(
-            array(struct((col("lt") - anchor).as("rel"),
-              col("lv").as("v"))),
-            when(col("lt2").isNotNull,
-              array(struct((col("lt2") - anchor).as("rel"),
-                col("lv2").as("v"))))
-              .otherwise(array().cast(l2t))).as("last2"),
-          when(onStep, col("has0")).otherwise(0).as("has0"),
-          when(onStep, col("v0")).as("spv"))
-      // pre-merge: the step bucket's two newest points are among its
-      // sub-buckets' top-2s — flatten, sort by (rel, v) natural struct
-      // order (rels are distinct, so v never decides), keep the two
-      // newest. One row per (series, step bucket) enters the fan-out,
-      // like the query-time path (same q × m economics as the rate
-      // route's pre-merge). All lambda-free built-ins.
-      if (tr.stepMs == bkt) sub
-      else sub
-        .groupBy(col(SIG), col("_b"))
-        .agg(
-          slice(reverse(array_sort(flatten(collect_list(col("last2"))))),
-            1, 2).as("last2"),
-          max(col("has0")).as("has0"), max(col("spv")).as("spv"))
-    }
   }
 
   /** Bucketed `irate`/`idelta`: only the two newest points of each
@@ -1937,45 +1782,63 @@ class PromQLEngine(
     * map-side partials does it: the exchange now carries two points
     * per (series, bucket) per map task instead of every sample, and
     * the Sort/Window nodes vanish from the plan. Output is the same
-    * last2 array (the downstream candidate UDF is order-agnostic). */
+    * last2 array (the downstream candidate UDF is order-agnostic).
+    * A `rung`'s (lt, lv, lt2, lv2) columns ARE each bucket's two
+    * newest live points, so they stand in for the raw candidates. */
   private def bucketedInstant(selector: VectorSelector, w: Long,
-      tr: EvalRange, isRate: Boolean): DataFrame = {
+      tr: EvalRange, isRate: Boolean,
+      rung: Option[(DataFrame, Long)]): DataFrame = {
     val step = tr.stepMs
     val m = (w / step).toInt
-    val isStart = pmod(col("_rel"), lit(step)) === 0
-    // at-start rows of one bucket share rel == _b*step exactly, so the
-    // former max(struct(rel, v)) tie-break reduces to max(v) — kept as
-    // primitive aggregates so the whole aggregation stays hash-based
-    val partials = materializedInstantPartials(selector, w, tr).getOrElse {
-      countRoute("bucketed_query_time")
-      bucketedBase(selector, w, tr)
-        .withColumn("_b", bucketCol(step)).withColumn("_s0", isStart)
-        .groupBy(col(SIG), col("_b"))
-        .agg(
-          graft.functions.Top2ByRel.top2(col("_rel"), col(V)).as("last2"),
-          max(when(col("_s0"), 1).otherwise(0)).as("has0"),
-          max(when(col("_s0"), col(V))).as("spv"))
-    }
-      .withColumn("sp", struct((col("_b") * step).as("rel"), col("spv").as("v")))
-
+    val anchor = tr.startMs - selector.offsetMs
     val pType = "array<struct<rel:bigint,v:double>>"
-    val contribType = s"array<struct<k:bigint,ps:$pType>>"
-    val lo = greatest(col("_b") + 1, lit(0L))
-    val hi = least(col("_b") + m, lit(tr.numSteps - 1))
-    val fullSeq = when(lo <= hi, sequence(lo, hi, lit(1L)))
-      .otherwise(array().cast("array<bigint>"))
-    val fullContrib = transform(fullSeq,
-      k => struct(k.as("k"), col("last2").as("ps")))
-    val startContrib =
-      when(col("_b").between(0, tr.numSteps - 1) && col("has0") === 1,
-        array(struct(col("_b").as("k"), array(col("sp")).as("ps"))))
-        .otherwise(array().cast(contribType))
+    val partials = rung match {
+      case Some((tbl, bkt)) =>
+        countRoute("instant_partials", bkt)
+        val sub = rungSlice(tbl, selector, w, tr)
+          .filter(col("cnt").isNotNull) // marker-only buckets: no values
+          .select(col("sig").as(SIG), col("_b"),
+            concat(
+              array(struct((col("lt") - anchor).as("rel"),
+                col("lv").as("v"))),
+              when(col("lt2").isNotNull,
+                array(struct((col("lt2") - anchor).as("rel"),
+                  col("lv2").as("v"))))
+                .otherwise(array().cast(pType))).as("last2"),
+            when(col("_s0"), col("has0")).otherwise(0).as("has0"),
+            when(col("_s0"), col("v0")).as("spv"))
+        // pre-merge: the step bucket's two newest points are among its
+        // sub-buckets' top-2s — flatten, sort by (rel, v) natural struct
+        // order (rels are distinct, so v never decides), keep the two
+        // newest. One row per (series, step bucket) enters the fan-out,
+        // like the query-time path (same q × m economics as the rate
+        // route's pre-merge). All lambda-free built-ins.
+        if (step == bkt) sub
+        else sub
+          .groupBy(col(SIG), col("_b"))
+          .agg(
+            slice(reverse(array_sort(flatten(collect_list(col("last2"))))),
+              1, 2).as("last2"),
+            max(col("has0")).as("has0"), max(col("spv")).as("spv"))
+      case None =>
+        countRoute("bucketed_query_time")
+        // at-start rows of one bucket share rel == _b*step exactly, so
+        // the former max(struct(rel, v)) tie-break reduces to max(v) —
+        // kept as primitive aggregates so the whole aggregation stays
+        // hash-based
+        bucketedBase(selector, w, tr)
+          .groupBy(col(SIG), col("_b"))
+          .agg(
+            graft.functions.Top2ByRel.top2(col("_rel"), col(V)).as("last2"),
+            max(when(col("_s0"), 1).otherwise(0)).as("has0"),
+            max(when(col("_s0"), col(V))).as("spv"))
+    }
+
     joinLabels(
-      partials
-        .select(col(SIG), explode(concat(
-          fullContrib.cast(contribType), startContrib)).as("_c"))
+      fanOut(partials, m, tr, pType, col("last2"), col("has0") === 1,
+        array(struct((col("_b") * step).as("rel"), col("spv").as("v"))))
         .select(col(SIG), col("_c.k").as("_k"),
-          explode(col("_c.ps")).as("_p"))
+          explode(col("_c.p")).as("_p"))
         .groupBy(col(SIG), col("_k"))
         .agg(collect_list(col("_p")).as("_cands")))
       .withColumn(V,
@@ -2005,62 +1868,51 @@ class PromQLEngine(
     // and bucketedRate's scale rationale). m = range/step must be ≥ 2:
     // at m = 1 there is no fan-out to save and the partial+merge pair
     // costs one extra shuffle over the single-stage general path.
-    val bucketable = ms.rangeMs >= 2 * tr.stepMs &&
-      ms.rangeMs % tr.stepMs == 0 &&
-      ms.rangeMs / tr.stepMs <= 512 && tr.numSteps >= 8
-    // with a MATERIALIZED partials table the m >= 2 economics don't
-    // apply: even a tumbling window (m = 1) reads series × buckets
-    // rows instead of raw samples, so route whenever the grid aligns
-    val materializable =
-      bestPartials(tr.stepMs, tr.startMs - ms.selector.offsetMs).nonEmpty &&
-      ms.rangeMs % tr.stepMs == 0 && ms.rangeMs / tr.stepMs <= 512
+    val aligned = ms.rangeMs % tr.stepMs == 0
+    val m = ms.rangeMs / tr.stepMs
+    val bucketable = aligned && m >= 2 && m <= 512 && tr.numSteps >= 8
+    // the ONE rung decision for every route below. With a rung the
+    // m ≥ 2 economics don't apply: even a tumbling window (m = 1)
+    // reads series × buckets rows instead of raw samples, so a rung
+    // routes whenever the grid aligns
+    val rung =
+      if (aligned && m <= 512)
+        bestPartials(tr.stepMs, tr.startMs - ms.selector.offsetMs)
+      else None
     // sliding prefix-sum route for subtractable folds: amplification
     // ~2 regardless of m, so unlike `bucketable` it carries NO m ≤ 512
     // cap — the wider the window, the bigger its win over the explode.
     // m ≥ 16 keeps small windows on the single-explode path (sliding
-    // pays two extra window functions); with a materialized partials
-    // table bound, that route wins on scan volume and keeps priority.
-    val slidable = ms.rangeMs % tr.stepMs == 0 &&
-      ms.rangeMs / tr.stepMs >= PromQLEngine.slideMinM &&
+    // pays two extra window functions); with a rung bound, that route
+    // wins on scan volume and keeps priority.
+    val slidable = aligned && m >= PromQLEngine.slideMinM &&
       // no 512 cap, but bound m before .toInt: a sub-ms step against a
       // years-wide window must fall through (to the general path),
       // never wrap Int and mis-seed the lookup offsets
-      ms.rangeMs / tr.stepMs <= (1L << 20) && tr.numSteps >= 8 &&
-      !materializable && slidableFoldFuncs.contains(name) &&
+      m <= (1L << 20) && tr.numSteps >= 8 &&
+      rung.isEmpty && slidableFoldFuncs.contains(name) &&
       slidingWins(ms.rangeMs, tr)
     if (slidable)
       return slidingFold(ms.selector, ms.rangeMs, tr, name)
-    // the same alignment geometry routes folds, the rate family, and
-    // the instant-value family (coarser steps merge q = step/bucket
-    // ordered sub-partials per window — see materializedRatePartials;
-    // materializedInstantPartials additionally requires the table's
-    // top-2 columns and falls back to the query-time bucketed path)
     // fold family only: tumbling (m = 1) rung reads must clear the
     // density gate (see foldRungPays) — rate/irate stay ungated, their
     // raw path pays per-window pair analysis the rung avoids even on
     // sparse tables (c2 at ×100: 18.7 s raw vs 9.8 s tiered)
-    def foldMaterializable = materializable && foldRungPays(ms.rangeMs,
-      tr.stepMs, tr.startMs - ms.selector.offsetMs)
-    if (bucketFoldFuncs.contains(name) && (bucketable || foldMaterializable))
-      return bucketedFold(ms.selector, ms.rangeMs, tr, name)
-    if ((bucketable || materializable) &&
+    if (bucketFoldFuncs.contains(name)) {
+      val foldRung = rung.filter { case (_, bkt) => foldRungPays(m, bkt) }
+      if (bucketable || foldRung.nonEmpty)
+        return bucketedFold(ms.selector, ms.rangeMs, tr, name, foldRung)
+    }
+    // the rate and instant-value families route on the same alignment
+    // geometry (coarser steps merge q = step/bucket sub-partials)
+    if ((bucketable || rung.nonEmpty) &&
         (name == "rate" || name == "increase" || name == "delta"))
       return bucketedRate(ms.selector, ms.rangeMs, tr,
-        isCounter = name != "delta", isRate = name == "rate")
-    // irate/idelta materializability requires the table's per-bucket
-    // top-2 (lt2/lv2) columns: a LEGACY partials table without them
-    // would take the query-time bucketed path here (window rank +
-    // fan-out shuffles) where the general windowed path served it
-    // before — gate on needTop2 so such tables keep their plan, and
-    // only tables that can actually serve the route trigger it
-    val instantMaterializable = materializable &&
-      bestPartials(tr.stepMs, tr.startMs - ms.selector.offsetMs,
-        needTop2 = true).nonEmpty
-    if ((bucketable || instantMaterializable) &&
+        isCounter = name != "delta", isRate = name == "rate", rung)
+    if ((bucketable || rung.nonEmpty) &&
         (name == "irate" || name == "idelta"))
       return bucketedInstant(ms.selector, ms.rangeMs, tr,
-        isRate = name == "irate")
-
+        isRate = name == "irate", rung)
     // none of the accelerated routes fired: the general windowed path
     countRoute("raw_general")
     lazy val win = windowed(ms.selector, ms.rangeMs, tr)
@@ -2340,7 +2192,7 @@ object PromQLEngine {
 
   /** Minimum estimated samples per (series, rung-bucket) for a
     * TUMBLING (m = 1) fold to read a materialized rung instead of
-    * folding raw samples directly (see `foldRungDense`). 3.0 =
+    * folding raw samples directly (see `foldRungPays`). 3.0 =
     * meaningful compression with hysteresis toward the single-stage
     * raw plan; production scrape cadence (15 s samples, 1 h rungs ≈
     * 240/bucket) clears it by orders of magnitude, the sparse

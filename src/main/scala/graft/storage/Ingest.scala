@@ -1050,42 +1050,4 @@ object Ingest {
         appendOnce(batch, path, checkpoint, id); () }
       .start()
   }
-
-  /** Streaming step-aligned pre-aggregation: a watermarked windowed
-    * aggregation maintains one partial row (count/sum/min/max) per
-    * (series, bucket) — the same partial shape the query engine's
-    * bucketed fold path consumes, but materialized at INGEST time so
-    * range queries over cold history never touch raw samples. Late
-    * data within `lateness` folds into its bucket; later-than-that is
-    * dropped by the watermark (the reference's head-window
-    * out-of-bounds rejection, `tsdb/head.go:480-489`). Append mode
-    * emits a bucket exactly once, when the watermark passes it. */
-  def streamBucketed(edge: Dataset[WriteSample], path: String,
-      checkpoint: String, bucketMs: Long,
-      lateness: String = "10 minutes"): StreamingQuery =
-    canonicalize(edge)
-      .filter(!col("stale"))
-      .withColumn("ets", timestamp_millis(col("t")))
-      .withWatermark("ets", lateness)
-      .groupBy(Samples.sigExpr(col("labels")).as("sig"),
-        window(col("ets"), s"$bucketMs milliseconds").as("w"))
-      .agg(graft.exec.FirstLabels.first(col("labels")).as("_l0"),
-        count(lit(1)).as("cnt"), sum(col("v")).as("sum"),
-        min(col("v")).as("mn"), max(col("v")).as("mx"))
-      // entry-sort AFTER the aggregation: equal sig ⇒ equal map
-      // content, so canonicalizing the order makes the emitted row
-      // independent of which input first() saw (same argument and
-      // same per-group cost as the batch dedup path)
-      .withColumn("labels",
-        map_from_entries(array_sort(map_entries(col("_l0")))))
-      .select(col("sig"), col("labels"),
-        unix_millis(col("w.start")).as("bucket_start"),
-        col("cnt"), col("sum"), col("mn"), col("mx"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", path)
-      .start()
 }

@@ -49,10 +49,9 @@ object LadderBench {
 
     val eRaw = new PromQLEngine(spark, raw)
     val eFine = new PromQLEngine(spark, raw,
-      foldPartials = Some((p1m, 60000L)))
+      partialsLadder = Seq((p1m, 60000L)))
     val eLadder = new PromQLEngine(spark, raw,
-      foldPartials = Some((p1m, 60000L)),
-      partialsLadder = Seq((p1h, 3600000L)))
+      partialsLadder = Seq((p1m, 60000L), (p1h, 3600000L)))
     val h = 3600000L
     val (start, end, step) = (6 * h, 47 * h, h)
     def med3(f: => Unit): Double = {

@@ -133,8 +133,7 @@ object TierScaleBench {
 
     val raw = new PromQLEngine(spark, samples)
     val tiered = new PromQLEngine(spark, samples,
-      foldPartials = Some((hourlyP, HOUR)),
-      partialsLadder = Seq((dailyP, DAY)),
+      partialsLadder = Seq((hourlyP, HOUR), (dailyP, DAY)),
       seriesIndex = Some(index))
 
     println(f"${"row"}%-16s ${"raw-warm"}%9s ${"tier-warm"}%9s  route")

@@ -56,8 +56,8 @@ class BenchFormatSpec extends AnyFunSuite {
     // each window half carries its accepted probe ratio + retry count
     // (r14: the r13 qps collapse was unadjudicable from the artifact)
     // and a 0/1 stormed flag (r15: redraws exhausted while still hot)
-    assert(full.contains("\"qps_windows\":[[40.00,30.00,1.05,1.10,0,0,0,0]," +
-      "[42.50,31.00,1.20,2.45,1,2,0,1]]"))
+    assert(full.contains("\"qps_windows\":[[40.00,30.00,1.05,1.10,0,0,0,0,0,0]," +
+      "[42.50,31.00,1.20,2.45,1,2,0,1,0,0]]"))
     // r16: any stormed half ⇒ the TOP-LEVEL throughput maxima carry
     // the flag too (the headline figures are maxima over the windows,
     // so one hot half can be the shipped number)
@@ -120,6 +120,24 @@ class BenchFormatSpec extends AnyFunSuite {
       0.91, 2.0, 3.0, "0.1")
     assert(!line.contains("failed"))
     assert(line.startsWith("{\"metric\":\"total\",\"value\":0.51,"))
+  }
+
+  test("a qps window whose queries threw carries its light- and " +
+      "heavy-thread failure counts; the stdout line keeps its shape") {
+    // a heavy query that throws at once frees its slots: the mixed
+    // figure then reads as light-only throughput, and only the failure
+    // count tells the two apart
+    val full = BenchFormat.fullJson(Nil, 0.0, 41.0, 38.5, "0.1", 0.041,
+      qpsWindows = Seq(
+        BenchFormat.QpsWindow(40.0, 38.5, 1.05, 1.10, heavyFailed = 412),
+        BenchFormat.QpsWindow(41.0, 30.0, 1.02, 1.04, lightFailed = 3)))
+    assert(full.contains("\"qps_windows\":[[40.00,38.50,1.05,1.10,0,0,0,0," +
+      "0,412],[41.00,30.00,1.02,1.04,0,0,0,0,3,0]]"))
+    val line = BenchFormat.line(Seq(("f1_rate", 0.9, 0.5)), 0.9, 41.0,
+      38.5, "0.1")
+    assert(line == "{\"metric\":\"total\",\"value\":0.50,\"unit\":" +
+      "\"sec\",\"queries\":{\"f1\":0.50},\"cold_sec\":0.90," +
+      "\"instant_qps\":41.00,\"mixed_qps\":38.50,\"sf\":0.1}")
   }
 
   test("calibration probe does fixed work in bounded time") {

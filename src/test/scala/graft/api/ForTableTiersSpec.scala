@@ -53,7 +53,7 @@ class ForTableTiersSpec extends SparkTestBase {
       // the swapped-in engine carries both tiers
       val e1 = tApi.servingEngine
       assert(e1.hasSeriesIndex, "swapped engine lost the series index")
-      assert(e1.allPartials.map(_._2) == Seq(5 * m),
+      assert(e1.partialsLadder.map(_._2) == Seq(5 * m),
         "swapped engine lost the partials rung")
 
       // s13 routing proof: the matcher resolves from the on-disk index
@@ -191,7 +191,7 @@ class ForTableTiersSpec extends SparkTestBase {
       // ...and the serving engine must NOT route to the stale rungs —
       // raw-path answers stay correct for the deferred writes' points
       val eMid = tApi.servingEngine
-      assert(eMid.allPartials.isEmpty,
+      assert(eMid.partialsLadder.isEmpty,
         "engine bound rungs that lag the table")
       val rawMid = new PromQLEngine(spark, Ingest.readTable(spark, path))
       val aMid = bits(rawMid, "sum_over_time(db_m[10m])", 0, 20 * m, 5 * m)
@@ -206,7 +206,7 @@ class ForTableTiersSpec extends SparkTestBase {
       assert(tApi.rollupIncrementalMergeCount == 1,
         "debounced flush took the volume-coupled full refold")
       assert(new java.io.File(s"$path/_tiers_ok").exists())
-      assert(tApi.servingEngine.allPartials.map(_._2) == Seq(5 * m),
+      assert(tApi.servingEngine.partialsLadder.map(_._2) == Seq(5 * m),
         "post-refresh engine did not rebind the rungs")
       write(31, 40); write(41, 50); write(51, 60) // writes 4..6
       write(61, 70); write(71, 80) // writes 7..8: deferred again
@@ -221,7 +221,7 @@ class ForTableTiersSpec extends SparkTestBase {
       // after quiesce the ladder-routed answers are bit-equal to raw
       // over the FULL written range (all 8 writes' points included)
       val e = tApi.servingEngine
-      assert(e.allPartials.nonEmpty)
+      assert(e.partialsLadder.nonEmpty)
       val raw = new PromQLEngine(spark, Ingest.readTable(spark, path))
       val a = bits(raw, "sum_over_time(db_m[10m])", 0, 80 * m, 5 * m)
       val b = bits(e, "sum_over_time(db_m[10m])", 0, 80 * m, 5 * m)
@@ -398,7 +398,7 @@ class ForTableTiersSpec extends SparkTestBase {
         "healed index missed the failed batch's series")
       // the served engine answers for the orphan series bit-equal to raw
       val e = tApi.servingEngine
-      assert(e.hasSeriesIndex && e.allPartials.nonEmpty)
+      assert(e.hasSeriesIndex && e.partialsLadder.nonEmpty)
       val raw = new PromQLEngine(spark, Ingest.readTable(spark, path))
       val q = """sum_over_time(fh{k="orphan"}[10m])"""
       val a = bits(raw, q, 0, 30 * m, 5 * m)
@@ -646,7 +646,7 @@ class ForTableTiersSpec extends SparkTestBase {
     val tApi2 = HttpApi.forTable(spark, path, rollups = Seq(5 * m))
     try {
       val e = tApi2.servingEngine
-      assert(e.hasSeriesIndex && e.allPartials.nonEmpty)
+      assert(e.hasSeriesIndex && e.partialsLadder.nonEmpty)
       // the crashed batch's series is matcher-resolvable via the index
       assert(spark.read.parquet(s"$path/_index")
         .filter(col("labels")("k") === "crash").count() == 1)

@@ -1,5 +1,7 @@
 package graft.exec
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -42,7 +44,7 @@ class PartialsRoutingSpec extends SparkTestBase {
       "for every fold function (NaN and boundary samples included)") {
     val raw = new PromQLEngine(spark, fixture)
     val routed = new PromQLEngine(spark, fixture,
-      foldPartials = Some((Ingest.foldPartials(fixture, 5 * m), 5 * m)))
+      partialsLadder = Seq((Ingest.foldPartials(fixture, 5 * m), 5 * m)))
     for (f <- funcs; offset <- Seq("", " offset 10m")) {
       val q = s"$f(pm[10m]$offset)"
       // start 20m, end 115m, step 5m: aligned to the 5m buckets
@@ -77,7 +79,7 @@ class PartialsRoutingSpec extends SparkTestBase {
         (0 to 240).map(i => (i * 30000L, 7.0)))
     val raw = new PromQLEngine(spark, withCtr)
     val routed = new PromQLEngine(spark, withCtr,
-      foldPartials = Some((Ingest.foldPartials(withCtr, 5 * m), 5 * m)))
+      partialsLadder = Seq((Ingest.foldPartials(withCtr, 5 * m), 5 * m)))
     for (f <- Seq("rate", "increase", "delta");
         w <- Seq("5m", "10m"); offset <- Seq("", " offset 10m")) {
       val q = s"$f(pm[$w]$offset)"
@@ -102,7 +104,7 @@ class PartialsRoutingSpec extends SparkTestBase {
         (0 to 12).map(i => (i * 600000L + 90000L, (i * 3).toDouble)))
     val raw = new PromQLEngine(spark, withCtr)
     val routed = new PromQLEngine(spark, withCtr,
-      foldPartials = Some((Ingest.foldPartials(withCtr, 5 * m), 5 * m)))
+      partialsLadder = Seq((Ingest.foldPartials(withCtr, 5 * m), 5 * m)))
     // step 10m and 15m over 5m buckets: q = 2 and q = 3
     for (f <- Seq("rate", "increase", "delta");
         (w, step) <- Seq(("20m", 10 * m), ("30m", 15 * m), ("10m", 10 * m));
@@ -116,7 +118,7 @@ class PartialsRoutingSpec extends SparkTestBase {
     // routing proof: empty partials -> empty result at the coarser step
     val empty = Ingest.foldPartials(withCtr.filter(lit(false)), 5 * m)
     val e = new PromQLEngine(spark, withCtr,
-      foldPartials = Some((empty, 5 * m)))
+      partialsLadder = Seq((empty, 5 * m)))
     assert(e.rangeQuery("rate(pm[10m])", 20 * m, 115 * m, 5 * m)
       .count() == 0)
     assert(e.rangeQuery("increase(pm[20m])", 20 * m, 110 * m, 10 * m)
@@ -140,7 +142,7 @@ class PartialsRoutingSpec extends SparkTestBase {
         (0 to 12).map(i => (i * 600000L + 90000L, (i * 3).toDouble)))
     val raw = new PromQLEngine(spark, withCtr)
     val routed = new PromQLEngine(spark, withCtr,
-      foldPartials = Some((Ingest.foldPartials(withCtr, 5 * m), 5 * m)))
+      partialsLadder = Seq((Ingest.foldPartials(withCtr, 5 * m), 5 * m)))
     for (f <- Seq("irate", "idelta");
         (w, step) <- Seq(("10m", 5 * m), ("20m", 10 * m), ("30m", 15 * m));
         offset <- Seq("", " offset 10m")) {
@@ -153,19 +155,11 @@ class PartialsRoutingSpec extends SparkTestBase {
     // routing proof: empty partials -> empty result on aligned grids
     val empty = Ingest.foldPartials(withCtr.filter(lit(false)), 5 * m)
     val e = new PromQLEngine(spark, withCtr,
-      foldPartials = Some((empty, 5 * m)))
+      partialsLadder = Seq((empty, 5 * m)))
     assert(e.rangeQuery("irate(pm[10m])", 20 * m, 115 * m, 5 * m)
       .count() == 0)
     assert(e.rangeQuery("idelta(pm[20m])", 20 * m, 110 * m, 10 * m)
       .count() == 0)
-    // a table WITHOUT the top-2 columns falls back to raw and stays
-    // correct (pre-existing materializations keep working)
-    val legacy = new PromQLEngine(spark, withCtr,
-      foldPartials = Some((Ingest.foldPartials(withCtr, 5 * m)
-        .drop("lt2", "lv2"), 5 * m)))
-    val q = "irate(pm[10m])"
-    assert(results(raw, q, 30 * m, 110 * m, 5 * m) ==
-      results(legacy, q, 30 * m, 110 * m, 5 * m))
   }
 
   test("instant selectors route at step == bucket; staleness markers " +
@@ -181,7 +175,7 @@ class PartialsRoutingSpec extends SparkTestBase {
           ((120 * 30000L, graft.model.Samples.StaleNaN))))
     val raw = new PromQLEngine(spark, withStale)
     val routed = new PromQLEngine(spark, withStale,
-      foldPartials = Some((Ingest.foldPartials(withStale, 5 * m), 5 * m)))
+      partialsLadder = Seq((Ingest.foldPartials(withStale, 5 * m), 5 * m)))
     for (q <- Seq("pm", """pm{s="gone"}""", "pm offset 10m")) {
       val a = results(raw, q, 20 * m, 115 * m, 5 * m)
       val b = results(routed, q, 20 * m, 115 * m, 5 * m)
@@ -195,14 +189,14 @@ class PartialsRoutingSpec extends SparkTestBase {
     // routing proof: empty partials -> empty aligned instant selector
     val empty = Ingest.foldPartials(withStale.filter(lit(false)), 5 * m)
     val e = new PromQLEngine(spark, withStale,
-      foldPartials = Some((empty, 5 * m)))
+      partialsLadder = Seq((empty, 5 * m)))
     assert(e.rangeQuery("pm", 20 * m, 115 * m, 5 * m).count() == 0)
     // q = 5: a 1m rung serving 5m steps — the default-lookback shape a
     // production 1m rollup serves. Multiple sub-bucket rows per step
     // bucket, at-start gating, and the staleness winner all run at
     // q > 1 (the q = 1 tests above never reach that path).
     val routed1m = new PromQLEngine(spark, withStale,
-      foldPartials = Some((Ingest.foldPartials(withStale, m), m)))
+      partialsLadder = Seq((Ingest.foldPartials(withStale, m), m)))
     for (q <- Seq("pm", """pm{s="gone"}""", "pm offset 10m")) {
       val a = results(raw, q, 20 * m, 115 * m, 5 * m)
       val b = results(routed1m, q, 20 * m, 115 * m, 5 * m)
@@ -212,7 +206,7 @@ class PartialsRoutingSpec extends SparkTestBase {
     // routing proof at q = 5: empty 1m rung -> empty result
     val empty1m = Ingest.foldPartials(withStale.filter(lit(false)), m)
     assert(new PromQLEngine(spark, withStale,
-        foldPartials = Some((empty1m, m)))
+        partialsLadder = Seq((empty1m, m)))
       .rangeQuery("pm", 20 * m, 115 * m, 5 * m).count() == 0)
   }
 
@@ -223,8 +217,7 @@ class PartialsRoutingSpec extends SparkTestBase {
     val p15 = Ingest.foldPartials(fixture, 15 * m)
     // both rungs bound: results identical to raw on every aligned grid
     val laddered = new PromQLEngine(spark, fixture,
-      foldPartials = Some((p5, 5 * m)),
-      partialsLadder = Seq((p15, 15 * m)))
+      partialsLadder = Seq((p5, 5 * m), (p15, 15 * m)))
     for (q <- Seq("sum_over_time(pm[30m])", "increase(pm[30m])",
         "irate(pm[30m])", "pm");
         step <- Seq(5 * m, 15 * m, 30 * m)) {
@@ -238,8 +231,7 @@ class PartialsRoutingSpec extends SparkTestBase {
     // step falls to the fine rung and sees data
     val emptyCoarse = Ingest.foldPartials(fixture.filter(lit(false)), 15 * m)
     val e = new PromQLEngine(spark, fixture,
-      foldPartials = Some((p5, 5 * m)),
-      partialsLadder = Seq((emptyCoarse, 15 * m)))
+      partialsLadder = Seq((p5, 5 * m), (emptyCoarse, 15 * m)))
     assert(e.rangeQuery("sum_over_time(pm[30m])", 30 * m, 105 * m, 15 * m)
       .count() == 0) // coarsest aligned rung (15m) chosen — and empty
     assert(e.rangeQuery("sum_over_time(pm[30m])", 30 * m, 105 * m, 5 * m)
@@ -264,7 +256,7 @@ class PartialsRoutingSpec extends SparkTestBase {
     // and the MATERIALIZED route (6 steps < 8 forces raw onto the UDF
     // path, so this also pins materialized == sequential-scan formula)
     val routed = new PromQLEngine(spark, fixture,
-      foldPartials = Some((Ingest.foldPartials(fixture, 15 * m), 15 * m)))
+      partialsLadder = Seq((Ingest.foldPartials(fixture, 15 * m), 15 * m)))
     val q = "increase(pm[30m])"
     assert(results(raw, q, 30 * m, 105 * m, 15 * m) ==
       results(routed, q, 30 * m, 105 * m, 15 * m))
@@ -284,7 +276,7 @@ class PartialsRoutingSpec extends SparkTestBase {
     // that declines to raw sees data — route proof beyond counters
     val emptyRung = Ingest.foldPartials(sparse.filter(lit(false)), 5 * m)
     val e = new PromQLEngine(spark, sparse,
-      foldPartials = Some((emptyRung, 5 * m)))
+      partialsLadder = Seq((emptyRung, 5 * m)))
     // m = 1: the density gate declines -> raw path -> rows
     assert(e.rangeQuery("sum_over_time(pm[5m])", 25 * m, 125 * m, 5 * m)
       .count() > 0)
@@ -299,7 +291,7 @@ class PartialsRoutingSpec extends SparkTestBase {
     // the rung compresses -> routed
     val emptyDense = Ingest.foldPartials(fixture.filter(lit(false)), 5 * m)
     val d = new PromQLEngine(spark, fixture,
-      foldPartials = Some((emptyDense, 5 * m)))
+      partialsLadder = Seq((emptyDense, 5 * m)))
     assert(d.rangeQuery("sum_over_time(pm[5m])", 20 * m, 115 * m, 5 * m)
       .count() == 0)
     assert(Option(d.routeHits.get(s"fold_partials:${5 * m}"))
@@ -308,7 +300,7 @@ class PartialsRoutingSpec extends SparkTestBase {
     // a declined route is bit-equal to the raw engine (pure cost gate)
     val rawSparse = new PromQLEngine(spark, sparse)
     val full = new PromQLEngine(spark, sparse,
-      foldPartials = Some((Ingest.foldPartials(sparse, 5 * m), 5 * m)))
+      partialsLadder = Seq((Ingest.foldPartials(sparse, 5 * m), 5 * m)))
     val q = "count_over_time(pm[5m])"
     assert(results(rawSparse, q, 25 * m, 125 * m, 5 * m) ==
       results(full, q, 25 * m, 125 * m, 5 * m))
@@ -318,13 +310,13 @@ class PartialsRoutingSpec extends SparkTestBase {
     val raw = new PromQLEngine(spark, fixture)
     // 2m buckets do not divide the 5m step — must fall back
     val routed = new PromQLEngine(spark, fixture,
-      foldPartials = Some((Ingest.foldPartials(fixture, 2 * m), 2 * m)))
+      partialsLadder = Seq((Ingest.foldPartials(fixture, 2 * m), 2 * m)))
     val q = "sum_over_time(pm[10m])"
     assert(results(raw, q, 20 * m, 115 * m, 5 * m) ==
       results(routed, q, 20 * m, 115 * m, 5 * m))
     // unaligned start (20m30s on a 5m-bucket table) also falls back
     val routed5 = new PromQLEngine(spark, fixture,
-      foldPartials = Some((Ingest.foldPartials(fixture, 5 * m), 5 * m)))
+      partialsLadder = Seq((Ingest.foldPartials(fixture, 5 * m), 5 * m)))
     assert(results(raw, q, 20 * m + 30000, 115 * m + 30000, 5 * m) ==
       results(routed5, q, 20 * m + 30000, 115 * m + 30000, 5 * m))
   }
@@ -336,10 +328,72 @@ class PartialsRoutingSpec extends SparkTestBase {
     val empty = Ingest.foldPartials(
       fixture.filter(lit(false)), 5 * m)
     val e = new PromQLEngine(spark, fixture,
-      foldPartials = Some((empty, 5 * m)))
+      partialsLadder = Seq((empty, 5 * m)))
     assert(e.rangeQuery("sum_over_time(pm[10m])",
       20 * m, 115 * m, 5 * m).count() == 0)
     assert(e.rangeQuery("sum_over_time(pm[10m])",
       20 * m + 30000, 115 * m + 30000, 5 * m).count() > 0)
+  }
+
+  test("seeded random inputs: every rung route equals the raw engine " +
+      "bit for bit, and each case is served by the rung it targets") {
+    val rnd = new scala.util.Random(5)
+    // (case, bucket, step = q × bucket, window = k × step, offset,
+    // start, end) on a bucket-aligned grid
+    val cases = (1 to 12).map { c =>
+      val bkt = if (rnd.nextBoolean()) m else 5 * m
+      val step = (1 + rnd.nextInt(3)) * bkt
+      val w = (1 + rnd.nextInt(3)) * step
+      val off = if (rnd.nextBoolean()) 0L else bkt
+      val start = 30 * m + rnd.nextInt(4) * step
+      (c, bkt, step, w, off, start, start + (5 + rnd.nextInt(6)) * step)
+    }
+    // 2-3 counters per case at a 10 s cadence over 4 h with resets,
+    // ~10 % gaps, rare NaNs and a trailing staleness marker. Integer
+    // counter values keep the floating-point reassociation caveat of
+    // the rung merge (last-ulp sums) out of the comparison.
+    val df = samplesDF(cases.flatMap { cs =>
+      (0 until 2 + rnd.nextInt(2)).map { s =>
+        var v = rnd.nextInt(50).toLong
+        val pts = (0L until 240 * m by 10000L).flatMap { t =>
+          if (rnd.nextInt(10) == 0) None
+          else {
+            v = if (rnd.nextInt(60) == 0) rnd.nextInt(5).toLong
+              else v + rnd.nextInt(7)
+            Some(t -> (if (rnd.nextInt(150) == 0) Double.NaN else v.toDouble))
+          }
+        }
+        Map("__name__" -> "pr", "c" -> s"${cs._1}", "s" -> s"s$s") ->
+          (pts :+ (pts.last._1 + 10000L -> graft.model.Samples.StaleNaN))
+      }
+    }: _*).cache()
+    // one cached rung per bucket size, shared by every case: the ladder
+    // picks the case's own bucket, the coarsest one dividing its step
+    val ladder = Seq(m, 5 * m).map(b => (Ingest.foldPartials(df, b).cache(), b))
+    try cases.foreach { case (c, bkt, step, w, off, start, end) =>
+      // the instant selector's lookback is the window too, so its
+      // rung route aligns on every drawn step
+      val raw = new PromQLEngine(spark, df, lookbackMs = w)
+      val routed = new PromQLEngine(spark, df, lookbackMs = w,
+        partialsLadder = ladder)
+      val o = if (off == 0) "" else s" offset ${off / m}m"
+      val vs = s"""pr{c="$c"}$o"""
+      val rs = s"""pr{c="$c"}[${w / m}m]$o"""
+      for ((q, route) <- Seq(s"sum_over_time($rs)" -> "fold_partials",
+          s"rate($rs)" -> "rate_partials",
+          s"irate($rs)" -> "instant_partials", vs -> "select_partials")) {
+        val ctx = s"case $c: $q bucket=${bkt / m}m step=${step / m}m"
+        val a = results(raw, q, start, end, step)
+        assert(a.nonEmpty, ctx)
+        assert(a == results(routed, q, start, end, step), s"$ctx diverged")
+        assert(Option(routed.routeHits.get(s"$route:$bkt")).map(_.get())
+          .contains(1L), s"$ctx was not served by $route:$bkt")
+      }
+      assert(routed.routeHits.keySet.asScala.forall(_.endsWith(s":$bkt")),
+        s"case $c: an unrouted evaluation ${routed.routeHits}")
+    } finally {
+      ladder.foreach(_._1.unpersist())
+      df.unpersist()
+    }
   }
 }

@@ -151,7 +151,7 @@ class SeriesIndexSpec extends SparkTestBase {
     graft.storage.ChunkStore.write(fixture, dir)
     val decoded = graft.storage.ChunkStore.read(spark, dir)
     val eng = new PromQLEngine(spark, decoded,
-      foldPartials = Some((Ingest.foldPartials(decoded, 5 * m), 5 * m)),
+      partialsLadder = Seq((Ingest.foldPartials(decoded, 5 * m), 5 * m)),
       seriesIndex = Some(Ingest.seriesIndex(decoded)))
     val (plain, _) = engines
     for (q <- Seq("""sum by (job) (count_over_time(px[10m]))""",

@@ -579,28 +579,6 @@ class IngestSpec extends SparkTestBase {
       Seq(3.0))
   }
 
-  test("streaming watermarked pre-aggregation emits finalized buckets") {
-    val path = tmp("ingest-bkt")
-    val ckpt = tmp("ingest-bkt-ckpt")
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Ingest.WriteSample]
-    val m = 60000L
-    // samples across 30 minutes; 1-minute lateness → buckets up to
-    // watermark (29m) finalize; the last bucket stays open
-    mem.addData((0 to 30).map(k =>
-      Ingest.WriteSample(Map("__name__" -> "b"), k * m, k.toDouble)): _*)
-    val q = Ingest.streamBucketed(mem.toDS(), path, ckpt,
-      bucketMs = 5 * m, lateness = "1 minute")
-    q.awaitTermination(120000)
-    val rows = spark.read.parquet(path)
-      .orderBy("bucket_start").collect()
-    assert(rows.length == 5) // buckets [0,5m) .. [20m,25m) finalized
-    val first = rows.head
-    assert(first.getAs[Long]("cnt") == 5)
-    assert(first.getAs[Double]("sum") == 0.0 + 1 + 2 + 3 + 4)
-    assert(first.getAs[Double]("mx") == 4.0)
-  }
-
   test("JSON-lines batch source parses the write wire format") {
     val dir = tmp("jsonl")
     java.nio.file.Files.writeString(
