@@ -981,13 +981,18 @@ class HttpApi(spark: SparkSession, engine0: PromQLEngine,
     // routing is silent by design (results are bit-identical either
     // way), so this counter is how an operator verifies dashboards
     // actually hit the materialized rungs
-    val routes = engine.routeHits
-    if (!routes.isEmpty) {
+    // single_task counts queries planned as one Spark task (small
+    // tables), beside the routes that served their selectors
+    import scala.jdk.CollectionConverters._
+    val singleTask = engine.singleTaskQueries.get()
+    val routes = engine.routeHits.asScala.toSeq.map { case (k, n) => k -> n.get() } ++
+      (if (singleTask > 0) Seq("single_task" -> singleTask) else Nil)
+    if (routes.nonEmpty) {
       sb.append("# HELP graft_engine_route_total Range-function " +
-        "evaluations served per acceleration route.\n")
+        "evaluations served per acceleration route; single_task counts " +
+        "queries planned as one Spark task.\n")
       sb.append("# TYPE graft_engine_route_total counter\n")
-      import scala.jdk.CollectionConverters._
-      routes.asScala.toSeq.sortBy(_._1).foreach { case (key, n) =>
+      routes.sortBy(_._1).foreach { case (key, n) =>
         val (route, bucket) = key.split(':') match {
           case Array(r, b) => (r, b)
           case _ => (key, "")
@@ -995,7 +1000,7 @@ class HttpApi(spark: SparkSession, engine0: PromQLEngine,
         val lbl = if (bucket.nonEmpty)
           s"""{route="$route",bucket_ms="$bucket"}"""
         else s"""{route="$route"}"""
-        sb.append(s"graft_engine_route_total$lbl ${n.get()}\n")
+        sb.append(s"graft_engine_route_total$lbl $n\n")
       }
     }
     // LLM-operator guard counters (r7 advice: a recall-affecting drop

@@ -1,8 +1,12 @@
 package graft.exec
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 import graft.model.Samples
 import graft.promql.Ast._
@@ -26,6 +30,21 @@ import graft.promql.Parser
   *   st LONG         underlying sample timestamp, ms (for `timestamp()`)
   *   v DOUBLE        value
   * Scalar DataFrames carry (t, v); constants additionally fold driver-side.
+  *
+  * Small tables run each query as ONE Spark task. The gate
+  * ([[singleTask]]) is one lazy predicate per table state, kept in
+  * the [[tableSpan]] memo: a bound chunk tier whose envelope columns
+  * count at most `singleTaskMaxSamples` samples (without a chunk tier
+  * the gate has nothing to read short of a sample scan, and every plan
+  * is the parallel one). Below it the leaves (selector scans, rung
+  * slices, the step grid) are coalesced to one partition, so no
+  * shuffle Exchange is planned, and the series dimension is collected
+  * to the driver once per engine (an engine serves one table state)
+  * and broadcast once as the series catalog. Those are the same
+  * `(sig, labels)` rows the label rejoin's BroadcastExchange collects
+  * on every query; with the catalog, label rejoins probe it in task
+  * and series-dimension questions answer with no job. Above the bound
+  * every plan is the parallel one.
   */
 class PromQLEngine(
     spark: SparkSession,
@@ -118,7 +137,7 @@ class PromQLEngine(
   private val scanSamples: DataFrame = chunkTier.getOrElse(samples)
   private def scanSource: DataFrame = {
     if (chunkTier.isDefined) countRoute("chunk_tier")
-    scanSamples
+    oneTask(scanSamples)
   }
 
   private val storedSig = scanSamples.columns.contains(SIG)
@@ -136,7 +155,7 @@ class PromQLEngine(
     // points; the r13 boundary golden pins this off-by-one
     require(numSteps - 1 <= maxPointsPerSeries,
       "exceeded maximum resolution of 11,000 points per timeseries")
-    lazy val stepsDF: DataFrame = spark.range(numSteps)
+    lazy val stepsDF: DataFrame = oneTask(spark.range(numSteps).toDF())
       .select((lit(startMs) + col("id") * stepMs).as("t"))
   }
 
@@ -162,9 +181,14 @@ class PromQLEngine(
     }
     // unbounded series(): a pure series-dimension question — answer
     // from the postings index alone, no sample scan (the reference's
-    // index-only path, tsdb/querier.go)
+    // index-only path, tsdb/querier.go); on a small table from the
+    // driver-side series catalog, with no Spark job at all
+    val unbounded = startMs.isEmpty && endMs.isEmpty
+    if (unbounded && singleTask)
+      return catalog.matching(allMatchers(vs).map(matcherCond).reduce(_ && _))
+        .map(_.getMap[String, String](1).toMap).toSeq.distinct
     var df = idxCached match {
-      case Some(idx) if startMs.isEmpty && endMs.isEmpty =>
+      case Some(idx) if unbounded =>
         idx.filter(allMatchers(vs).map(matcherCond).reduce(_ && _))
       case _ => applyMatchers(scanSource, allMatchers(vs))
     }
@@ -235,8 +259,11 @@ class PromQLEngine(
     labelValuesMemo.computeIfAbsent(name, n =>
       // a pure series-dimension question: with a postings index the
       // answer never touches the sample volume (the reference reads
-      // it from the index too, tsdb/index.go LabelValues)
-      idxCached.getOrElse(samples)
+      // it from the index too, tsdb/index.go LabelValues); on a small
+      // table the driver-side series catalog answers it, no Spark job
+      if (singleTask)
+        catalog.labels.flatMap(l => Option(l.getOrElse(n, null))).distinct.toSeq
+      else idxCached.getOrElse(samples)
         .select(col(L).getItem(n).as("v"))
         .filter(col("v").isNotNull).distinct()
         .collect().map(_.getString(0)).toSeq)
@@ -383,7 +410,9 @@ class PromQLEngine(
     * the input of the `index_semi` selectivity gate. One cheap
     * aggregate over the series index — NOTE: a Spark ACTION at query
     * construction time, paid once per novel (index state, matcher
-    * set) and memoized in the bounded LRU companion cache. */
+    * set) and memoized in the bounded LRU companion cache. On a small
+    * table the series catalog counts it on the driver instead (the
+    * same rows, no job). */
   private def indexMatchedFraction(idx: DataFrame,
       ms: Seq[LabelMatcher], cond: Column): Double = {
     // probe OUTSIDE the map mutex: the aggregate is a Spark action
@@ -397,9 +426,13 @@ class PromQLEngine(
     val hit = PromQLEngine.indexSelectivityCache.get(key)
     if (hit != null) hit.doubleValue
     else {
-      val r = idx.agg(count(lit(1)), count(when(cond, lit(1)))).head()
-      val total = r.getLong(0)
-      val f = if (total == 0) 0.0 else r.getLong(1).toDouble / total
+      val (total, matched) =
+        if (singleTask) (catalog.size.toLong, catalog.matching(cond).length.toLong)
+        else {
+          val r = idx.agg(count(lit(1)), count(when(cond, lit(1)))).head()
+          (r.getLong(0), r.getLong(1))
+        }
+      val f = if (total == 0) 0.0 else matched.toDouble / total
       val prev = PromQLEngine.indexSelectivityCache.putIfAbsent(key, f)
       if (prev != null) prev.doubleValue else f
     }
@@ -511,7 +544,7 @@ class PromQLEngine(
   private def rungSlice(tbl: DataFrame, vs: VectorSelector, w: Long,
       tr: EvalRange): DataFrame = {
     val anchor = tr.startMs - vs.offsetMs
-    tbl
+    oneTask(tbl)
       .filter(allMatchers(vs).map(matcherCond).reduce(_ && _))
       .filter(col("bucket_start") >= anchor - w &&
         col("bucket_start") <= tr.endMs - vs.offsetMs)
@@ -656,9 +689,65 @@ class PromQLEngine(
           .cache())
   }
 
-  /** Rejoin full label sets onto a sig-keyed aggregated frame. */
+  /** Rejoin full label sets onto a sig-keyed aggregated frame. On a
+    * small table this is a probe of the broadcast series catalog
+    * ([[graft.functions.CatalogLabels]]) inside the one task, with the
+    * join's inner semantics: a sig the catalog lacks explodes to no
+    * row. */
   private def joinLabels(aggd: DataFrame): DataFrame =
-    aggd.join(seriesDim, SIG)
+    if (singleTask) {
+      val c = catalog
+      aggd.select(col("*"),
+        explode(graft.functions.CatalogLabels(col(SIG), c.bc, c.labelsType)).as(L))
+    } else aggd.join(seriesDim, SIG)
+
+  /** The series catalog: every `(sig, labels)` row of [[seriesDim]] on
+    * the driver, broadcast once. It is the same rows the label
+    * rejoin's BroadcastExchange collects on every query of a small
+    * table, collected once per engine — an engine serves one table
+    * state — so label rejoins probe it in-task and the series-
+    * dimension questions (label values, unbounded series(), the
+    * index_semi selectivity count) answer without a Spark job. Built
+    * on the first query that needs it, never on the write or swap
+    * path; only small tables (see [[singleTask]]) build one. */
+  private final class SeriesCatalog(dim: DataFrame) {
+    val labelsType: DataType = dim.schema(L).dataType
+    private val rows: Array[InternalRow] =
+      dim.select(col(SIG), col(L)).queryExecution.executedPlan.executeCollect()
+    val size: Int = rows.length
+    val labels: Array[Map[String, String]] = rows.map(r =>
+      CatalystTypeConverters.convertToScala(r.getMap(1), labelsType)
+        .asInstanceOf[scala.collection.Map[String, String]].toMap)
+    val bc: Broadcast[java.util.HashMap[java.lang.Long, ArrayData]] = {
+      val m = new java.util.HashMap[java.lang.Long, ArrayData](size * 2)
+      rows.foreach(r => m.put(r.getLong(0),
+        graft.functions.CatalogLabels.entry(r.getMap(1).copy())))
+      spark.sparkContext.broadcast(m)
+    }
+    /** (sig, labels) rows as a LocalRelation, so a matcher filter on
+      * it folds on the driver (ConvertToLocalRelation): no job. */
+    private lazy val frame: DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(rows.indices.map(i =>
+        Row(rows(i).getLong(0), labels(i))): _*),
+      StructType(Seq(StructField(SIG, LongType), StructField(L, labelsType))))
+    /** Catalog rows `cond` keeps, as (sig, labels) rows. */
+    def matching(cond: Column): Array[Row] = frame.filter(cond).collect()
+  }
+
+  // built on first use; concurrent first queries may each build one
+  // (same rows), and whichever catalog no plan references any more is
+  // reclaimed by Spark's ContextCleaner, as is the one a release drops
+  @volatile private var catalogV: SeriesCatalog = null
+
+  private def catalog: SeriesCatalog = {
+    val c = catalogV
+    if (c != null) c
+    else { val built = new SeriesCatalog(seriesDim); catalogV = built; built }
+  }
+
+  /** Spec surface: the catalog broadcast, once built. */
+  private[graft] def catalogBroadcast: Option[Broadcast[_]] =
+    Option(catalogV).map(_.bc)
 
   /** The bound series index, Spark-cached once per index STATE (plan
     * identity, like [[seriesDim]]). The index is series-cardinality —
@@ -675,21 +764,62 @@ class PromQLEngine(
     seriesIndex.map(idx => seriesIndexCache.computeIfAbsent(
       idx.queryExecution.analyzed.canonicalized, _ => idx.cache()))
 
-  /** Memoized (minT, maxT, rows, series) of the bound table — the
-    * inputs of the density cost model that picks between the sliding
-    * and explode fold routes. Keyed by the CANONICALIZED plan and
+  /** The chunk rows under the bound chunk tier: one row per ≤ 240
+    * samples carrying `n`, `min_t` and `max_t`, read without a
+    * decode. */
+  private lazy val chunkEnvelopes: Option[DataFrame] =
+    chunkTier.flatMap(graft.storage.ChunkStore.envelopes)
+
+  /** Memoized (minT, maxT, rows) of the bound table — the input of the
+    * [[singleTask]] gate and, with the series count, of the density
+    * cost model ([[tableStats]]). Keyed by the CANONICALIZED plan and
     * shared across engines (like [[seriesDim]]): a serving deployment
     * that swaps engines per write pays one probe per table STATE, not
-    * per engine object, and only when a sliding-candidate query shape
-    * actually arrives. */
-  private lazy val tableStats: Option[(Long, Long, Long, Long)] =
+    * per engine object. With a chunk tier bound the probe reads only
+    * its chunk envelopes (`min(min_t)`, `max(max_t)`, `sum(n)`), on
+    * the first query that state serves; without one it scans the raw
+    * `t` column, and only when a route choice asks for [[tableStats]]
+    * (the gate never does). Only route and plan choices read these,
+    * so their source never changes a result. */
+  private lazy val tableSpan: Option[(Long, Long, Long)] =
     tableStatsCache.computeIfAbsent(
       samples.queryExecution.analyzed.canonicalized, _ => {
-        val r = samples.agg(min(col(T)), max(col(T)), count(lit(1))).head()
+        val r = chunkEnvelopes match {
+          case Some(env) =>
+            env.agg(min(col("min_t")), max(col("max_t")), sum(col("n"))).head()
+          case None =>
+            samples.agg(min(col(T)), max(col(T)), count(lit(1))).head()
+        }
         if (r.isNullAt(0)) None
-        else Some((r.getLong(0), r.getLong(1), r.getLong(2),
-          seriesDim.count()))
+        else Some((r.getLong(0), r.getLong(1), r.getLong(2)))
       })
+
+  /** (minT, maxT, rows, series): [[tableSpan]] plus the series count,
+    * which a one-task table reads from the catalog (no job). */
+  private lazy val tableStats: Option[(Long, Long, Long, Long)] =
+    tableSpan.map { case (t0, t1, rows) =>
+      (t0, t1, rows,
+        if (singleTask) catalog.size.toLong else seriesDim.count())
+    }
+
+  /** The one-task gate: a chunk tier is bound and holds at most
+    * [[PromQLEngine.singleTaskMaxSamples]] samples (the gate reads
+    * only its envelopes, never the samples; an engine without a chunk
+    * tier keeps the parallel plan). Below it, every query runs as
+    * ONE Spark task: the leaves (selector scans, rung slices, the step
+    * grid) are coalesced to one partition, whose `SinglePartition`
+    * satisfies every later per-(sig, t) aggregate, window and sort-
+    * merge join, so no shuffle Exchange is planned and a query is one
+    * stage (plus one broadcast stage per vector-matching join that
+    * Spark broadcasts). On such a table each stage's fixed cost (job
+    * floor, AQE stage, whole-stage codegen) dominates, and one task
+    * does the work the parallel plan spreads over several. Above the
+    * bound every plan is the parallel one. */
+  private def singleTask: Boolean = chunkEnvelopes.isDefined &&
+    tableSpan.forall(_._3 <= singleTaskMaxSamples)
+
+  private def oneTask(df: DataFrame): DataFrame =
+    if (singleTask) df.coalesce(1) else df
 
   /** Density-aware route choice: sliding costs ~2×(steps + m) rows
     * per series regardless of window width; the explode route costs
@@ -755,6 +885,9 @@ class PromQLEngine(
       val k = idx.queryExecution.analyzed.canonicalized
       Option(seriesIndexCache.remove(k)).foreach(_.unpersist(false))
     }
+    // plans still running hold their own reference to the catalog
+    // broadcast; ContextCleaner reclaims it once none does
+    catalogV = null
   }
 
   /** groupBy that carries a labels map as part of the GROUPING KEY
@@ -808,9 +941,17 @@ class PromQLEngine(
       if (bucketMs > 0) s"$route:$bucketMs" else route,
       _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
 
+  /** Queries planned on the one-task plan (see [[singleTask]]),
+    * exported beside the route counters as
+    * `graft_engine_route_total{route="single_task"}`. Kept apart from
+    * [[routeHits]], whose entries are each one range-function or
+    * selector route, so route shares stay shares of routed work. */
+  private[graft] val singleTaskQueries = new java.util.concurrent.atomic.AtomicLong
+
   private def evalRoot(e: Expr, tr: EvalRange): Value = {
     memo.get().clear()
     aggMemo.get().clear()
+    if (singleTask) singleTaskQueries.incrementAndGet()
     eval(e, tr)
   }
 
@@ -2074,10 +2215,10 @@ object PromQLEngine {
   private val seriesIndexCache = new java.util.concurrent.ConcurrentHashMap[
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame]()
 
-  /** One density-stats probe per table state (see `tableStats`). */
+  /** One (minT, maxT, rows) probe per table state (see `tableSpan`). */
   private val tableStatsCache = new java.util.concurrent.ConcurrentHashMap[
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    Option[(Long, Long, Long, Long)]]()
+    Option[(Long, Long, Long)]]()
 
   /** Matched-fraction memo for the `index_semi` selectivity gate,
     * keyed by (index table state, matcher list) — one Double per
@@ -2208,4 +2349,13 @@ object PromQLEngine {
     * per-row plan. Tests override to force either regime on small
     * fixtures whose fractions are coarse. */
   @volatile private[exec] var indexSemiMaxFraction: Double = 0.10
+
+  /** Largest chunk-tier table state (samples) that runs each query as
+    * ONE Spark task (see `singleTask`) and answers series-dimension
+    * questions from the driver-side series catalog. Set from a
+    * crossover sweep of the dashboard refresh (SCALE.md §9), measured
+    * on 4 cores only: the one-task plan was faster up to 1.04M samples
+    * and slower at 1.38M. Tests pin it to 0 to assert the parallel
+    * plan shapes on small chunked fixtures. */
+  @volatile private[exec] var singleTaskMaxSamples: Long = 1000000L
 }

@@ -156,6 +156,18 @@ object ChunkStore {
       .filter(col("t") >= startMs && col("t") <= endMs)
   }
 
+  /** The chunk rows under a decoded frame from [[read]] — the
+    * `chunk_decode` Generate's child, with any envelope filters the
+    * ranged read applied — or None when `decoded` decodes no chunks.
+    * Envelope questions (`sum(n)`, `min(min_t)`, `max(max_t)`) read
+    * these per-chunk columns instead of decoding every sample. */
+  private[graft] def envelopes(decoded: DataFrame): Option[DataFrame] =
+    decoded.queryExecution.analyzed.collectFirst {
+      case org.apache.spark.sql.catalyst.plans.logical.Generate(
+          graft.functions.ChunkDecode(_), _, _, _, _, chunks) =>
+        org.apache.spark.sql.GraftColumnBridge.frame(decoded.sparkSession, chunks)
+    }
+
   /** Map-side decode via the native generator
     * ([[graft.functions.ChunkDecode]]): the analyzer extracts it into
     * a `Generate` node emitting (t, v, stale) directly as internal

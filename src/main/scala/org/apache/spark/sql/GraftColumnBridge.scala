@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into Spark 4's `private[sql]` ColumnNode conversion layer.
   *
@@ -11,9 +12,13 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * `graft.functions.WordShingles`) needs this one-file shim in the
   * `org.apache.spark.sql` package — the same pattern Spark connectors
   * use. No Spark behavior is altered; this only re-exports the two
-  * converters.
+  * converters, plus the logical-plan-to-DataFrame constructor that
+  * reads a sub-plan of an existing frame (the chunk tier's envelope
+  * rows under its decode, `graft.storage.ChunkStore.envelopes`).
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

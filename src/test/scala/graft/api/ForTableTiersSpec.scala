@@ -445,6 +445,20 @@ class ForTableTiersSpec extends SparkTestBase {
         && a1.nonEmpty, "chunk-served query diverged from raw")
       assert(e1.routeHits.containsKey("chunk_tier"),
         "selector scan did not count the chunk_tier route")
+      // one dashboard query over HTTP on this small chunked table runs
+      // as one Spark task, exported as the single_task route
+      def singleTask(): Long = new String(new URI(
+          s"http://127.0.0.1:${tApi.boundPort}/metrics").toURL
+          .openStream().readAllBytes(), UTF_8)
+        .linesIterator.collectFirst {
+          case l if l.startsWith("graft_engine_route_total{route=\"single_task\"}") =>
+            l.split(' ').last.toLong
+        }.getOrElse(0L)
+      val before = singleTask()
+      val dq = java.net.URLEncoder.encode("sum by (k) (rate(ck_m[5m]))", UTF_8)
+      assert(new URI(s"http://127.0.0.1:${tApi.boundPort}/api/v1/query?query=$dq&time=3600")
+        .toURL.openConnection().asInstanceOf[HttpURLConnection].getResponseCode == 200)
+      assert(singleTask() == before + 1, "single_task not counted on /metrics")
       // ...and they really COME from the tier: the same raw table with
       // an empty chunk tier bound answers nothing (inverse witness,
       // the starved-rung pattern above)
