@@ -1392,16 +1392,6 @@ object HttpApi {
     var pendingBatches = Vector.empty[DataFrame]
     var writesSinceRefresh = 0
     var failedDirty = false
-    def refreshRungs(dates: Option[Seq[String]]): Unit = {
-      rollups.foreach { b =>
-        Ingest.refreshFoldPartials(spark, path, rollupPath(b), b, dates)
-        spark.catalog.refreshByPath(rollupPath(b))
-      }
-      api.rollupRefreshes.incrementAndGet()
-      pendingDates = Set.empty
-      pendingBatches = Vector.empty
-      writesSinceRefresh = 0
-    }
     // r14: the non-debounced common path merges just THIS write's
     // partials into the touched rungs (associative, O(batch +
     // rung-slice)) instead of refolding each touched date's
@@ -1412,9 +1402,10 @@ object HttpApi {
     // interleave probe inside refreshFoldPartialsIncremental guards
     // the old-side junction and falls back to the full refold), so
     // `refreshEveryWrites > 1` — the recommended bursty config — no
-    // longer pays the accumulated-date refold. Valid whenever the
-    // pending set is exactly the buffered batches (the incremental
-    // contract: all appended, none merged); every heal keeps the
+    // longer pays the accumulated-date refold. The pending set is
+    // always exactly the buffered batches (the incremental contract:
+    // all appended, none merged — the sink grows both together under
+    // writeLock and every reset clears both); every heal keeps the
     // idempotent full refold. Crash safety is unchanged — the tiersOk
     // marker is already deleted, so a crash mid-merge heals fully at
     // boot. The dedup pass re-derives the appended canonical rows;
@@ -1639,16 +1630,9 @@ object HttpApi {
             pendingDates ++= touched
             pendingBatches :+= df
             writesSinceRefresh += 1
-            if (writesSinceRefresh >= refreshEveryWrites) {
-              // r15: the flush is the associative pending-union merge
-              // whenever the buffer provably covers every deferred
-              // write (they are maintained together under writeLock —
-              // the guard is belt-and-braces; full refold otherwise)
-              if (pendingBatches.nonEmpty &&
-                  pendingBatches.size == writesSinceRefresh)
-                refreshRungsIncremental(pendingBatches, sharedCanon)
-              else refreshRungs(Some(pendingDates.toSeq))
-            }
+            // r15: the flush is the associative pending-union merge
+            if (writesSinceRefresh >= refreshEveryWrites)
+              refreshRungsIncremental(pendingBatches, sharedCanon)
           }
           spark.catalog.refreshByPath(indexPath)
           // tiers are consistent with the committed table again —
@@ -1697,10 +1681,7 @@ object HttpApi {
     api = new HttpApi(spark, freshEngine(), Some(sink), port, rules)
     api.tierFlushHook = () => writeLock.synchronized {
       if (pendingDates.nonEmpty && !failedDirty) {
-        if (pendingBatches.nonEmpty &&
-            pendingBatches.size == writesSinceRefresh)
-          refreshRungsIncremental(pendingBatches)
-        else refreshRungs(Some(pendingDates.toSeq))
+        refreshRungsIncremental(pendingBatches)
         certifyTiers()
         api.swapEngine(freshEngine()).releaseSeriesDim()
       }

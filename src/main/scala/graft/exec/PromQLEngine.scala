@@ -494,22 +494,20 @@ class PromQLEngine(
       if (aligned) bestPartials(tr.stepMs, tr.startMs - vs.offsetMs) else None
     if (aligned && (rung.nonEmpty || (m >= 2 && tr.numSteps >= 8)))
       bucketedSelect(vs, tr, rung)
-    else
-      // the former max_by(struct(st, v, stale), st) is decomposed into
-      // per-field max_bys on the SAME key: sample timestamps are unique
-      // within a (series, step) group, so all three pick the same row —
-      // and primitive buffers keep the aggregation hash-based (a
-      // struct-typed buffer forces SortAggregate, like a map one).
+    else {
+      countRoute("raw_general")
+      // the newest point of each (series, step) window: per-field
+      // max_bys on the SAME key (sample timestamps are unique within a
+      // group, so all three pick the same row) keep the aggregation
+      // hash-based, where a struct-typed buffer forces SortAggregate.
       // Labels rejoin from the cached series dimension afterwards.
-      joinLabels(
-        windowed(vs, lookbackMs, tr, keepStale = true)
-          .groupBy(col(SIG), col(T))
-          .agg(
-            max(col(ST)).as("_wst"),
-            max_by(col(V), col(ST)).as("_wv"),
-            max_by(col("_stale"), col(ST)).as("_wstale"))
-          .filter(!col("_wstale")))
-        .select(col(SIG), col(L), col(T), col("_wst").as(ST), col("_wv").as(V))
+      joinLabels(Partials.agg(
+          windowed(vs, lookbackMs, tr, keepStale = true)
+            .groupBy(col(SIG), col(T)),
+          Partials.Latest.newest(col(ST), col(V), col("_stale")))
+          .filter(!col("lsa")))
+        .select(col(SIG), col(L), col(T), col("lta").as(ST), col("lva").as(V))
+    }
   }
 
   /** Spec surface: whether this engine resolves matchers on a series
@@ -536,11 +534,9 @@ class PromQLEngine(
     * matchers evaluated on the rung's own labels, buckets inside
     * `[anchor − w, end − o]` (the grid is aligned and w a multiple of
     * the step, so the closed window's low edge is a bucket boundary),
-    * plus the [[gridCols]] of the bucket start (q = step/bucket
-    * sub-bucket rows share one `_b`; only sub-buckets with `_s0`
-    * contribute their at-start point, the others' start points are
-    * interior samples of the step window, already inside their full
-    * partial). Input volume: series × buckets, never samples. */
+    * plus the [[gridCols]] of the bucket start, with the sample-time
+    * columns made relative to the anchor like the query-time
+    * partials'. Input volume: series × buckets, never samples. */
   private def rungSlice(tbl: DataFrame, vs: VectorSelector, w: Long,
       tr: EvalRange): DataFrame = {
     val anchor = tr.startMs - vs.offsetMs
@@ -548,8 +544,30 @@ class PromQLEngine(
       .filter(allMatchers(vs).map(matcherCond).reduce(_ && _))
       .filter(col("bucket_start") >= anchor - w &&
         col("bucket_start") <= tr.endMs - vs.offsetMs)
-      .select(col("*") +:
+      .select(tbl.columns.toSeq.map(c =>
+        if (Partials.timeCols(c)) (col(c) - anchor).as(c) else col(c)) ++
         gridCols(col("bucket_start"), anchor, tr.stepMs): _*)
+  }
+
+  /** A rung's rows as step-bucket partials. At q = step/bucket = 1 each
+    * row IS one: every bucket start is then a step boundary, so its
+    * at-start columns count. At q > 1 the q sub-bucket rows of a step
+    * bucket first `merge` into ONE row, counting only the at-start
+    * columns of the sub-bucket on the step boundary (`_s0`; the
+    * others' start points are interior samples of the step window,
+    * already inside their full partial) — fanning out sub-bucket rows
+    * directly costs q × m exploded rows per (series, step bucket),
+    * measured 1.4× SLOWER than raw at q = 60 for rate (LadderBench,
+    * 15 s cadence / 1 m rung / 1 h steps) where the merged route
+    * beats raw ~2×. `live` drops marker-only buckets, which carry no
+    * values. */
+  private def rungRows(rung: (DataFrame, Long), vs: VectorSelector,
+      w: Long, tr: EvalRange, live: Boolean)(
+      merge: Partials.Aggs*): DataFrame = {
+    val rows = rungSlice(rung._1, vs, w, tr)
+    val kept = if (live) rows.filter(col("cnt").isNotNull) else rows
+    if (tr.stepMs == rung._2) kept
+    else Partials.agg(kept.groupBy(col(SIG), col("_b")), merge: _*)
   }
 
   /** The covering-step fan-out every bucketed evaluator shares. Window
@@ -585,60 +603,43 @@ class PromQLEngine(
     * among covering buckets plus the at-start point of the step's own
     * bucket. Staleness travels with the partial: the winner being a
     * marker hides the series, exactly like the general path. A rung's
-    * stored last/at-start points carry the stale flag too, and its
-    * sub-bucket rows keep their own latest points (the winner is the
-    * max-rel candidate); marker-only buckets are present by
-    * construction (see [[graft.storage.Ingest.foldPartials]]). */
+    * stored last/at-start points carry the stale flag too;
+    * marker-only buckets are present by construction (see
+    * [[graft.storage.Ingest.foldPartials]]). */
   private def bucketedSelect(vs: VectorSelector, tr: EvalRange,
       rung: Option[(DataFrame, Long)]): DataFrame = {
     val step = tr.stepMs
     val m = (lookbackMs / step).toInt
     val anchor = tr.startMs - vs.offsetMs
-    // per-field max_by decomposition (unique _rel per series+bucket; the
-    // at-start row is unique per bucket) — primitive buffers keep the
-    // aggregation hash-based where struct-valued max_by would sort
-    val partials0 = rung match {
-      case Some((tbl, bkt)) =>
-        countRoute("select_partials", bkt)
-        rungSlice(tbl, vs, lookbackMs, tr)
-          .select(col("sig").as(SIG), col("_b"),
-            (col("lta") - anchor).as("_lprel"), col("lva").as("_lpv"),
-            col("lsa").as("_lpstale"),
-            when(col("_s0"), col("v0a")).as("_spv"),
-            when(col("_s0"), col("s0a")).as("_spstale"),
-            when(col("_s0"), col("has0a")).otherwise(0).as("has0"))
+    val partials = rung match {
+      case Some(r) =>
+        countRoute("select_partials", r._2)
+        rungRows(r, vs, lookbackMs, tr, live = false)(
+          Partials.Latest.merge(col("_s0")))
       case None =>
-        bucketedBase(vs, lookbackMs, tr, keepStale = true)
-          .groupBy(col(SIG), col("_b"))
-          .agg(
-            max(col("_rel")).as("_lprel"),
-            max_by(col(V), col("_rel")).as("_lpv"),
-            max_by(col("_st0"), col("_rel")).as("_lpstale"),
-            max(when(col("_s0"), col(V))).as("_spv"),
-            max(when(col("_s0"), col("_st0"))).as("_spstale"),
-            max(when(col("_s0"), 1).otherwise(0)).as("has0"))
+        countRoute("bucketed_query_time")
+        Partials.agg(bucketedBase(vs, lookbackMs, tr, keepStale = true)
+            .groupBy(col(SIG), col("_b")),
+          Partials.Latest.fromSamples(col("_rel"), col(V), col("_st0"),
+            col("_s0")))
     }
-    val partials = partials0
-      .withColumn("lp", struct(col("_lprel").as("rel"), col("_lpv").as("v"),
-        col("_lpstale").as("stale")))
-      .withColumn("sp", struct((col("_b") * step).as("rel"),
-        col("_spv").as("v"), coalesce(col("_spstale"), lit(false)).as("stale")))
-
     // contributing rels are unique within a (series, step) group (lp
     // rels of distinct buckets lie in disjoint ranges; the sp rel is
-    // the step boundary itself), so per-field max_bys agree on one row
-    joinLabels(
-      fanOut(partials, m, tr, "struct<rel:bigint,v:double,stale:boolean>",
-        col("lp"), col("has0") === 1, col("sp"))
-        .groupBy(col(SIG), col("_c.k").as("_k"))
-        .agg(
-          max(col("_c.p.rel")).as("_wrel"),
-          max_by(col("_c.p.v"), col("_c.p.rel")).as("_wv"),
-          max_by(col("_c.p.stale"), col("_c.p.rel")).as("_wstale"))
-        .filter(!col("_wstale")))
+    // the step boundary itself), so the newest point is one row
+    joinLabels(Partials.agg(
+        fanOut(partials, m, tr, "struct<rel:bigint,v:double,stale:boolean>",
+          full = struct(col("lta").as("rel"), col("lva").as("v"),
+            col("lsa").as("stale")),
+          hasStart = col("has0a") === 1,
+          start = struct((col("_b") * step).as("rel"), col("v0a").as("v"),
+            coalesce(col("s0a"), lit(false)).as("stale")))
+          .groupBy(col(SIG), col("_c.k").as("_k")),
+        Partials.Latest.newest(col("_c.p.rel"), col("_c.p.v"),
+          col("_c.p.stale")))
+        .filter(!col("lsa")))
       .withColumn(T, lit(tr.startMs) + col("_k") * step)
       .select(col(SIG), col(L), col(T),
-        (col("_wrel") + anchor).as(ST), col("_wv").as(V))
+        (col("lta") + anchor).as(ST), col("lva").as(V))
   }
 
   // ---------- evaluation ----------
@@ -1738,57 +1739,25 @@ class PromQLEngine(
       name: String, rung: Option[(DataFrame, Long)]): DataFrame = {
     val step = tr.stepMs
     val m = (w / step).toInt
-
     val partials = rung match {
-      case Some((tbl, bkt)) =>
-        countRoute("fold_partials", bkt)
-        val s0 = col("_s0")
-        rungSlice(tbl, selector, w, tr)
-          .filter(col("cnt").isNotNull) // marker-only buckets: no values
-          .groupBy(col("sig").as(SIG), col("_b"))
-          .agg(
-            sum(col("cnt")).as("cnt"), sum(col("sum")).as("sum"),
-            sum(col("sumsq")).as("sumsq"),
-            min(col("mn")).as("mn"), max(col("mx")).as("mx"),
-            max(col("nan")).as("nan"),
-            sum(when(s0, col("cnt0")).otherwise(0L)).as("cnt0"),
-            sum(when(s0, col("sum0"))).as("sum0"),
-            sum(when(s0, col("sumsq0"))).as("sumsq0"),
-            min(when(s0, col("mn0"))).as("mn0"),
-            max(when(s0, col("mx0"))).as("mx0"),
-            max(when(s0, col("nan0")).otherwise(0)).as("nan0"))
+      case Some(r) =>
+        countRoute("fold_partials", r._2)
+        rungRows(r, selector, w, tr, live = true)(
+          Partials.Fold.merge(col("_s0")))
       case None =>
         countRoute("bucketed_query_time")
-        bucketedBase(selector, w, tr)
-          .groupBy(col(SIG), col("_b"))
-          .agg(
-            count(lit(1)).as("cnt"), sum(col(V)).as("sum"),
-            sum(col(V) * col(V)).as("sumsq"),
-            min(col(V)).as("mn"), max(col(V)).as("mx"),
-            max(when(isnan(col(V)), 1).otherwise(0)).as("nan"),
-            sum(when(col("_s0"), 1L).otherwise(0L)).as("cnt0"),
-            sum(when(col("_s0"), col(V))).as("sum0"),
-            sum(when(col("_s0"), col(V) * col(V))).as("sumsq0"),
-            min(when(col("_s0"), col(V))).as("mn0"),
-            max(when(col("_s0"), col(V))).as("mx0"),
-            max(when(col("_s0") && isnan(col(V)), 1).otherwise(0)).as("nan0"))
+        Partials.agg(bucketedBase(selector, w, tr).groupBy(col(SIG), col("_b")),
+          Partials.Fold.fromSamples(col(V), col("_s0")))
     }
-
-    val merged = joinLabels(
+    val fields = Partials.Fold.fields
+    val merged = joinLabels(Partials.agg(
       fanOut(partials, m, tr,
         "struct<cnt:bigint,sum:double,sumsq:double,mn:double,mx:double,nan:int>",
-        full = struct(col("cnt"), col("sum"), col("sumsq"), col("mn"),
-          col("mx"), col("nan")),
+        full = struct(fields.map(col): _*),
         hasStart = col("cnt0") > 0,
-        start = struct(col("cnt0").as("cnt"), col("sum0").as("sum"),
-          col("sumsq0").as("sumsq"), col("mn0").as("mn"),
-          col("mx0").as("mx"), col("nan0").as("nan")))
-        .groupBy(col(SIG), col("_c.k").as("_k"))
-        .agg(
-          sum(col("_c.p.cnt")).as("cnt"), sum(col("_c.p.sum")).as("sum"),
-          sum(col("_c.p.sumsq")).as("sumsq"),
-          min(col("_c.p.mn")).as("mn"), max(col("_c.p.mx")).as("mx"),
-          max(col("_c.p.nan")).as("nan")))
+        start = struct(fields.map(f => col(f + "0").as(f)): _*))
+        .groupBy(col(SIG), col("_c.k").as("_k")),
+      Partials.Fold.mergeFull(f => col(s"_c.p.$f"))))
 
     val cntD = col("cnt").cast("double")
     val value = name match {
@@ -1819,92 +1788,43 @@ class PromQLEngine(
     * count) fan out to covering steps and merge IN BUCKET ORDER with
     * the boundary-reset correction — associative, so amplification
     * applies to one partial row per (series, bucket) instead of every
-    * sample. A `rung` serves steps that are a MULTIPLE of its bucket:
-    * `_j` is the sub-bucket index (the ordered-merge sort key —
-    * [[PromUdfs.ratePartials]] folds partials in time order, adding
-    * the boundary reset at each seam, so q sub-bucket partials inside
-    * one step window merge exactly like the raw points they
-    * summarize); in-bucket reset corrections are prepaid at ingest. */
+    * sample. A `rung` serves steps that are a MULTIPLE of its bucket;
+    * in-bucket reset corrections are prepaid at ingest. */
   private def bucketedRate(selector: VectorSelector, w: Long, tr: EvalRange,
       isCounter: Boolean, isRate: Boolean,
       rung: Option[(DataFrame, Long)]): DataFrame = {
     val step = tr.stepMs
     val m = (w / step).toInt
-    val anchor = tr.startMs - selector.offsetMs
-
     val partials = rung match {
-      case Some((tbl, bkt)) =>
-        countRoute("rate_partials", bkt)
-        val q = step / bkt
-        val sub = rungSlice(tbl, selector, w, tr)
-          .filter(col("cnt").isNotNull) // marker-only buckets: no values
-          .select(col("sig").as(SIG),
-            (col("_rel") / lit(bkt.toDouble)).cast("long").as("_j"),
-            col("_b"),
-            (col("ft") - anchor).as("ft"), col("fv"),
-            (col("lt") - anchor).as("lt"), col("lv"),
-            col("corr"), col("cnt"),
-            when(col("_s0"), col("v0")).as("v0"),
-            when(col("_s0"), col("has0")).otherwise(0).as("has0"))
-        // pre-merge the q sub-partials of each step bucket into ONE
-        // partial (ordered fold, boundary reset at each seam) BEFORE the
-        // m-fold fan-out: fanning out sub-bucket rows directly costs
-        // q × m exploded rows per (series, step bucket) — measured 1.4×
-        // SLOWER than raw at q = 60 (LadderBench, 15 s cadence / 1 m
-        // rung / 1 h steps) where the merged route reads the same rows
-        // and beats raw ~2×. _j of the merged row = the step bucket's
-        // first sub-index, keeping the downstream merge-ordering key.
-        if (q == 1) sub
-        else sub
-          .groupBy(col(SIG), col("_b"))
-          .agg(
-            array_sort(collect_list(struct(col("_j"), col("ft"), col("fv"),
-              col("lt"), col("lv"), col("corr"), col("cnt")))).as("_sub"),
-            max(col("v0")).as("v0"), max(col("has0")).as("has0"))
-          .withColumn("_m", PromUdfs.mergeRatePartsUdf(col("_sub")))
-          .select(col(SIG), (col("_b") * q).as("_j"), col("_b"),
-            col("_m._1").as("ft"), col("_m._2").as("fv"),
-            col("_m._3").as("lt"), col("_m._4").as("lv"),
-            col("_m._5").as("corr"), col("_m._6").as("cnt"),
-            col("v0"), col("has0"))
+      case Some(r) =>
+        countRoute("rate_partials", r._2)
+        rungRows(r, selector, w, tr, live = true)(
+          Partials.Rate.merge(col("_s0")))
       case None =>
         countRoute("bucketed_query_time")
-        val wspec = Window.partitionBy(col(SIG), col("_b")).orderBy(col("_rel"))
-        val pv = lag(col(V), 1).over(wspec)
-        bucketedBase(selector, w, tr)
-          .withColumn("_cinc", PromUdfs.counterResetCorrection(col(V), pv))
-          .groupBy(col(SIG), col("_b"))
-          .agg(
-            min(col("_rel")).as("ft"), min_by(col(V), col("_rel")).as("fv"),
-            max(col("_rel")).as("lt"), max_by(col(V), col("_rel")).as("lv"),
-            sum(col("_cinc")).as("corr"), count(lit(1)).as("cnt"),
-            max(when(col("_s0"), col(V))).as("v0"),
-            max(when(col("_s0"), 1).otherwise(0)).as("has0"))
-          // query-time partials ARE step-granular: sub-index == step index
-          .withColumn("_j", col("_b"))
+        Partials.agg(bucketedBase(selector, w, tr)
+            .transform(Partials.Rate.withCorrection(Seq(col(SIG), col("_b")),
+              col("_rel"), col(V)))
+            .groupBy(col(SIG), col("_b")),
+          Partials.Rate.fromSamples(col("_rel"), col(V), col("_s0")))
     }
 
-    // partial field `b` = the SUB-bucket index `_j`, the merge sort
-    // key. A sample at exactly the step time belongs to the window
-    // ending there: bucket k's at-start point is the FINAL partial
-    // (_j of an on-boundary sub-bucket = q·_b, sorting after every
-    // full partial of window _b, whose sub-indices are < q·_b)
+    // partial field `b` = the step-bucket index, the merge sort key. A
+    // sample at exactly the step time belongs to the window ending
+    // there: bucket k's at-start point is the FINAL partial of window k
+    // (b = k, after every full partial of that window, b < k)
     val startRel = col("_b") * step
     joinLabels(
       fanOut(partials, m, tr,
         "struct<b:bigint,ft:bigint,fv:double,lt:bigint,lv:double," +
           "corr:double,cnt:bigint>",
-        full = struct(col("_j").as("b"), col("ft"), col("fv"), col("lt"),
-          col("lv"), col("corr"), col("cnt")),
+        full = Partials.Rate.part(col("_b")),
         hasStart = col("has0") === 1,
-        start = struct(col("_j").as("b"), startRel.as("ft"),
-          col("v0").as("fv"), startRel.as("lt"), col("v0").as("lv"),
-          lit(0.0).as("corr"), lit(1L).as("cnt")))
+        start = Partials.Rate.startPart(col("_b"), startRel))
         .groupBy(col(SIG), col("_c.k").as("_k"))
-        .agg(array_sort(collect_list(col("_c.p"))).as("_ps")))
-      .withColumn(V, PromUdfs.ratePartialsUdf(col("_ps"),
-        (col("_k") - m) * step, col("_k") * step, lit(w),
-        lit(isCounter), lit(isRate)))
+        .agg(Partials.Rate.collect(col("_c.p")).as("_ps")))
+      .withColumn(V, Partials.Rate.finish(col("_ps"),
+        (col("_k") - m) * step, col("_k") * step, w, isCounter, isRate))
       .filter(col(V).isNotNull)
       .withColumn(T, lit(tr.startMs) + col("_k") * step)
       .select(col(SIG), Samples.dropMetricName(col(L)).as(L), col(T),
@@ -1915,75 +1835,41 @@ class PromQLEngine(
   /** Bucketed `irate`/`idelta`: only the two newest points of each
     * window matter, so each bucket keeps its two latest points and
     * steps pick the two globally latest among covering-bucket
-    * candidates — ≤ 2(m+1) candidate rows per step instead of every
+    * candidates — ≤ 2(m+1) candidate points per step instead of every
     * sample. r17: the rank-2 window filter (sample-volume
     * Exchange+Sort+Window before any reduction) is replaced by the
     * commutative constant-buffer [[graft.functions.Top2ByRel]]
     * aggregate — top-2 merges exactly, so ONE hash aggregation with
-    * map-side partials does it: the exchange now carries two points
-    * per (series, bucket) per map task instead of every sample, and
-    * the Sort/Window nodes vanish from the plan. Output is the same
-    * last2 array (the downstream candidate UDF is order-agnostic).
+    * map-side partials builds the bucket partials, and the same
+    * aggregate merges a rung's sub-buckets and each step's candidates.
     * A `rung`'s (lt, lv, lt2, lv2) columns ARE each bucket's two
-    * newest live points, so they stand in for the raw candidates. */
+    * newest live points. */
   private def bucketedInstant(selector: VectorSelector, w: Long,
       tr: EvalRange, isRate: Boolean,
       rung: Option[(DataFrame, Long)]): DataFrame = {
     val step = tr.stepMs
     val m = (w / step).toInt
-    val anchor = tr.startMs - selector.offsetMs
-    val pType = "array<struct<rel:bigint,v:double>>"
     val partials = rung match {
-      case Some((tbl, bkt)) =>
-        countRoute("instant_partials", bkt)
-        val sub = rungSlice(tbl, selector, w, tr)
-          .filter(col("cnt").isNotNull) // marker-only buckets: no values
-          .select(col("sig").as(SIG), col("_b"),
-            concat(
-              array(struct((col("lt") - anchor).as("rel"),
-                col("lv").as("v"))),
-              when(col("lt2").isNotNull,
-                array(struct((col("lt2") - anchor).as("rel"),
-                  col("lv2").as("v"))))
-                .otherwise(array().cast(pType))).as("last2"),
-            when(col("_s0"), col("has0")).otherwise(0).as("has0"),
-            when(col("_s0"), col("v0")).as("spv"))
-        // pre-merge: the step bucket's two newest points are among its
-        // sub-buckets' top-2s — flatten, sort by (rel, v) natural struct
-        // order (rels are distinct, so v never decides), keep the two
-        // newest. One row per (series, step bucket) enters the fan-out,
-        // like the query-time path (same q × m economics as the rate
-        // route's pre-merge). All lambda-free built-ins.
-        if (step == bkt) sub
-        else sub
-          .groupBy(col(SIG), col("_b"))
-          .agg(
-            slice(reverse(array_sort(flatten(collect_list(col("last2"))))),
-              1, 2).as("last2"),
-            max(col("has0")).as("has0"), max(col("spv")).as("spv"))
+      case Some(r) =>
+        countRoute("instant_partials", r._2)
+        rungRows(r, selector, w, tr, live = true)(Partials.Top2.merge(),
+          Partials.startPoint(col("v0"), col("has0"), col("_s0")))
       case None =>
         countRoute("bucketed_query_time")
-        // at-start rows of one bucket share rel == _b*step exactly, so
-        // the former max(struct(rel, v)) tie-break reduces to max(v) —
-        // kept as primitive aggregates so the whole aggregation stays
-        // hash-based
-        bucketedBase(selector, w, tr)
-          .groupBy(col(SIG), col("_b"))
-          .agg(
-            graft.functions.Top2ByRel.top2(col("_rel"), col(V)).as("last2"),
-            max(when(col("_s0"), 1).otherwise(0)).as("has0"),
-            max(when(col("_s0"), col(V))).as("spv"))
+        Partials.agg(bucketedBase(selector, w, tr).groupBy(col(SIG), col("_b")),
+          Partials.Top2.fromSamples(col("_rel"), col(V)),
+          Partials.startPoint(col(V), lit(1), col("_s0")))
     }
-
-    joinLabels(
-      fanOut(partials, m, tr, pType, col("last2"), col("has0") === 1,
-        array(struct((col("_b") * step).as("rel"), col("spv").as("v"))))
-        .select(col(SIG), col("_c.k").as("_k"),
-          explode(col("_c.p")).as("_p"))
-        .groupBy(col(SIG), col("_k"))
-        .agg(collect_list(col("_p")).as("_cands")))
-      .withColumn(V,
-        PromUdfs.instantFromCandidatesUdf(col("_cands"), lit(isRate)))
+    val none = lit(null)
+    joinLabels(Partials.agg(
+      fanOut(partials, m, tr, "struct<lt:bigint,lv:double,lt2:bigint,lv2:double>",
+        full = struct(col("lt"), col("lv"), col("lt2"), col("lv2")),
+        hasStart = col("has0") === 1,
+        start = struct((col("_b") * step).as("lt"), col("v0").as("lv"),
+          none.cast("long").as("lt2"), none.cast("double").as("lv2")))
+        .groupBy(col(SIG), col("_c.k").as("_k")),
+      Partials.Top2.merge(f => col(s"_c.p.$f"))))
+      .withColumn(V, Partials.Top2.finish(isRate))
       .filter(col(V).isNotNull)
       .withColumn(T, lit(tr.startMs) + col("_k") * step)
       .select(col(SIG), Samples.dropMetricName(col(L)).as(L), col(T),

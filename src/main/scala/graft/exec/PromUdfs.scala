@@ -30,8 +30,6 @@ object PromUdfs {
       rangeMs: Long, isCounter: Boolean, isRate: Boolean): Option[Double] = {
     val p = pts(points)
     if (p.length < 2) return None
-    val rangeStart = stepT - offsetMs - rangeMs
-    val rangeEnd = stepT - offsetMs
     var counterCorrection = 0.0
     if (isCounter) {
       var i = 1
@@ -40,60 +38,23 @@ object PromUdfs {
         i += 1
       }
     }
-    var resultValue = p.last._2 - p.head._2 + counterCorrection
-    var durationToStart = (p.head._1 - rangeStart).toDouble / 1000
-    val durationToEnd = (rangeEnd - p.last._1).toDouble / 1000
-    val sampledInterval = (p.last._1 - p.head._1).toDouble / 1000
-    val averageDurationBetweenSamples = sampledInterval / (p.length - 1)
-    if (isCounter && resultValue > 0 && p.head._2 >= 0) {
-      val durationToZero = sampledInterval * (p.head._2 / resultValue)
-      if (durationToZero < durationToStart) durationToStart = durationToZero
-    }
-    val extrapolationThreshold = averageDurationBetweenSamples * 1.1
-    var extrapolateToInterval = sampledInterval
-    extrapolateToInterval +=
-      (if (durationToStart < extrapolationThreshold) durationToStart
-       else averageDurationBetweenSamples / 2)
-    extrapolateToInterval +=
-      (if (durationToEnd < extrapolationThreshold) durationToEnd
-       else averageDurationBetweenSamples / 2)
-    resultValue *= extrapolateToInterval / sampledInterval
-    if (isRate) resultValue /= rangeMs.toDouble / 1000
-    Some(resultValue)
+    Some(extrapolate(p.last._2 - p.head._2 + counterCorrection,
+      p.head._1, p.head._2, p.last._1, p.length, stepT - offsetMs - rangeMs,
+      stepT - offsetMs, rangeMs, isCounter, isRate))
   }
 
-  /** Ordered merge of per-bucket rate partials, then the exact
-    * extrapolatedRate formula. Each partial row carries
-    * `(b, ft, fv, lt, lv, corr, cnt)` — bucket index, first/last
-    * (time, value) and the IN-bucket counter-correction sum; merging
-    * adjacent buckets adds the boundary correction
-    * `lastValue(left) if firstValue(right) < lastValue(left)`. The
-    * correction accumulates in time order, so the float sum is
-    * bit-identical to a sequential scan of the raw points
-    * (`promql/functions.go:50-141`). Times are grid-relative ms; the
-    * formula only consumes durations, so the shift cancels. */
-  def ratePartials(parts: Seq[Row], rangeStartRel: Long, rangeEndRel: Long,
-      rangeMs: Long, isCounter: Boolean, isRate: Boolean): Option[Double] = {
-    if (parts.isEmpty) return None
-    val h = parts.head
-    val ft = h.getLong(1); val fv = h.getDouble(2)
-    var lt = h.getLong(3); var lv = h.getDouble(4)
-    var corr = if (isCounter) h.getDouble(5) else 0.0
-    var cnt = h.getLong(6)
-    parts.tail.foreach { p =>
-      if (isCounter) {
-        if (p.getDouble(2) < lv) corr += lv // boundary reset
-        corr += p.getDouble(5)
-      }
-      lt = p.getLong(3); lv = p.getDouble(4)
-      cnt += p.getLong(6)
-    }
-    if (cnt < 2) return None
-    var resultValue = lv - fv + corr
-    var durationToStart = (ft - rangeStartRel).toDouble / 1000
-    val durationToEnd = (rangeEndRel - lt).toDouble / 1000
+  /** The extrapolation step of `extrapolatedRate`
+    * (`promql/functions.go:50-141`), shared by the sequential scan and
+    * the partial fold [[ratePartials]]: `delta` = last − first +
+    * counter correction over `cnt` points spanning `[ft, lt]`, with
+    * first value `fv`, in a range `[rangeStart, rangeEnd]`. */
+  private def extrapolate(delta: Double, ft: Long, fv: Double, lt: Long,
+      cnt: Long, rangeStart: Long, rangeEnd: Long, rangeMs: Long,
+      isCounter: Boolean, isRate: Boolean): Double = {
+    var resultValue = delta
+    var durationToStart = (ft - rangeStart).toDouble / 1000
+    val durationToEnd = (rangeEnd - lt).toDouble / 1000
     val sampledInterval = (lt - ft).toDouble / 1000
-    if (sampledInterval == 0) return None
     val averageDurationBetweenSamples = sampledInterval / (cnt - 1)
     if (isCounter && resultValue > 0 && fv >= 0) {
       val durationToZero = sampledInterval * (fv / resultValue)
@@ -109,7 +70,23 @@ object PromUdfs {
        else averageDurationBetweenSamples / 2)
     resultValue *= extrapolateToInterval / sampledInterval
     if (isRate) resultValue /= rangeMs.toDouble / 1000
-    Some(resultValue)
+    resultValue
+  }
+
+  /** The rate finish: [[mergeRateParts]] over the time-ordered
+    * per-bucket partials of one window, then the exact
+    * extrapolatedRate formula. The ordered merge accumulates the
+    * correction in time order, so the float sum is bit-identical to a
+    * sequential scan of the raw points; `delta` ignores it. Times are
+    * grid-relative ms; the formula only consumes durations, so the
+    * shift cancels. */
+  def ratePartials(parts: Seq[Row], rangeStartRel: Long, rangeEndRel: Long,
+      rangeMs: Long, isCounter: Boolean, isRate: Boolean): Option[Double] = {
+    if (parts.isEmpty) return None
+    val (ft, fv, lt, lv, corr, cnt) = mergeRateParts(parts)
+    if (cnt < 2 || lt == ft) return None
+    Some(extrapolate(lv - fv + (if (isCounter) corr else 0.0), ft, fv, lt,
+      cnt, rangeStartRel, rangeEndRel, rangeMs, isCounter, isRate))
   }
 
   val ratePartialsUdf: UserDefinedFunction =
@@ -117,30 +94,13 @@ object PromUdfs {
          rangeMs: Long, isCounter: Boolean, isRate: Boolean) =>
       ratePartials(parts, rangeStartRel, rangeEndRel, rangeMs, isCounter, isRate))
 
-  /** Shared counter-reset correction term for the bucketed rate
-    * partials (both the query-time path and [[graft.storage.Ingest
-    * .foldPartials]]'s materialization — the two MUST stay in
-    * lockstep for route equivalence, hence one definition): the
-    * previous value when a strict decrease is observed, with Go's
-    * NaN-comparison semantics (`v < prev` is FALSE when either side
-    * is NaN, `functions.go:57-63`; Spark alone would order NaN
-    * greatest and poison the sum). */
-  def counterResetCorrection(v: org.apache.spark.sql.Column,
-      pv: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{isnan, lit, when}
-    when(pv.isNotNull && !isnan(v) && !isnan(pv) && v < pv, pv)
-      .otherwise(lit(0.0))
-  }
-
-  /** Pre-merge of time-ordered sub-bucket rate partials into ONE
-    * step-bucket partial — the same fold as [[ratePartials]] without
-    * the extrapolation, so the materialized route can fan out one row
-    * per (series, step bucket) instead of one per sub-bucket (q =
-    * step/bucket fewer exploded rows). corr accumulates
-    * counter-style (boundary reset at each seam, Go NaN-comparison
-    * semantics); consumers ignore it for delta exactly as
-    * [[ratePartials]] does. Input rows: (j, ft, fv, lt, lv, corr,
-    * cnt) sorted by j.
+  /** The rate-partial merge ([[Partials.Rate]]): time-ordered partial
+    * rows `(b, ft, fv, lt, lv, corr, cnt)` — b the sort key, first/last
+    * (time, value), the IN-bucket counter-correction sum and the point
+    * count — fold into one, adding at each seam the boundary reset
+    * `lastValue(left) if firstValue(right) < lastValue(left)` (false
+    * when either side is NaN, as Go compares). corr accumulates
+    * counter-style; consumers ignore it for delta.
     *
     * Float caveat shared by every partial-merge scheme here: the
     * correction SUM associates differently than the sequential scan
@@ -164,23 +124,12 @@ object PromUdfs {
     (ft, fv, lt, lv, corr, cnt)
   }
 
-  val mergeRatePartsUdf: UserDefinedFunction =
-    udf((parts: Seq[Row]) => mergeRateParts(parts))
-
-  /** `irate`/`idelta` from per-bucket candidate points: each covering
-    * bucket contributed its (up to) two latest points; pick the two
-    * globally latest and apply the instant-value formula
-    * (`promql/functions.go:145-191`). Candidate rows are (t, v). */
-  def instantFromCandidates(cands: Seq[Row], isRate: Boolean): Option[Double] = {
-    if (cands.length < 2) return None
-    var t1 = Long.MinValue; var v1 = 0.0 // latest
-    var t2 = Long.MinValue; var v2 = 0.0 // second latest
-    cands.foreach { r =>
-      val t = r.getLong(0); val v = r.getDouble(1)
-      if (t > t1) { t2 = t1; v2 = v1; t1 = t; v1 = v }
-      else if (t > t2) { t2 = t; v2 = v }
-    }
-    if (t2 == Long.MinValue || t1 == t2) return None
+  /** `irate`/`idelta` from the newest point `(t1, v1)` and the one
+    * before it `(t2, v2)` (`promql/functions.go:145-191`) — the finish
+    * of the top-2 partial, and of the raw path's last two points. */
+  def instantFinish(t1: Long, v1: Double, t2: Long, v2: Double,
+      isRate: Boolean): Option[Double] = {
+    if (t1 == t2) return None
     var resultValue =
       if (isRate && v1 < v2) v1 // counter reset
       else v1 - v2
@@ -188,9 +137,9 @@ object PromUdfs {
     Some(resultValue)
   }
 
-  val instantFromCandidatesUdf: UserDefinedFunction =
-    udf((cands: Seq[Row], isRate: Boolean) =>
-      instantFromCandidates(cands, isRate))
+  val instantFinishUdf: UserDefinedFunction =
+    udf((t1: Long, v1: Double, t2: Long, v2: Double, isRate: Boolean) =>
+      instantFinish(t1, v1, t2, v2, isRate))
 
   /** `irate`/`idelta` — last two points (`promql/functions.go:145-191`). */
   def instantValue(points: Seq[Row], isRate: Boolean): Option[Double] = {
@@ -198,13 +147,7 @@ object PromUdfs {
     if (p.length < 2) return None
     val last = p(p.length - 1)
     val prev = p(p.length - 2)
-    var resultValue =
-      if (isRate && last._2 < prev._2) last._2 // counter reset
-      else last._2 - prev._2
-    val sampledIntervalMs = last._1 - prev._1
-    if (sampledIntervalMs == 0) return None
-    if (isRate) resultValue /= sampledIntervalMs.toDouble / 1000
-    Some(resultValue)
+    instantFinish(last._1, last._2, prev._1, prev._2, isRate)
   }
 
   /** `resets` (`promql/functions.go:731-752`). */

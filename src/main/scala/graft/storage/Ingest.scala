@@ -653,12 +653,10 @@ object Ingest {
     * O(batch + series×buckets), FLAT as the date grows.
     *
     * Exactness: every partial column merges associatively EXCEPT the
-    * two order-dependent ones — the in-bucket counter-reset
-    * correction `corr` and the second-newest point `lt2/lv2` — which
-    * merge exactly when one side's live range strictly precedes the
-    * other's (the junction contributes one
-    * [[graft.exec.PromUdfs.counterResetCorrection]] term, and the
-    * top-2 of a concatenation is computable from the two tops). The
+    * in-bucket counter-reset correction `corr`, whose ordered merge
+    * ([[graft.exec.Partials.Rate]]) is exact when one side's live
+    * range strictly precedes the other's (the junction contributes one
+    * boundary-reset term). The
     * in-order append flow always satisfies that; when a batch
     * INTERLEAVES a bucket's existing live range (out-of-order
     * backfill into a half-written bucket) this falls back to the full
@@ -733,97 +731,22 @@ object Ingest {
 
   /** Associative merge of two [[foldPartials]] tables over the same
     * samples partitioned in two (time-disjoint per live bucket-range)
-    * halves: one full-outer join on (sig, bucket_start), each column
-    * combined by its algebra — sums add (null only when BOTH sides
-    * null: the marker-only-bucket contract), mins/maxes take
-    * least/greatest (null-skipping), newest/oldest points take the
-    * later/earlier side, the junction contributes one counter-reset
-    * term, and the merged second-newest point is the later side's
-    * unless it holds a single live point. Column set and order equal
-    * the [[foldPartials]] output, so the result is
-    * write-compatible with the rung table. */
+    * halves: `old ∪ new` grouped on (sig, bucket_start) and reduced
+    * with each family's merge ([[graft.exec.Partials]], every rung row
+    * counting its at-start columns). A bucket present on one side, or
+    * marker-only on one side, keeps the other side's values; the
+    * marker-only-bucket contract (null fold and rate columns) holds
+    * when both are. Column set and order equal the [[foldPartials]]
+    * output, so the result is write-compatible with the rung table. */
   private[storage] def mergeFoldPartials(oldP: DataFrame,
       newP: DataFrame): DataFrame = {
-    val outCols = newP.columns
-    val a = oldP.select(outCols.map(c => col(c).as(s"a_$c")): _*)
-    val b = newP.select(outCols.map(c => col(c).as(s"b_$c")): _*)
-    val j = a.join(b,
-      a("a_sig") === b("b_sig") &&
-        a("a_bucket_start") === b("b_bucket_start"), "full_outer")
-    def ac(c: String) = col(s"a_$c")
-    def bc(c: String) = col(s"b_$c")
-    // null only when BOTH sides are null (a marker-only bucket on one
-    // side must not zero the other side's fold columns)
-    def nsumL(c: String) = when(ac(c).isNull && bc(c).isNull,
-      lit(null).cast("long"))
-      .otherwise(coalesce(ac(c), lit(0L)) + coalesce(bc(c), lit(0L)))
-    def nsumD(c: String) = when(ac(c).isNull && bc(c).isNull,
-      lit(null).cast("double"))
-      .otherwise(coalesce(ac(c), lit(0.0)) + coalesce(bc(c), lit(0.0)))
-    // value from the side whose anchor (`by`) is larger/smaller —
-    // max_by/min_by over the concatenation, reconstructed from the
-    // per-side winners
-    def byLater(v: String, t: String) =
-      when(ac(t).isNull, bc(v)).when(bc(t).isNull, ac(v))
-        .when(bc(t) > ac(t), bc(v)).otherwise(ac(v))
-    def byEarlier(v: String, t: String) =
-      when(ac(t).isNull, bc(v)).when(bc(t).isNull, ac(v))
-        .when(bc(t) < ac(t), bc(v)).otherwise(ac(v))
-    val bothLive = ac("cnt").isNotNull && bc("cnt").isNotNull
-    // non-interleaved contract: when both sides hold live points, one
-    // range strictly precedes the other
-    val aFirst = ac("lt") < bc("ft")
-    val firstLv = when(aFirst, ac("lv")).otherwise(bc("lv"))
-    val secondFv = when(aFirst, bc("fv")).otherwise(ac("fv"))
-    val junction = graft.exec.PromUdfs
-      .counterResetCorrection(secondFv, firstLv)
-    val mergedExprs: Map[String, Column] = Map(
-      "sig" -> coalesce(ac("sig"), bc("sig")),
-      "bucket_start" -> coalesce(ac("bucket_start"), bc("bucket_start")),
-      // instant-select partials (marker-inclusive)
-      "lta" -> greatest(ac("lta"), bc("lta")),
-      "lva" -> byLater("lva", "lta"),
-      "lsa" -> byLater("lsa", "lta"),
-      "v0a" -> greatest(ac("v0a"), bc("v0a")),
-      "s0a" -> greatest(ac("s0a"), bc("s0a")),
-      "has0a" -> greatest(ac("has0a"), bc("has0a")),
-      // fold partials (live rows only)
-      "cnt" -> nsumL("cnt"),
-      "sum" -> nsumD("sum"),
-      "sumsq" -> nsumD("sumsq"),
-      "mn" -> least(ac("mn"), bc("mn")),
-      "mx" -> greatest(ac("mx"), bc("mx")),
-      "nan" -> greatest(ac("nan"), bc("nan")),
-      "cnt0" -> nsumL("cnt0"),
-      "sum0" -> nsumD("sum0"),
-      "sumsq0" -> nsumD("sumsq0"),
-      "mn0" -> least(ac("mn0"), bc("mn0")),
-      "mx0" -> greatest(ac("mx0"), bc("mx0")),
-      "nan0" -> greatest(ac("nan0"), bc("nan0")),
-      // rate partials: endpoints + the junction reset term
-      "ft" -> least(ac("ft"), bc("ft")),
-      "fv" -> byEarlier("fv", "ft"),
-      "lt" -> greatest(ac("lt"), bc("lt")),
-      "lv" -> byLater("lv", "lt"),
-      "corr" -> when(bothLive,
-        ac("corr") + bc("corr") + junction)
-        .otherwise(coalesce(ac("corr"), bc("corr"))),
-      "v0" -> greatest(ac("v0"), bc("v0")),
-      "has0" -> greatest(ac("has0"), bc("has0")),
-      // second-newest live point of the concatenation: the later
-      // side's own second point, or the earlier side's newest when
-      // the later side holds a single live point
-      "lt2" -> when(bothLive,
-        when(aFirst, when(bc("cnt") >= 2, bc("lt2")).otherwise(ac("lt")))
-          .otherwise(when(ac("cnt") >= 2, ac("lt2")).otherwise(bc("lt"))))
-        .otherwise(coalesce(ac("lt2"), bc("lt2"))),
-      "lv2" -> when(bothLive,
-        when(aFirst, when(bc("cnt") >= 2, bc("lv2")).otherwise(ac("lv")))
-          .otherwise(when(ac("cnt") >= 2, ac("lv2")).otherwise(bc("lv"))))
-        .otherwise(coalesce(ac("lv2"), bc("lv2"))),
+    import graft.exec.Partials._
+    val all = lit(true)
+    agg(oldP.unionByName(newP).groupBy(col("sig"), col("bucket_start")),
+      Latest.merge(all), Fold.merge(all), Rate.merge(all), Top2.merge(),
       // canonical entry-sorted labels: equal sig implies equal map
-      "labels" -> coalesce(ac("labels"), bc("labels")))
-    j.select(outCols.map(c => mergedExprs(c).as(c)): _*)
+      Seq("labels" -> graft.exec.FirstLabels.first(col("labels"))))
+      .select(newP.columns.map(col).toSeq: _*)
   }
 
   /** Compact a series index: every [[appendSeriesIndex]] adds one
@@ -877,13 +800,16 @@ object Ingest {
 
   /** Materialized fold partials: one row per (series, epoch-aligned
     * `bucketMs` bucket) carrying EXACTLY the associative partial shape
-    * the engine's bucketed fold path computes from raw samples at
-    * query time — count/sum/sum²/min/max + NaN flag, plus the same
-    * aggregates restricted to the bucket's exact start boundary (the
-    * at-start partial that makes CLOSED `[t−w, t]` windows exactly
-    * reconstructable from half-open buckets). An engine constructed
-    * with this table serves every aligned `*_over_time` query from it
-    * without touching raw samples (`PromQLEngine` fold routing): the
+    * the engine's bucketed paths compute from raw samples at query
+    * time — both built by [[graft.exec.Partials]], the one definition
+    * route equivalence rests on: count/sum/sum²/min/max + NaN flag,
+    * plus the same aggregates restricted to the bucket's exact start
+    * boundary (the at-start partial that makes CLOSED `[t−w, t]`
+    * windows exactly reconstructable from half-open buckets), the
+    * rate and top-2 points, and the instant-select newest point. An
+    * engine constructed with this table serves every aligned
+    * `*_over_time` query from it without touching raw samples
+    * (`PromQLEngine` fold routing): the
     * cold-history range query reads series × buckets rows instead of
     * the raw sample volume — the materialized-view lever at 100 TB.
     *
@@ -895,6 +821,7 @@ object Ingest {
     * `bucketMs` and whose (offset-shifted) start is bucket-aligned
     * routes here. */
   def foldPartials(samples: DataFrame, bucketMs: Long): DataFrame = {
+    import graft.exec.Partials._
     require(bucketMs > 0, "bucket size must be positive")
     val staleC = if (samples.columns.contains("stale")) col("stale")
       else lit(false)
@@ -906,64 +833,25 @@ object Ingest {
       .withColumn("bucket_start", col("t") - pmod(col("t"), lit(bucketMs)))
       .withColumn("_s0", s0)
       .withColumn("_psig", sigC)
+    val keys = Seq(col("_psig").as("sig"), col("bucket_start"))
     // INSTANT-SELECT partials run over ALL rows, markers included: a
     // staleness marker as a bucket's newest point must hide the
     // series, so the stale flag travels with the last/at-start points.
     // This frame is the superset (every bucket with any row), so it
     // anchors the join.
-    val sel = base
-      .groupBy(col("_psig").as("sig"), col("bucket_start"))
-      .agg(
-        graft.exec.FirstLabels.first(col("labels")).as("_l0"),
-        max(col("t")).as("lta"), max_by(col("v"), col("t")).as("lva"),
-        max_by(col("_stale"), col("t")).as("lsa"),
-        max(when(col("_s0"), col("v"))).as("v0a"),
-        max(when(col("_s0"), col("_stale"))).as("s0a"),
-        max(when(col("_s0"), 1).otherwise(0)).as("has0a"))
-    // fold/rate partials run over LIVE rows only (stale samples never
-    // contribute values); buckets holding only markers surface with
-    // these columns null — materialized fold/rate readers drop them
+    val sel = agg(base.groupBy(keys: _*),
+      Seq("_l0" -> graft.exec.FirstLabels.first(col("labels"))),
+      Latest.fromSamples(col("t"), col("v"), col("_stale"), col("_s0")))
+    // fold/rate/top-2 partials run over LIVE rows only (stale samples
+    // never contribute values); buckets holding only markers surface
+    // with these columns null — materialized fold/rate readers drop them
     val live = base.filter(!col("_stale"))
-    // in-bucket counter-reset correction (sum of pre-reset values) —
-    // the rate/increase partial the engine's bucketed rate path
-    // computes with the same lag window at query time
-    val wl = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_psig"), col("bucket_start")).orderBy(col("t"))
-    val pv = lag(col("v"), 1).over(wl)
-    val pt = lag(col("t"), 1).over(wl)
-    val foldRate = live
-      .withColumn("_pv", pv).withColumn("_pt", pt)
-      // shared with the engine's query-time bucketed rate path — the
-      // two must stay in lockstep for route equivalence
-      .withColumn("_cinc",
-        graft.exec.PromUdfs.counterResetCorrection(col("v"), col("_pv")))
-      .groupBy(col("_psig").as("sig"), col("bucket_start"))
-      .agg(
-        count(lit(1)).as("cnt"), sum(col("v")).as("sum"),
-        sum(col("v") * col("v")).as("sumsq"),
-        min(col("v")).as("mn"), max(col("v")).as("mx"),
-        max(when(isnan(col("v")), 1).otherwise(0)).as("nan"),
-        sum(when(col("_s0"), 1L).otherwise(0L)).as("cnt0"),
-        sum(when(col("_s0"), col("v"))).as("sum0"),
-        sum(when(col("_s0"), col("v") * col("v"))).as("sumsq0"),
-        min(when(col("_s0"), col("v"))).as("mn0"),
-        max(when(col("_s0"), col("v"))).as("mx0"),
-        max(when(col("_s0") && isnan(col("v")), 1).otherwise(0)).as("nan0"),
-        // rate-family partials: first/last point + reset correction
-        min(col("t")).as("ft"), min_by(col("v"), col("t")).as("fv"),
-        max(col("t")).as("lt"), max_by(col("v"), col("t")).as("lv"),
-        sum(col("_cinc")).as("corr"),
-        max(when(col("_s0"), col("v"))).as("v0"),
-        max(when(col("_s0"), 1).otherwise(0)).as("has0"),
-        // instant-value partials: the SECOND-newest point (= the lag
-        // fields of the newest row; wrapped in a struct so max_by
-        // carries the single-point bucket's nulls faithfully) — with
-        // the newest (lt, lv) this is the per-bucket top-2 the
-        // irate/idelta candidate route needs
-        max_by(struct(col("_pt").as("t2"), col("_pv").as("v2")),
-          col("t")).as("_l2"))
-      .withColumn("lt2", col("_l2.t2")).withColumn("lv2", col("_l2.v2"))
-      .drop("_l2")
+      .transform(Rate.withCorrection(Seq(col("_psig"), col("bucket_start")),
+        col("t"), col("v")))
+    val foldRate = agg(live.groupBy(keys: _*),
+      Fold.fromSamples(col("v"), col("_s0")),
+      Rate.fromSamples(col("t"), col("v"), col("_s0")),
+      Top2.fromSamples(col("t"), col("v")))
     sel.join(foldRate, Seq("sig", "bucket_start"), "left")
       // entry-sort after the aggregation (same determinism argument as
       // the dedup path: equal sig ⇒ equal map content)

@@ -181,6 +181,15 @@ class PartialsRoutingSpec extends SparkTestBase {
       val b = results(routed, q, 20 * m, 115 * m, 5 * m)
       assert(a == b, s"$q diverged between raw and partials paths")
     }
+    // the rung-less engine counts its selector routes too: the 5m grid
+    // (m = lookback/step = 1) takes the general path, a 1m grid (m = 5)
+    // the query-time buckets
+    assert(Option(raw.routeHits.get("raw_general")).exists(_.get() >= 3),
+      s"raw instant selectors were not counted: ${raw.routeHits}")
+    raw.rangeQuery("pm", 20 * m, 115 * m, m)
+    assert(Option(raw.routeHits.get("bucketed_query_time"))
+      .exists(_.get() >= 1),
+      s"query-time bucketed selector was not counted: ${raw.routeHits}")
     // the marker semantics end-to-end on the routed path: gone at 60m+
     assert(routed.rangeQuery("""pm{s="gone"}""", 60 * m, 115 * m, 5 * m)
       .count() == 0)

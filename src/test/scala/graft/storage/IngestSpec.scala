@@ -482,6 +482,34 @@ class IngestSpec extends SparkTestBase {
       assert(rowsOf(merged) == rowsOf(full),
         s"trial $trial (cut at ${cut / 1000}s) diverged")
     }
+    // fixed inputs, cut mid-bucket at 90 s: NaN and ±Inf values (a
+    // +Inf last point before the cut makes the junction reset +Inf), a
+    // counter reset exactly at the cut, and a bucket whose only row on
+    // one side of the cut is a staleness marker, each way round
+    def pts(k: String, vs: Seq[(Long, Double, Boolean)]) = vs.map {
+      case (t, v, st) => (Map("__name__" -> "pm", "k" -> k), t, v, st) }
+    val special =
+      pts("nan", (0 until 18).map(i => (i * 10000L, i match {
+        case 5 | 10 => Double.NaN
+        case 8 => Double.PositiveInfinity
+        case 13 => Double.NegativeInfinity
+        case _ => i.toDouble
+      }, false))) ++
+      pts("reset", (0 until 18).map(i =>
+        (i * 10000L, if (i < 9) 10.0 * i else (i - 9).toDouble, false))) ++
+      pts("markA", Seq((0L, 1.0, false), (30000L, 2.0, false),
+        (70000L, Double.NaN, true), (90000L, 3.0, false),
+        (100000L, 4.0, false), (130000L, 5.0, false))) ++
+      pts("markB", Seq((0L, 1.0, false), (60000L, 2.0, false),
+        (80000L, 3.0, false), (100000L, Double.NaN, true),
+        (150000L, 4.0, false)))
+    val cut = 90000L
+    val mergedSpecial = Ingest.mergeFoldPartials(
+      Ingest.foldPartials(df(special.filter(_._2 < cut)), bucket),
+      Ingest.foldPartials(df(special.filter(_._2 >= cut)), bucket))
+    assert(rowsOf(mergedSpecial) ==
+      rowsOf(Ingest.foldPartials(df(special), bucket)),
+      "NaN/Inf, reset-at-cut or one-sided-marker buckets diverged")
   }
 
   test("rollup refresh across a UTC midnight rewrites BOTH touched " +
