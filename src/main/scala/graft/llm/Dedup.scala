@@ -40,7 +40,8 @@ object Dedup {
     * are the rows with `doc_id == canonical_id`. */
   def exactDedup(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val hashed = docs.select(col(idCol), md5(col(textCol).cast("binary")).as("content_hash"))
+    val hashed = OnePartition.text(docs)
+      .select(col(idCol), md5(col(textCol).cast("binary")).as("content_hash"))
     val groups = hashed.groupBy(col("content_hash"))
       .agg(min(col(idCol)).as("canonical_id"),
         count(lit(1)).as("group_size"))
@@ -308,8 +309,8 @@ object Dedup {
       threshold: Double, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
     incrementalJaccardFromSets(
-      shingleSetsCached(fresh, n, idCol, textCol),
-      shingleSetsCached(history, n, idCol, textCol), threshold)
+      shingleSetsCached(OnePartition.text(fresh), n, idCol, textCol),
+      shingleSetsCached(OnePartition.text(history), n, idCol, textCol), threshold)
 
   /** [[incrementalNearDup]]'s element-agnostic, PREFIX-BOUNDED core
     * (r14, the r13 verdict's posting-skew item): the broadcast
@@ -1156,7 +1157,7 @@ object Dedup {
   def containmentPrefixPairs(docs: DataFrame, n: Int, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     containmentPrefixPairsFromSets(
-      shingleSetsCached(docs, n, idCol, textCol), threshold)
+      shingleSetsCached(OnePartition.text(docs), n, idCol, textCol), threshold)
 
   /** [[containmentPrefixPairs]] over a PRECOMPUTED `(id, hs, nsh)` set
     * table — the element-agnostic core of the prefix-filtered
@@ -1353,7 +1354,7 @@ object Dedup {
     // feeds the exact-verify join, and the MinHash signature is a
     // map-only UDF over it (shingles are already distinct, so
     // size(hs) == the shingle count)
-    val sets = shingleSetsCached(docs, n, idCol, textCol)
+    val sets = shingleSetsCached(OnePartition.text(docs), n, idCol, textCol)
     val sigs = sets.select(col("id"),
       minhashSignature(numHashes)(col("hs")).as("sig"))
 
@@ -1451,6 +1452,13 @@ object Dedup {
     * map entries in the one task. Tune with
     * `spark.graft.cc.localFinishEdges` (0 disables, restoring the
     * pure star loop).
+    *
+    * Evaluation: `edges0` is evaluated ONCE — the first round's
+    * probe materializes its lazy checkpoint, and every later step
+    * reads that. Each round's frame is likewise evaluated once. An
+    * input planned on one partition (see [[OnePartition]]) stays on
+    * one partition through every checkpoint and the union-find finish,
+    * so a union or aggregate over the labels plans no Exchange.
     */
   def connectedComponents(edges0: DataFrame, maxRounds: Int = 50): DataFrame = {
     // canonical direction: (u, v) with u > v ("point to the smaller")
@@ -1463,12 +1471,11 @@ object Dedup {
     // action per round, and it both materializes the truncated lineage
     // and computes count+hash in a single job (eager checkpointing paid
     // an extra pass per round).
-    var edges = edges0.select(
+    var edges = OnePartition.localCheckpoint(edges0.select(
         greatest(col(edges0.columns(0)), col(edges0.columns(1))).as("u"),
         least(col(edges0.columns(0)), col(edges0.columns(1))).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct())
 
     def probe(e: DataFrame): (Long, Long) = {
       // xor-fold: order-independent, overflow-free set fingerprint
@@ -1514,7 +1521,7 @@ object Dedup {
     var round = 0
     var converged = sig._1 == 0L
     while (!converged && sig._1 > localFinishCap && round < maxRounds) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
+      val next = OnePartition.localCheckpoint(smallStar(largeStar(edges)))
       val nextSig = probe(next)
       edges.unpersist()
       edges = next
@@ -1595,24 +1602,38 @@ object Dedup {
       }
       out.result().iterator
     }
-    spark.createDataFrame(rdd, outSchema)
+    // restate the RDD's one partition, so a union or aggregate over
+    // the labels plans no Exchange (a join still would: the frame's
+    // size estimate is unbounded, see OnePartition)
+    spark.createDataFrame(rdd, outSchema).coalesce(1)
   }
 
   /** Duplicate clusters over a documents frame: every doc labeled with
     * `cluster_id` = the minimum doc id reachable through `pairs` (its
     * connected component; singletons label themselves) and the cluster
     * size. Downstream, `doc_id == cluster_id` selects the canonical
-    * survivor per cluster — the standard near-dedup keep rule. */
+    * survivor per cluster — the standard near-dedup keep rule.
+    *
+    * Evaluation: `docs` and `pairs` once each (`pairs` through
+    * [[connectedComponents]]). The labels are one aggregate over the
+    * doc ids unioned with the component rows, evaluated once: the
+    * cluster size is a window count over it, not a self-join. Ids are
+    * keys: one output row per distinct doc id. */
   def dupClusters(docs: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id"): DataFrame = {
-    val comp = connectedComponents(pairs)
-    val labels = docs.select(col(idCol))
-      .join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("component"), col(idCol)).as("cluster_id"))
-    val sizes = labels.groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, Seq("cluster_id"))
-      .select(col(idCol), col("cluster_id"), col("cluster_size"))
+    import org.apache.spark.sql.expressions.Window
+    val d = OnePartition.text(docs)
+    val comp = connectedComponents(OnePartition.text(pairs))
+    d.select(col(idCol).as("id"), lit(1L).as("doc"),
+        lit(null).cast(d.schema(idCol).dataType).as("component"))
+      .union(comp.select(col("id"), lit(0L), col("component")))
+      .groupBy(col("id"))
+      .agg(max(col("doc")).as("doc"), min(col("component")).as("component"))
+      .filter(col("doc") === 1L)
+      .select(col("id").as(idCol),
+        coalesce(col("component"), col("id")).as("cluster_id"))
+      .withColumn("cluster_size",
+        count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
   }
 
   /** End-to-end dedup materialization — the apply step a curation
@@ -1632,30 +1653,49 @@ object Dedup {
     * is the O(log n)-round star algorithm of [[connectedComponents]] —
     * the union graph only grows the edge count, never the algorithm.
     * Downstream, `filter(kept == 1)` joined back to the corpus is the
-    * deduplicated training set. */
+    * deduplicated training set.
+    *
+    * Evaluation: the edge table (exact edges ∪ near pairs, each row
+    * flagged exact or near) is built ONCE and lazily checkpointed, so
+    * `nearPairs` and [[exactDedup]] run once each; the components and
+    * both flags all read its rows (a doc sits on an exact edge exactly
+    * when its content group has more than one member). `docs` is read
+    * twice: its text once for the content hashes, its id column once
+    * more for the labels, which are one aggregate over the doc ids,
+    * the component rows and the edge endpoints — no join. Ids are
+    * keys: one output row per distinct doc id. */
   def applyDedup(docs: DataFrame, nearPairs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val ex = exactDedup(docs, idCol, textCol)
-    val exactEdges = ex.filter(col("canonical_id") =!= col(idCol))
-      .select(col(idCol).as("ia"), col("canonical_id").as("ib"))
-    val near = nearPairs.select(col(nearPairs.columns(0)).as("ia"),
-      col(nearPairs.columns(1)).as("ib"))
-    val comp = connectedComponents(exactEdges.union(near))
-    val nearIds = near.select(col("ia").as(idCol))
-      .union(near.select(col("ib").as(idCol)))
-      .distinct()
-      .withColumn("near_dup", lit(1L))
-    docs.select(col(idCol))
-      .join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("component"), col(idCol)).as("survivor_id"))
-      .join(ex.select(col(idCol),
-        (col("group_size") > 1).cast("long").as("exact_dup")), Seq(idCol))
-      .join(nearIds, Seq(idCol), "left")
-      .select(col(idCol), col("survivor_id"),
-        (col(idCol) === col("survivor_id")).cast("long").as("kept"),
-        col("exact_dup"),
-        coalesce(col("near_dup"), lit(0L)).as("near_dup"))
+    val d = OnePartition.text(docs)
+    val near = OnePartition.text(nearPairs)
+    val edges = OnePartition.localCheckpoint(
+      exactDedup(d, idCol, textCol)
+        .filter(col("canonical_id") =!= col(idCol))
+        .select(col(idCol).as("ia"), col("canonical_id").as("ib"),
+          lit(true).as("exact"))
+        .union(near.select(col(near.columns(0)).as("ia"),
+          col(near.columns(1)).as("ib"), lit(false).as("exact"))))
+    val comp = connectedComponents(edges.select(col("ia"), col("ib")))
+    // a doc is an exact duplicate iff it sits on an exact edge (its
+    // content group has more than one member), a near duplicate iff it
+    // sits on a near pair
+    val ends = edges.select(explode(array(
+      struct(col("ia").as("id"), col("exact")),
+      struct(col("ib").as("id"), col("exact")))).as("e"))
+    val none = lit(null).cast(d.schema(idCol).dataType)
+    d.select(col(idCol).as("id"), lit(1L).as("doc"), none.as("component"),
+        lit(0L).as("exact_dup"), lit(0L).as("near_dup"))
+      .union(comp.select(col("id"), lit(0L), col("component"), lit(0L), lit(0L)))
+      .union(ends.select(col("e.id"), lit(0L), none,
+        col("e.exact").cast("long"), (!col("e.exact")).cast("long")))
+      .groupBy(col("id"))
+      .agg(max(col("doc")).as("doc"), min(col("component")).as("component"),
+        max(col("exact_dup")).as("exact_dup"), max(col("near_dup")).as("near_dup"))
+      .filter(col("doc") === 1L)
+      .withColumn("survivor_id", coalesce(col("component"), col("id")))
+      .select(col("id").as(idCol), col("survivor_id"),
+        (col("id") === col("survivor_id")).cast("long").as("kept"),
+        col("exact_dup"), col("near_dup"))
   }
 
   // ---- SimHash -----------------------------------------------------------

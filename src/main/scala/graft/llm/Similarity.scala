@@ -794,7 +794,7 @@ object Similarity {
     require(maxB >= 2, "a bucket below 2 vectors can emit no pair")
     val r0 = nBits / bands
     require(r0 <= 63, "band depth must fit in a long")
-    val p = prepCached(emb, idCol, vecCol)
+    val p = prepCached(OnePartition.vectors(emb), idCol, vecCol)
     // ADAPTIVE DEPTH + count-based skew guard (the d3 design, applied
     // to the hyperplane family — r6, after a measured failure): at
     // fixed band depth r the key space is 2^r, so the expected bucket
@@ -950,11 +950,12 @@ object Similarity {
       seed: Long = 11L): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val p = prepCached(emb, idCol, vecCol)
+    val e = OnePartition.vectors(emb)
+    val p = prepCached(e, idCol, vecCol)
     val k =
       if (numCentroids > 0) numCentroids
       else math.max(16, (p.count() * nprobe / targetBlock).toInt)
-    val centroids = kmeansCentroids(emb, k, dim,
+    val centroids = kmeansCentroids(e, k, dim,
       idCol = idCol, vecCol = vecCol, seed = seed)
     val blocked = p.select(explode(probesCol(centroids, nprobe)(col("v"))).as("_c"),
         col("id"), col("v"), col("nrm"))
@@ -1008,8 +1009,18 @@ object Similarity {
     * plan, k, dim, iters, seed). ANN indexes are built once and queried
     * many times in production — re-deriving the k-means per query would
     * charge every query the build cost. The cache holds k×dim doubles
-    * per entry (tiny) and is exact: the build is deterministic, so a
-    * cache hit returns byte-identical centroids. */
+    * per entry (tiny); a hit returns the centroids of the first build
+    * for its key. The build is NOT bit-reproducible across plans: each
+    * Lloyd update averages per (cluster, dim) and Spark merges the
+    * per-partition partials in partition order, so the same corpus
+    * planned on one partition (see [[OnePartition]]) or spread over
+    * several yields centroids that differ in their last bits
+    * (measured: 67–78 % of the cells, by up to 124 ulps, on the planted
+    * sf0.001–sf0.1 corpora — the plans key separate entries here). A
+    * different centroid can move a vector that sits near a tie to
+    * another block, so [[clusterBlockedPairs]] is checked by soundness
+    * and recall across plans, not by row equality (its pairs were
+    * identical on those corpora). */
   private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int, Int, Long),
     Array[(Int, Array[Double])]]()

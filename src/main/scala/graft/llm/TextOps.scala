@@ -561,7 +561,7 @@ object TextOps {
     val fLang = (!langId(text).isInCollection(allowedLangs)).cast("long")
     val fRep = (dupWord > maxDupWordFrac || top2 > maxTop2gramFrac)
       .cast("long")
-    docs.select(col(idCol),
+    OnePartition.text(docs).select(col(idCol),
       fShort.as("too_short"), fPunct.as("high_punct"),
       fStop.as("low_stopword"), fLang.as("lang_filtered"),
       fRep.as("repetitive"),

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.llm.{Dedup, Similarity, TextOps}
+import graft.llm.{Dedup, OnePartition, Similarity, TextOps}
 
 /** Scale points for the LLM-pipeline SCALE-PATH operators (the ones a
   * 100 TB corpus would actually run — LSH/SimHash banding and the
@@ -22,7 +22,17 @@ import graft.llm.{Dedup, Similarity, TextOps}
   * them — one 194.6 s outlier elevated EVERY row measured after it in
   * its section, stretching an honest ~linear scale point into a
   * 42–194.6 s envelope (SCALE.md §3.2). A scale table row is only
-  * comparable when each cell is the median of N fresh-JVM draws. */
+  * comparable when each cell is the median of N fresh-JVM draws.
+  *
+  * `llm_pass` is the crossover sweep of the one-partition gate
+  * (`graft.llm.OnePartition`, SCALE.md §10): the nine operators of a
+  * perfbench `llm_batch` pass, in its order and with its parameters,
+  * timed per op on both sides of the gate (every input forced onto one
+  * partition, and the parallel plan). Each draw shifts every id, so
+  * its plans are new and every memo table misses, as in the
+  * benchmark's cold passes; the sides alternate draw by draw. It runs
+  * with one shuffle partition per core, as the benchmark does, and
+  * prints the gate's size estimate of each input. */
 object LlmScalePoint {
 
   def main(args: Array[String]): Unit = {
@@ -45,7 +55,73 @@ object LlmScalePoint {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     dirs.foreach(run(spark, _, only))
+    dirs.foreach(dir => if (only.forall(_.contains("llm_pass"))) passSweep(spark, dir))
     spark.stop()
+  }
+
+  private val PassOps = Seq("quality_filter", "exact_dedup",
+    "minhash_lsh_pairs", "dup_clusters", "apply_dedup",
+    "containment_prefix_pairs", "incremental_near_dup", "lsh_cosine_pairs",
+    "cluster_blocked_pairs")
+
+  /** The `llm_pass` rows: median of three cold draws per op and side. */
+  private def passSweep(spark: SparkSession, dir: String): Unit = {
+    val cores = Runtime.getRuntime.availableProcessors
+    val prevPartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", cores.toLong)
+    def estimate(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    def inputs(draw: Int): (DataFrame, DataFrame, DataFrame) = {
+      val shift = lit(draw * 1000000000L)
+      val docs = spark.read.parquet(s"$dir/documents.parquet")
+        .select((col("doc_id") + shift).as("doc_id"), col("text"))
+      // a fresh shard of one doc in five, each a near copy (one word
+      // appended) of its history doc
+      val fresh = docs.filter(col("doc_id") % 5 === 0)
+        .select((col("doc_id") + 500000000L).as("doc_id"),
+          concat(col("text"), lit(" zzz")).as("text"))
+      val emb = Similarity.withPlantedDupes(
+        spark.read.parquet(s"$dir/embeddings.parquet")
+          .select((col("vec_id") + shift).as("vec_id"), col("embedding")))
+      (docs, fresh, emb)
+    }
+    def pass(draw: Int): Seq[Double] = {
+      val (docs, fresh, emb) = inputs(draw)
+      def timed(df: => DataFrame): (DataFrame, Double) = {
+        val t0 = System.nanoTime()
+        val d = df
+        d.write.format("noop").mode("overwrite").save()
+        (d, (System.nanoTime() - t0) / 1e9)
+      }
+      val (near, tNear) = timed(Dedup.minhashLshPairs(docs, 3, 0.7))
+      Seq(timed(TextOps.qualityFilter(docs))._2,
+        timed(Dedup.exactDedup(docs))._2,
+        tNear,
+        timed(Dedup.dupClusters(docs, near))._2,
+        timed(Dedup.applyDedup(docs, near))._2,
+        timed(Dedup.containmentPrefixPairs(docs, 3, 0.8))._2,
+        timed(Dedup.incrementalNearDup(fresh, docs, 3, 0.7))._2,
+        timed(Similarity.lshCosinePairs(emb, 0.9, 64))._2,
+        timed(Similarity.clusterBlockedPairs(emb, 0.9, 64))._2)
+    }
+    try {
+      val (docs, fresh, emb) = inputs(0)
+      println(s"==== llm_pass $dir  cores $cores  input estimates: docs " +
+        s"${estimate(docs)} B  fresh ${estimate(fresh)} B  emb ${estimate(emb)} B ====")
+      val sides = Seq("one" -> Long.MaxValue, "parallel" -> 0L)
+      val draws = (1 to 3).flatMap { k =>
+        sides.map { case (side, bound) =>
+          side -> OnePartition.withMaxBytes(bound)(pass(2 * k + (if (side == "one") 0 else 1)))
+        }
+      }
+      def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
+      sides.foreach { case (side, _) =>
+        val ts = draws.filter(_._1 == side).map(_._2)
+        PassOps.indices.foreach { i =>
+          println(f"llm_pass ${PassOps(i)}%-26s $side%-8s cold-med ${med(ts.map(_(i)))}%7.2f s")
+        }
+        println(f"llm_pass ${"total"}%-26s $side%-8s cold-med ${med(ts.map(_.sum))}%7.2f s")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevPartitions)
   }
 
   private def run(spark: SparkSession, dir: String,

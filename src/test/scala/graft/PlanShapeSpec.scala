@@ -118,29 +118,33 @@ class PlanShapeSpec extends SparkTestBase {
     // shape self-joined the bucket rows (build + probe shuffles on
     // top of the sizing aggregate). Below the cap no bucket can be
     // over-wide, so the plan is ONE grouped-collect exchange with
-    // i<j pairs expanded map-side from the grouped array...
-    val p = plan("d3_minhash_lsh")
-    val bandExchanges = p.linesIterator.count(l =>
-      l.contains("hashpartitioning(band"))
-    assert(bandExchanges == 1,
-      s"sub-cap corpus must plan only the grouped-collect exchange, " +
-        s"found $bandExchanges:\n$p")
-    assert(!p.contains("SortMergeJoin"),
-      s"candidate-verify joins must broadcast, not sort-merge:\n$p")
-    // ...and past the cap the count-based sizing PRE-filter appears
-    // (count partials only — one row per bucket per task, never the
-    // id volume) ahead of the collect: filtering on
-    // size(collect_set(...)) instead would materialize a degenerate
-    // bucket's full width in one aggregation group.
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val guarded = formatted(
-      graft.llm.Dedup.minhashLshPairs(docs, 3, 0.5, maxBucket = 4))
-    val guardedExchanges = guarded.linesIterator.count(l =>
-      l.contains("hashpartitioning(band"))
-    assert(guardedExchanges == 2,
-      s"past-cap plan must add the sizing exchange:\n$guarded")
-    assert(guarded.contains("BroadcastExchange"),
-      "the wide-bucket list must broadcast into the anti-join")
+    // i<j pairs expanded map-side from the grouped array. These are
+    // the parallel plan's shapes: the fixture sits below the
+    // one-partition bound, whose plan ships no band rows at all.
+    graft.llm.OnePartition.withMaxBytes(0L) {
+      val p = plan("d3_minhash_lsh")
+      val bandExchanges = p.linesIterator.count(l =>
+        l.contains("hashpartitioning(band"))
+      assert(bandExchanges == 1,
+        s"sub-cap corpus must plan only the grouped-collect exchange, " +
+          s"found $bandExchanges:\n$p")
+      assert(!p.contains("SortMergeJoin"),
+        s"candidate-verify joins must broadcast, not sort-merge:\n$p")
+      // ...and past the cap the count-based sizing PRE-filter appears
+      // (count partials only — one row per bucket per task, never the
+      // id volume) ahead of the collect: filtering on
+      // size(collect_set(...)) instead would materialize a degenerate
+      // bucket's full width in one aggregation group.
+      val docs = spark.read.parquet(s"$sf/documents.parquet")
+      val guarded = formatted(
+        graft.llm.Dedup.minhashLshPairs(docs, 3, 0.5, maxBucket = 4))
+      val guardedExchanges = guarded.linesIterator.count(l =>
+        l.contains("hashpartitioning(band"))
+      assert(guardedExchanges == 2,
+        s"past-cap plan must add the sizing exchange:\n$guarded")
+      assert(guarded.contains("BroadcastExchange"),
+        "the wide-bucket list must broadcast into the anti-join")
+    }
   }
 
   /** Distinct parquet-scan OPERATORS in a formatted plan (the numbered
@@ -310,7 +314,9 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("d1_exact_dedup shuffles hashes, not documents") {
-    val p = plan("d1_exact_dedup")
+    // the parallel plan's property: the fixture sits below the
+    // one-partition bound, whose plan shuffles nothing at all
+    val p = graft.llm.OnePartition.withMaxBytes(0L)(plan("d1_exact_dedup"))
     // the groupBy key must be the content hash, and text must not ride
     // through the exchange: no `text` column in any Exchange's child
     // output that feeds the aggregate (cheap proxy: Exchange lines

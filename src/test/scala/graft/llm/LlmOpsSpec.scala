@@ -2104,4 +2104,169 @@ class LlmOpsSpec extends SparkTestBase {
       "null-id approx pair must count as a false positive")
     assert(p.getAs[Long]("recall_ok") == 0L, "null-id pair counted as a hit")
   }
+
+  // ---- the one-partition gate (OnePartition) -----------------------------
+
+  /** Shuffle exchanges in a collected frame's final plan, walking AQE
+    * stages, reused exchanges, subqueries and the plans of the cached
+    * relations it reads. */
+  private def shuffles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    def walk(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case r: ReusedExchangeExec => walk(r.child)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case e: ShuffleExchangeExec => e.simpleString(80) +: walk(e.child)
+      case other => other.children.flatMap(walk) ++ other.subqueries.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  /** Component minimum of every id over `edges` (brute-force union-find). */
+  private def components[A](ids: Seq[A], edges: Seq[(A, A)])(
+      implicit ord: Ordering[A]): Map[A, A] = {
+    val parent = scala.collection.mutable.Map.empty[A, A]
+    (ids ++ edges.flatMap(e => Seq(e._1, e._2))).foreach(i => parent(i) = i)
+    def find(x: A): A = { val p = parent(x); if (p == x) x else { val r = find(p); parent(x) = r; r } }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
+    }
+    ids.map(i => i -> find(i)).toMap
+  }
+
+  /** A seeded random dedup graph: docs drawn from a small text pool
+    * (exact groups) and near pairs over the first two thirds of the
+    * ids (the rest stay isolated), with both orientations of some
+    * pairs, repeated pairs and a self-pair. Every fourth graph has all
+    * texts distinct, and every fourth an empty near set. */
+  private def randomGraph(seed: Int): (Seq[(Long, String)], Seq[(Long, Long)]) = {
+    val rnd = new scala.util.Random(seed)
+    val n = 1 + rnd.nextInt(30)
+    val ids = rnd.shuffle((0 until n).map(i => (i * 7 + seed % 5).toLong))
+    val texts =
+      if (seed % 4 == 1) (0 until n).map(i => s"text $i")
+      else Seq.fill(n)(s"text ${rnd.nextInt(1 + n / 3)}")
+    val near =
+      if (seed % 4 == 2) Nil
+      else {
+        val reach = math.max(1, 2 * n / 3)
+        val ps = Seq.fill(rnd.nextInt(n + 1))(
+          (ids(rnd.nextInt(reach)), ids(rnd.nextInt(reach))))
+        ps ++ ps.take(ps.size / 3).map(_.swap) ++ ps.take(ps.size / 4) :+
+          (ids(0) -> ids(0))
+      }
+    (ids.zip(texts), near)
+  }
+
+  /** `applyDedup` and `dupClusters` against the brute-force union-find
+    * answer on one graph, under the current gate bound. */
+  private def checkDedupGraph[A: Ordering: scala.reflect.runtime.universe.TypeTag](
+      docs: Seq[(A, String)], near: Seq[(A, A)], what: String): Unit = {
+    val docsDf = docs.toDF("doc_id", "text")
+    val nearDf = near.toDF("ia", "ib")
+    val ids = docs.map(_._1)
+    val groups = docs.groupBy(_._2).values.map(_.map(_._1))
+    val canon = groups.flatMap(g => g.map(_ -> g.min)).toMap
+    val groupSize = groups.flatMap(g => g.map(_ -> g.size)).toMap
+    val nearIds = near.flatMap(p => Seq(p._1, p._2)).toSet
+    val survivor = components(ids, near ++ canon.toSeq.filter(e => e._1 != e._2))
+    val want = ids.map(i => i -> (survivor(i), if (survivor(i) == i) 1L else 0L,
+      if (groupSize(i) > 1) 1L else 0L, if (nearIds(i)) 1L else 0L)).toMap
+    val got = Dedup.applyDedup(docsDf, nearDf).collect()
+      .map(r => r.getAs[A](0) -> (r.getAs[A](1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    assert(got.length == ids.size && got.toMap == want, s"applyDedup, $what")
+
+    val cluster = components(ids, near)
+    val size = ids.groupBy(cluster).map { case (c, m) => c -> m.size.toLong }
+    val clusters = Dedup.dupClusters(docsDf, nearDf).collect()
+      .map(r => r.getAs[A](0) -> (r.getAs[A](1), r.getLong(2)))
+    assert(clusters.length == ids.size &&
+      clusters.toMap == ids.map(i => i -> (cluster(i), size(cluster(i)))).toMap,
+      s"dupClusters, $what")
+  }
+
+  test("applyDedup and dupClusters equal a brute-force union-find on " +
+      "seeded random graphs, on one partition and on the parallel plan") {
+    for (bound <- Seq(Long.MaxValue, 0L); seed <- 0 until 12)
+      OnePartition.withMaxBytes(bound) {
+        val (docs, near) = randomGraph(seed)
+        val what = s"seed $seed, bound $bound"
+        if (seed % 3 == 0)
+          checkDedupGraph(docs.map { case (i, t) => s"d$i" -> t },
+            near.map { case (a, b) => (s"d$a", s"d$b") }, s"$what, string ids")
+        else checkDedupGraph(docs, near, what)
+      }
+  }
+
+  test("the nine pass ops plan no shuffle on one partition; the exact " +
+      "ops' rows equal the parallel plan's, the cosine ops stay sound " +
+      "at the recall floor on both") {
+    // a seeded corpus: 300 docs of 30-59 words over a 500-word
+    // vocabulary, planted exact copies and near copies (one appended
+    // word), a fresh shard of near copies, and 300 Gaussian vectors
+    // with one planted near-identical copy each
+    val rnd = new scala.util.Random(9)
+    val vocab = Seq.fill(500)(Seq.fill(3 + rnd.nextInt(5))(('a' + rnd.nextInt(26)).toChar).mkString)
+    val base = (0L until 300L).map(i =>
+      i -> Seq.fill(30 + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    val docs = (base ++ base.take(20).map { case (i, t) => (i + 1000000L, t) } ++
+      base.take(40).map { case (i, t) => (i + 2000000L, t + " zzz") }).toDF("doc_id", "text")
+    val fresh = base.filter(_._1 % 5 == 0)
+      .map { case (i, t) => (i + 3000000L, t + " yyy") }.toDF("doc_id", "text")
+    val emb = Similarity.withPlantedDupes((0L until 300L)
+      .map(i => i -> Array.fill(64)(rnd.nextGaussian())).toDF("vec_id", "embedding"))
+    val cosineOps = Set("lsh_cosine_pairs", "cluster_blocked_pairs")
+
+    def pass(): Map[String, (Array[Row], Seq[String])] = {
+      val near = Dedup.minhashLshPairs(docs, 3, 0.7)
+      Seq(
+        "quality_filter" -> (() => TextOps.qualityFilter(docs)),
+        "exact_dedup" -> (() => Dedup.exactDedup(docs)),
+        "minhash_lsh_pairs" -> (() => near),
+        "dup_clusters" -> (() => Dedup.dupClusters(docs, near.select("ia", "ib"))),
+        "apply_dedup" -> (() => Dedup.applyDedup(docs, near.select("ia", "ib"))),
+        "containment_prefix_pairs" -> (() => Dedup.containmentPrefixPairs(docs, 3, 0.8)),
+        "incremental_near_dup" -> (() => Dedup.incrementalNearDup(fresh, docs, 3, 0.7)),
+        "lsh_cosine_pairs" -> (() => Similarity.lshCosinePairs(emb, 0.9, 64)),
+        "cluster_blocked_pairs" -> (() => Similarity.clusterBlockedPairs(emb, 0.9, 64))
+      ).map { case (name, op) =>
+        val df = op()
+        name -> (df.collect(), shuffles(df))
+      }.toMap
+    }
+    val one = OnePartition.withMaxBytes(Long.MaxValue)(pass())
+    val par = OnePartition.withMaxBytes(0L)(pass())
+
+    one.foreach { case (name, (_, sh)) =>
+      assert(sh.isEmpty, s"$name plans a shuffle on one partition: $sh")
+    }
+    assert(par("exact_dedup")._2.nonEmpty && par("apply_dedup")._2.nonEmpty,
+      "bound 0 must keep the parallel plan")
+    assert(one("minhash_lsh_pairs")._1.length > 20 &&
+      one("incremental_near_dup")._1.nonEmpty, "the planted duplicates went unfound")
+    one.keySet.diff(cosineOps).foreach { name =>
+      assert(one(name)._1.map(_.toString).sorted.sameElements(
+        par(name)._1.map(_.toString).sorted), s"$name differs between the plans")
+    }
+    // the approximate ops, on either plan: every pair is above the
+    // threshold, and the planted pairs are found at the recall floor
+    val vecs = emb.collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+    def cos(a: Long, b: Long) = {
+      val (x, y) = (vecs(a), vecs(b))
+      x.zip(y).map(p => p._1 * p._2).sum /
+        math.sqrt(x.map(v => v * v).sum * y.map(v => v * v).sum)
+    }
+    val truth = vecs.keySet.filter(_ < 1000000L).map(i => (i, i + 1000000L))
+    for (plan <- Seq(one, par); name <- cosineOps) {
+      val got = plan(name)._1.map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got.forall { case (a, b) => cos(a, b) >= 0.9 - 1e-9 }, s"$name unsound")
+      val recall = (got & truth).size.toDouble / truth.size
+      assert(recall >= 0.95, s"$name recall $recall")
+    }
+  }
 }
