@@ -653,20 +653,16 @@ object SparkEntry {
       Seq((nRaw, samples, mismatch))
         .toDF("n_raw", "n_chunk", "mismatch")
     }),
-    // S13: series-index (postings) routing — the SAME engine range
-    // query as p3, over an engine holding Ingest.seriesIndex: matchers
-    // evaluate once per series on the index table and the sample scan
-    // is restricted by a sig semi-join (the reference TSDB's
-    // PostingsForMatchers read path; SeriesIndexSpec pins the plan).
-    // A plan change, never a semantics change — oracle identical.
+    // S13: a regex selector over an engine holding Ingest.seriesIndex
+    // (the SAME engine range query as p3): the index is the engine's
+    // series dimension (label rejoin, metadata), and the regex filters
+    // the sample scan itself (SeriesIndexSpec pins plain-engine
+    // equality). Never a semantics change — oracle identical.
     "s13_series_index" -> ((spark, dir) => {
       val samples = Samples.fromEventsDir(spark, dir)
       val eng = new PromQLEngine(spark, samples,
         seriesIndex = Some(Ingest.seriesIndex(samples)))
-      // a SELECTIVE regex matcher so the query actually routes
-      // through the index (r6: cheap equality probes stay per-row;
-      // r7: broad regexes decline too — the semi-join only pays when
-      // the matched set is small, ~2% of series here). Anchored
+      // a selective regex matcher (~2% of series). Anchored
       // ^(?:1[0-2])$ ≡ the oracle's IN ('10','11','12').
       eng.rangeQuery(
         """count_over_time(events_value{user_id=~"1[0-2]"}[1d])""",

@@ -1144,8 +1144,8 @@ object HttpApi {
     * `tsdb/index/postings.go:267-418`), and this is the analogue:
     *   - a series index at `path/_index`, incrementally upserted per
     *     write ([[graft.storage.Ingest.appendSeriesIndex]] — only the
-    *     batch's NOVEL sigs are appended), so matchers evaluate on
-    *     the series dimension and selectors become sig semi-joins;
+    *     batch's NOVEL sigs are appended), which serves as the
+    *     engine's series dimension (label rejoins, metadata);
     *   - optional `rollups` fold-partials rungs at `path/_rollup_<ms>`,
     *     incrementally refreshed per write for exactly the UTC dates
     *     the batch touched ([[graft.storage.Ingest.refreshFoldPartials]]),

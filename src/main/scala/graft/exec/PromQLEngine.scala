@@ -65,11 +65,14 @@ class PromQLEngine(
     // its tiers (HttpApi.forTable).
     private[graft] val partialsLadder: Seq[(DataFrame, Long)] = Nil,
     // (sig, labels) one row per distinct series, from
-    // graft.storage.Ingest.seriesIndex over the SAME samples: matchers
-    // then evaluate on the series DIMENSION and the sample scan becomes
-    // a sig semi-join — the reference TSDB's inverted-index read path
-    // (vendor tsdb/querier.go PostingsForMatchers). Requires a stored
-    // sig column on the samples table (see applyMatchers).
+    // graft.storage.Ingest.seriesIndex over the SAME samples, kept
+    // live by the write path. When bound it IS the series dimension
+    // (seriesDim): label rejoins, labelValues, unbounded series() and
+    // the series catalog read it, never a full-table distinct over
+    // samples. Selector matchers do not go through it: every scan
+    // filters with them on the rows it reads (selectorCond), which
+    // measured no slower than a sig semi-join against the index
+    // (SCALE.md §6 "Route vs. measured win").
     seriesIndex: Option[DataFrame] = None,
     // Gorilla chunk tier over the SAME samples, already decoded to the
     // canonical frame (graft.storage.ChunkStore.read): when bound,
@@ -122,15 +125,6 @@ class PromQLEngine(
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ graft.plans.ChunkEnvelopePushdown
 
-  /** True when the samples table carries a precomputed `sig` column —
-    * the bucketed storage tier ([[graft.storage.Ingest.writeBucketedStore]]
-    * stores `sigExpr(labels)` at write time and buckets the table on
-    * it). Selectors then key by the STORED column: the scan's
-    * `HashPartitioning(sig, n)` satisfies every per-series grouping
-    * downstream, so the sample-volume shuffle vanishes from range-query
-    * plans (asserted in PlanShapeSpec). Recomputing the hash here would
-    * sever that lineage — Catalyst cannot prove `xxhash64(...)` equal
-    * to the stored attribute. */
   /** The frame sample-volume selector scans read: the chunk tier when
     * bound, the raw samples otherwise. Same canonical schema, same
     * content; `chunk_tier` route hits count each scan served. */
@@ -140,6 +134,15 @@ class PromQLEngine(
     oneTask(scanSamples)
   }
 
+  /** True when the samples table carries a precomputed `sig` column —
+    * the bucketed storage tier ([[graft.storage.Ingest.writeBucketedStore]]
+    * stores `sigExpr(labels)` at write time and buckets the table on
+    * it). Selectors then key by the STORED column: the scan's
+    * `HashPartitioning(sig, n)` satisfies every per-series grouping
+    * downstream, so the sample-volume shuffle vanishes from range-query
+    * plans (asserted in PlanShapeSpec). Recomputing the hash here would
+    * sever that lineage — Catalyst cannot prove `xxhash64(...)` equal
+    * to the stored attribute. */
   private val storedSig = scanSamples.columns.contains(SIG)
   private def sigCol: Column =
     if (storedSig) col(SIG) else Samples.sigExpr(col(L))
@@ -180,17 +183,17 @@ class PromQLEngine(
         "match[] must be a vector selector")
     }
     // unbounded series(): a pure series-dimension question — answer
-    // from the postings index alone, no sample scan (the reference's
+    // from the series index alone, no sample scan (the reference's
     // index-only path, tsdb/querier.go); on a small table from the
     // driver-side series catalog, with no Spark job at all
+    val cond = selectorCond(vs)
     val unbounded = startMs.isEmpty && endMs.isEmpty
     if (unbounded && singleTask)
-      return catalog.matching(allMatchers(vs).map(matcherCond).reduce(_ && _))
+      return catalog.matching(cond)
         .map(_.getMap[String, String](1).toMap).toSeq.distinct
     var df = idxCached match {
-      case Some(idx) if unbounded =>
-        idx.filter(allMatchers(vs).map(matcherCond).reduce(_ && _))
-      case _ => applyMatchers(scanSource, allMatchers(vs))
+      case Some(idx) if unbounded => idx.filter(cond)
+      case _ => scanSource.filter(cond)
     }
     startMs.foreach(s => df = df.filter(col(T) >= s))
     endMs.foreach(e => df = df.filter(col(T) <= e))
@@ -200,9 +203,6 @@ class PromQLEngine(
       .map(_.getMap[String, String](0).toMap).toSeq
   }
 
-  /** Raw matching samples for egress (S5 remote-read,
-    * `internal/read/read.go:45-126`): matcher + time bounds pushed to
-    * the scan, rows returned as a DataFrame for streaming collection. */
   /** Matcher-filtered samples for one selector expression, staleness
     * markers INCLUDED — the shared core of the egress and probe
     * surfaces below (one place to fix matcher handling). */
@@ -212,9 +212,12 @@ class PromQLEngine(
       case _ => throw new IllegalArgumentException(
         s"expected a vector selector, got: $matchExpr")
     }
-    applyMatchers(scanSource, allMatchers(vs))
+    scanSource.filter(selectorCond(vs))
   }
 
+  /** Raw matching samples for egress (S5 remote-read,
+    * `internal/read/read.go:45-126`): matcher + time bounds pushed to
+    * the scan, rows returned as a DataFrame for streaming collection. */
   def rawSamples(matchExpr: String, startMs: Option[Long] = None,
       endMs: Option[Long] = None): DataFrame =
     rawSamplesWithMarkers(matchExpr, startMs, endMs)
@@ -257,7 +260,7 @@ class PromQLEngine(
     * highest-rate queries a dashboard fires. */
   def labelValues(name: String): Seq[String] =
     labelValuesMemo.computeIfAbsent(name, n =>
-      // a pure series-dimension question: with a postings index the
+      // a pure series-dimension question: with a series index the
       // answer never touches the sample volume (the reference reads
       // it from the index too, tsdb/index.go LabelValues); on a small
       // table the driver-side series catalog answers it, no Spark job
@@ -353,89 +356,17 @@ class PromQLEngine(
     }
   }
 
-  private def allMatchers(vs: VectorSelector): Seq[LabelMatcher] =
-    vs.name.map(n => LabelMatcher(MatchType.Eq, Samples.MetricNameLabel, n)).toSeq ++
-      vs.matchers
-
-  /** Apply a selector's matchers to a samples-shaped frame. With a
-    * series index (and a stored sig to join on), matchers — regexes
-    * included — evaluate once per SERIES on the index table, and the
-    * sample volume is restricted by a sig semi-join instead of a
-    * per-sample labels probe: the postings read path of the reference
-    * TSDB (`tsdb/querier.go` PostingsForMatchers → chunk reads). At
-    * 100 TB the matcher cost drops by the samples-per-series factor
-    * (a regex over 10⁹ samples becomes a regex over 10⁶ index rows),
-    * and AQE turns the semi-join into a broadcast when the matched
-    * set is small — the common dashboard case. Without an index (or
-    * without a stored sig, where hashing every row to join would cost
-    * more than the probe saves) this is a plain per-row filter. */
-  private def applyMatchers(df: DataFrame, ms: Seq[LabelMatcher]): DataFrame = {
-    val cond = ms.map(matcherCond).reduce(_ && _)
-    // Route through the index only when a matcher is EXPENSIVE per
-    // row (regex): that is where amortizing evaluation across the
-    // samples-per-series factor pays for the extra join stage.
-    // Equality/inequality probes on the labels map are a few
-    // comparisons inside whole-stage codegen, so for them the
-    // semi-join can only ADD cost (a small extra stage, measured
-    // +0.03-0.05 s locally — SCALE.md §6 "Tier scale points", s13
-    // rows); unlike the reference's TSDB, whose postings lists are
-    // the ONLY access path, this engine can evaluate them on the
-    // scan directly.
-    val expensive = ms.exists(m =>
-      m.typ == MatchType.Regex || m.typ == MatchType.NotRegex)
-    idxCached match {
-      case Some(idx) if expensive && df.columns.contains(SIG) =>
-        // Selectivity gate (r7): the semi-join only pays when the
-        // matched set is SMALL — it then broadcasts and prunes most
-        // of the sample scan. A broad matcher (measured at ¼ of all
-        // series: 2.86 s via index vs 1.20 s raw at ×100, SCALE.md
-        // §6) keeps nearly the whole scan AND adds a join stage, so
-        // past the fraction threshold evaluation stays per-row. The
-        // matched count is one aggregate over the index — the SMALL
-        // table (series, not samples) — memoized per (matchers,
-        // index-state) so repeated dashboard queries pay it once.
-        if (indexMatchedFraction(idx, ms, cond)
-            <= PromQLEngine.indexSemiMaxFraction) {
-          countRoute("index_semi")
-          df.join(idx.filter(cond).select(col(SIG)), Seq(SIG), "left_semi")
-        } else {
-          countRoute("index_semi_declined")
-          df.filter(cond)
-        }
-      case _ => df.filter(cond)
-    }
-  }
-
-  /** Fraction of index series the full matcher conjunction keeps —
-    * the input of the `index_semi` selectivity gate. One cheap
-    * aggregate over the series index — NOTE: a Spark ACTION at query
-    * construction time, paid once per novel (index state, matcher
-    * set) and memoized in the bounded LRU companion cache. On a small
-    * table the series catalog counts it on the driver instead (the
-    * same rows, no job). */
-  private def indexMatchedFraction(idx: DataFrame,
-      ms: Seq[LabelMatcher], cond: Column): Double = {
-    // probe OUTSIDE the map mutex: the aggregate is a Spark action
-    // that can take seconds, and computeIfAbsent would hold the single
-    // synchronizedMap lock for its whole duration — one novel matcher
-    // set would block every concurrent query's cache lookup (r8
-    // advice). Rare concurrent first-queries may probe twice; the
-    // probe is deterministic for one index state, so first-put wins
-    // and both callers return the same fraction.
-    val key = (idx.queryExecution.analyzed.canonicalized, ms)
-    val hit = PromQLEngine.indexSelectivityCache.get(key)
-    if (hit != null) hit.doubleValue
-    else {
-      val (total, matched) =
-        if (singleTask) (catalog.size.toLong, catalog.matching(cond).length.toLong)
-        else {
-          val r = idx.agg(count(lit(1)), count(when(cond, lit(1)))).head()
-          (r.getLong(0), r.getLong(1))
-        }
-      val f = if (total == 0) 0.0 else matched.toDouble / total
-      val prev = PromQLEngine.indexSelectivityCache.putIfAbsent(key, f)
-      if (prev != null) prev.doubleValue else f
-    }
+  /** A selector's matcher conjunction — its metric name as an
+    * `__name__` equality plus every label matcher — as one predicate
+    * on the labels column. Every scan a selector reads (raw samples,
+    * chunk rows, rung rows, the series index or catalog) filters with
+    * it, inside the scan's own stage: on the chunk tier it runs once
+    * per ≤ 240-sample chunk row, on a rung once per bucket row. */
+  private def selectorCond(vs: VectorSelector): Column = {
+    val ms = vs.name.map(n =>
+      LabelMatcher(MatchType.Eq, Samples.MetricNameLabel, n)).toSeq ++ vs.matchers
+    require(ms.nonEmpty, "vector selector must contain at least one label matcher")
+    ms.map(matcherCond).reduce(_ && _)
   }
 
   /** All samples falling in each step's window `[step-o-w, step-o]`
@@ -445,8 +376,6 @@ class PromQLEngine(
   private def windowed(vs: VectorSelector, windowMs: Long, tr: EvalRange,
       keepStale: Boolean = false): DataFrame = {
     val o = vs.offsetMs
-    val ms = allMatchers(vs)
-    require(ms.nonEmpty, "vector selector must contain at least one label matcher")
     // Staleness markers (engine.go:796-798,869-871): range selectors drop
     // marker samples from the window; the INSTANT selector instead keeps
     // them through selection so a marker that is the newest point in the
@@ -458,7 +387,7 @@ class PromQLEngine(
     val src = scanSource
     val unstale =
       if (keepStale || !hasStale) src else src.filter(!col("stale"))
-    val base = applyMatchers(unstale, ms)
+    val base = unstale.filter(selectorCond(vs))
       .filter(col(T) >= tr.startMs - o - windowMs && col(T) <= tr.endMs - o)
       .select(sigCol.as(SIG), col(L), col(T).as(ST), col(V),
         staleCol.as("_stale"))
@@ -510,8 +439,8 @@ class PromQLEngine(
     }
   }
 
-  /** Spec surface: whether this engine resolves matchers on a series
-    * index (the postings path) rather than per-sample filters. */
+  /** Spec surface: whether this engine's series dimension is a bound
+    * series index (see [[seriesDim]]). */
   private[graft] def hasSeriesIndex: Boolean = seriesIndex.isDefined
 
   /** Spec surface: whether selector scans serve from the chunk tier. */
@@ -541,7 +470,7 @@ class PromQLEngine(
       tr: EvalRange): DataFrame = {
     val anchor = tr.startMs - vs.offsetMs
     oneTask(tbl)
-      .filter(allMatchers(vs).map(matcherCond).reduce(_ && _))
+      .filter(selectorCond(vs))
       .filter(col("bucket_start") >= anchor - w &&
         col("bucket_start") <= tr.endMs - vs.offsetMs)
       .select(tbl.columns.toSeq.map(c =>
@@ -644,18 +573,6 @@ class PromQLEngine(
 
   // ---------- evaluation ----------
 
-  /** Memoized evaluation: identical subtrees over the same range reuse
-    * ONE DataFrame object, so Catalyst sees structurally equal subplans
-    * and physical planning dedups their exchanges (ReuseExchange). This
-    * is the common-subexpression reuse the tree-walking reference gets
-    * for free from its per-node iterators — e.g.
-    * `max by(x)(m) - min by(x)(m)` scans/windows `m` once, not twice.
-    *
-    * The memo is per-thread and cleared at each public entry point:
-    * reuse only matters WITHIN one query plan, the API server evaluates
-    * concurrent queries on a shared engine (a shared map would race),
-    * and an unbounded cross-query cache would leak in a long-running
-    * server. */
   /** The (sig → labels) dimension of the samples table: one row per
     * series, computed once and Spark-cached, shared across engines over
     * the same table. Selectors never transform labels, so every
@@ -708,7 +625,7 @@ class PromQLEngine(
     * table, collected once per engine — an engine serves one table
     * state — so label rejoins probe it in-task and the series-
     * dimension questions (label values, unbounded series(), the
-    * index_semi selectivity count) answer without a Spark job. Built
+    * series count) answer without a Spark job. Built
     * on the first query that needs it, never on the write or swap
     * path; only small tables (see [[singleTask]]) build one. */
   private final class SeriesCatalog(dim: DataFrame) {
@@ -754,10 +671,10 @@ class PromQLEngine(
     * identity, like [[seriesDim]]). The index is series-cardinality —
     * broadcastable, a normal cache working set even at 40 M active
     * series — but an INLINE index (built from samples, as callers
-    * without a persisted postings table bind it) re-runs a
-    * sample-volume first(labels) aggregate on every semi-join build
-    * and selectivity probe if used raw; that recompute was most of
-    * the r11 s13 serving cost (SCALE.md "FirstLabels settle", r12).
+    * without a persisted index table bind it) re-runs a
+    * sample-volume first(labels) aggregate on every label rejoin and
+    * metadata question if used raw; that recompute was most of the
+    * r11 s13 serving cost (SCALE.md "FirstLabels settle", r12).
     * A deployment binding a parquet-backed index
     * ([[graft.storage.Ingest.appendSeriesIndex]]) caches just the
     * scan. Released with [[releaseSeriesDim]] on engine swap. */
@@ -906,6 +823,18 @@ class PromQLEngine(
       .withColumn(L, map_from_entries(col("_ents")))
       .drop("_ents")
 
+  /** Memoized evaluation: identical subtrees over the same range reuse
+    * ONE DataFrame object, so Catalyst sees structurally equal subplans
+    * and physical planning dedups their exchanges (ReuseExchange). This
+    * is the common-subexpression reuse the tree-walking reference gets
+    * for free from its per-node iterators — e.g.
+    * `max by(x)(m) - min by(x)(m)` scans/windows `m` once, not twice.
+    *
+    * The memo is per-thread and cleared at each public entry point:
+    * reuse only matters WITHIN one query plan, the API server evaluates
+    * concurrent queries on a shared engine (a shared map would race),
+    * and an unbounded cross-query cache would leak in a long-running
+    * server. */
   private val memo = ThreadLocal.withInitial(() =>
     scala.collection.mutable.HashMap.empty[(Expr, EvalRange), Value])
 
@@ -1561,12 +1490,10 @@ class PromQLEngine(
   private def bucketedBase(selector: VectorSelector, w: Long,
       tr: EvalRange, keepStale: Boolean = false): DataFrame = {
     val o = selector.offsetMs
-    val ms = allMatchers(selector)
-    require(ms.nonEmpty, "vector selector must contain at least one label matcher")
     val hasStale = scanSamples.columns.contains("stale")
     val src = scanSource
     val unstale = if (hasStale && !keepStale) src.filter(!col("stale")) else src
-    applyMatchers(unstale, ms)
+    unstale.filter(selectorCond(selector))
       .filter(col(T) >= tr.startMs - o - w && col(T) <= tr.endMs - o)
       .select(Seq(sigCol.as(SIG), col(L), col(V),
         (if (hasStale) col("stale") else lit(false)).as("_st0")) ++
@@ -2106,24 +2033,6 @@ object PromQLEngine {
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
     Option[(Long, Long, Long)]]()
 
-  /** Matched-fraction memo for the `index_semi` selectivity gate,
-    * keyed by (index table state, matcher list) — one Double per
-    * distinct dashboard matcher set per index state. Access-order LRU
-    * bounded at 4096 entries (r7 advice: the former wholesale
-    * `clear()` past the bound was unsynchronized and dropped the hot
-    * half with the cold). The mutex guards only get/putIfAbsent —
-    * the probe aggregate runs UNLOCKED (see indexMatchedFraction), so
-    * a slow first probe never blocks other queries' lookups. */
-  private type SelKey = (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    Seq[graft.promql.Ast.LabelMatcher])
-  private val indexSelectivityCache: java.util.Map[SelKey, java.lang.Double] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[SelKey, java.lang.Double](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[SelKey, java.lang.Double]): Boolean =
-          size() > 4096
-      })
-
   private[exec] val SIG = "sig"
   private[exec] val L = "labels"
   private[exec] val T = "t"
@@ -2226,15 +2135,6 @@ object PromQLEngine {
     * ~1-sample/series/day fixtures (≈0.4/bucket on daily rungs) fall
     * back to raw — the measured-faster plan in both regimes. */
   @volatile private[exec] var foldRungMinSamplesPerBucket: Double = 3.0
-
-  /** Maximum matched-series fraction for a regex matcher to engage
-    * the `index_semi` route (see `applyMatchers`). 0.10 = the
-    * semi-join must prune ≥90% of the scan to pay for its extra
-    * stage; the measured break-even sits well above it (¼ selectivity
-    * was a 2.4× loss at ×100), so the margin is hysteresis toward the
-    * per-row plan. Tests override to force either regime on small
-    * fixtures whose fractions are coarse. */
-  @volatile private[exec] var indexSemiMaxFraction: Double = 0.10
 
   /** Largest chunk-tier table state (samples) that runs each query as
     * ONE Spark task (see `singleTask`) and answers series-dimension

@@ -553,10 +553,9 @@ object Ingest {
     * reference TSDB's postings/inverted index re-expressed as a
     * series-dimension table (`vendor tsdb/index.go`,
     * `tsdb/querier.go` PostingsForMatchers). An engine constructed
-    * with it evaluates matchers here (series cardinality, ~10⁶ rows
-    * at 40 M active series — broadcastable) instead of per sample
-    * (~10⁹+ rows), and restricts the scan by a sig semi-join.
-    * Incremental maintenance is an upsert of the batch's distinct
+    * with it reads its series dimension here (series cardinality,
+    * ~10⁶ rows at 40 M active series — broadcastable): label
+    * rejoins and metadata questions never scan samples. Incremental maintenance is an upsert of the batch's distinct
     * sigs; over the bucketed store the distinct is shuffle-free (the
     * scan is already hash-partitioned by sig). Determinism of
     * `first(labels)`: equal sig ⇒ equal canonical label content (the

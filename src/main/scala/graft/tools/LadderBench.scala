@@ -12,18 +12,20 @@ import graft.storage.Ingest
   * writes it plus 1 m and 1 h partials rungs to parquet, and times the
   * same aligned queries through the raw engine, the 1 m rung, and the
   * full ladder (1 m + 1 h, which routes hourly-step queries to the 1 h
-  * rung). The instant-selector rows (`m`, `sum(m)` at 60 s and 300 s
-  * steps, q = step/bucket = 1 and 5 on the 1 m rung) are the
-  * `select_partials` A/B: every 97th series ends with a staleness
-  * marker, and each answer is checked against the raw engine's, row
-  * for row, before it is timed. SCALE.md §6 quotes the output. Not a
-  * contract surface. */
+  * rung; the `p1m` column is the 1 m rung at q = step/bucket = 60).
+  * The instant-selector rows (`m`, `sum(m)` at 60 s and 300 s steps,
+  * q = 1 and 5 on the 1 m rung) are the `select_partials` A/B: every
+  * 97th series ends with a staleness marker, and each answer is
+  * checked against the raw engine's, row for row, before it is timed.
+  * The session runs on every available core. SCALE.md §6 quotes the
+  * output. Not a contract surface. */
 object LadderBench {
   def main(args: Array[String]): Unit = {
     val nSeries = args.headOption.map(_.toInt).getOrElse(400)
+    val cpus = Runtime.getRuntime.availableProcessors()
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -70,7 +72,8 @@ object LadderBench {
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
       }.sorted.apply(1)
     }
-    for (q <- Seq("sum_over_time(m[6h])", "rate(m[6h])", "irate(m[6h])")) {
+    for (q <- Seq("sum_over_time(m[6h])", "rate(m[6h])", "irate(m[6h])",
+        "idelta(m[6h])")) {
       val tR = med3(eRaw.rangeQuery(q, start, end, step).count())
       val tF = med3(eFine.rangeQuery(q, start, end, step).count())
       val tL = med3(eLadder.rangeQuery(q, start, end, step).count())

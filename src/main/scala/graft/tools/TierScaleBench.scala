@@ -146,12 +146,11 @@ object TierScaleBench {
     val chunkEng = new PromQLEngine(spark, ChunkStore.read(spark, chunkDir))
     val (_, s11Warm, s11Route) = measure(chunkEng, battery(5))
     println(f"${"s11_chunk_p3"}%-16s ${"-"}%9s $s11Warm%8.2fs  $s11Route")
-    // s13 witness, three matcher classes: EQUALITY stays per-row (the
-    // r6 heuristic — map probes are codegen-cheap, the semi-join is
-    // not); a BROAD regex (2 of 5 event types ≈ 40% of series)
-    // declines the index under the r7 selectivity gate
-    // (`index_semi_declined`); a RARE regex (3 user ids ≈ 0.2-2%)
-    // routes (`index_semi`)
+    // s13 rows, three matcher classes on the tiered engine (whose
+    // series index is its series dimension): an EQUALITY matcher, a
+    // BROAD regex (2 of 5 event types ≈ 40% of series) and a RARE
+    // regex (3 user ids ≈ 0.2-2%); every class filters the scan it
+    // reads
     val s13eq = ("s13_eq_match",
       "count_over_time(events_value{event_type=\"click\"}[1d])",
       START, END, DAY)

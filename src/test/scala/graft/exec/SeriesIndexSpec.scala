@@ -1,16 +1,18 @@
 package graft.exec
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.model.Samples
 import graft.storage.Ingest
 
-/** Series-index (postings) routing: an engine given
-  * `Ingest.seriesIndex` must resolve matchers on the index and
-  * restrict the sample scan by a sig semi-join, with results
-  * IDENTICAL to the per-row filter path for every matcher type —
-  * staleness semantics included. */
+/** The series index as the series dimension: an engine given
+  * `Ingest.seriesIndex` answers metadata from it and filters every
+  * sample scan with the selector's matchers, with results IDENTICAL to
+  * a plain engine for every matcher type — staleness semantics
+  * included. */
 class SeriesIndexSpec extends SparkTestBase {
 
   private val m = 60000L
@@ -58,76 +60,107 @@ class SeriesIndexSpec extends SparkTestBase {
     }
     // marker semantics through the index path
     assert(indexed.rangeQuery("py", 62 * m, 90 * m, 5 * m).count() == 0)
-  }
-
-  /** Run f with the selectivity gate wide open — for tests of the
-    * semi-join MACHINERY itself, where the 4-series fixture's coarse
-    * fractions (¼ steps) would otherwise trip the gate. */
-  private def ungated[A](f: => A): A = {
-    val saved = PromQLEngine.indexSemiMaxFraction
-    PromQLEngine.indexSemiMaxFraction = 1.0
-    try f finally PromQLEngine.indexSemiMaxFraction = saved
-  }
-
-  test("the sample scan is restricted by a semi-join; the regex " +
-      "evaluates only on the index side") { ungated {
-    val (_, indexed) = engines
-    val df = indexed.rangeQuery("""{__name__=~"p.*", job="api"}""",
-      10 * m, 20 * m, 5 * m)
-    val plan = df.queryExecution.optimizedPlan.toString
-    assert(plan.contains("LeftSemi"), s"no semi-join in plan:\n$plan")
-    // the regex appears exactly once — on the index subtree, not as a
-    // per-sample filter too
-    val hits = "RLIKE".r.findAllIn(plan).size +
-      "rlike".r.findAllIn(plan).size
-    assert(hits == 1, s"regex evaluated $hits times in plan:\n$plan")
-  } }
-
-  test("equality-only matchers stay per-row — the semi-join engages " +
-      "only for expensive (regex) matchers, observable via index_semi") {
-    ungated {
-      val (_, indexed) = engines
-      // equality: no semi-join stage, no index_semi count
-      val eqPlan = indexed.rangeQuery("""px{job="api"}""", 10 * m, 20 * m, 5 * m)
-        .queryExecution.optimizedPlan.toString
-      assert(!eqPlan.contains("LeftSemi"),
-        s"equality matcher routed through the index:\n$eqPlan")
-      assert(!indexed.routeHits.containsKey("index_semi"))
-      // regex: semi-join present AND counted
-      indexed.rangeQuery("""px{inst=~"a|b"}""", 10 * m, 20 * m, 5 * m)
-      assert(indexed.routeHits.get("index_semi").get() == 1,
-        "regex matcher did not count the index route")
-    }
-  }
-
-  test("the selectivity gate: rare regex matchers route through the " +
-      "index, broad ones fall back to per-row (default threshold)") {
-    // 40 series so fractions are fine-grained: job=~"j07" keeps 1/40
-    // (2.5% ≤ 10% → semi-join), job=~"j.*" keeps all (→ per-row)
+    // the index adds no route: both engines served the same routes
+    assert(indexed.routeHits.keySet == plain.routeHits.keySet)
+    // matchers filter the sample scan itself: no join against the
+    // index, and the regex evaluates once, on the scan
+    val plan = indexed.rangeQuery("""{__name__=~"p.*", job="api"}""",
+      10 * m, 20 * m, 5 * m).queryExecution.optimizedPlan.toString
+    assert(!plan.contains("LeftSemi"), s"semi-join in plan:\n$plan")
+    assert("(?i)rlike".r.findAllIn(plan).size == 1,
+      s"regex not evaluated exactly once in plan:\n$plan")
+    // 40 series: a broad regex keeps every series, a rare one 1/40
     val wide = samplesDF(
       (0 until 40).map(i =>
         Map("__name__" -> "pw", "job" -> f"j$i%02d") ->
           (0 to 20).map(k => (k * 30000L, (i * 100 + k).toDouble))): _*)
       .withColumn("sig", Samples.sigExpr(col("labels")))
-    val plain = new PromQLEngine(spark, wide)
-    val indexed = new PromQLEngine(spark, wide,
+    val widePlain = new PromQLEngine(spark, wide)
+    val wideIndexed = new PromQLEngine(spark, wide,
       seriesIndex = Some(Ingest.seriesIndex(wide)))
-    // rare: routed (plan has the semi-join, counter increments)
-    val rare = indexed.rangeQuery("""pw{job=~"j07"}""", 0, 10 * m, m)
-    assert(rare.queryExecution.optimizedPlan.toString.contains("LeftSemi"),
-      "rare matcher did not engage the semi-join")
-    assert(indexed.routeHits.get("index_semi").get() >= 1)
-    // broad: declined (no semi-join stage, decline counted), results
-    // still identical to the plain path — the gate is pure cost
-    val broad = indexed.rangeQuery("""pw{job=~"j.*"}""", 0, 10 * m, m)
-    assert(!broad.queryExecution.optimizedPlan.toString.contains("LeftSemi"),
-      "broad matcher engaged the semi-join past the gate")
-    assert(indexed.routeHits.get("index_semi_declined").get() >= 1,
-      "decline was not counted")
-    assert(asSet(broad) ==
-      asSet(plain.rangeQuery("""pw{job=~"j.*"}""", 0, 10 * m, m)))
-    assert(asSet(rare) ==
-      asSet(plain.rangeQuery("""pw{job=~"j07"}""", 0, 10 * m, m)))
+    for ((q, series) <- Seq("""pw{job=~"j.*"}""" -> 40, """pw{job=~"j07"}""" -> 1)) {
+      val a = asSet(widePlain.rangeQuery(q, 0, 10 * m, m))
+      assert(a == asSet(wideIndexed.rangeQuery(q, 0, 10 * m, m)),
+        s"$q diverged between plain and indexed paths")
+      assert(a.map(_._1).size == series, s"$q kept ${a.map(_._1).size} series")
+    }
+  }
+
+  test("seeded random selectors: the forTable tier stack (series " +
+      "index, chunk tier, 5 m rung) equals a plain engine bit for bit, " +
+      "and each case is served by the route it targets") {
+    val rnd = new scala.util.Random(11)
+    // 2 metrics × 4 jobs × (inst = "a" | absent): integer counters at
+    // a 30 s cadence over 2 h, resets, ~10 % gaps and a trailing
+    // staleness marker. `mb` carries kind="b" so a cross-metric rate
+    // keeps distinct label sets once the metric name drops.
+    val df = samplesDF((for {
+      name <- Seq("ma", "mb"); j <- 0 until 4; inst <- Seq(Some("a"), None)
+    } yield {
+      val labels = Map("__name__" -> name, "job" -> s"j$j") ++
+        inst.map("inst" -> _) ++ (if (name == "mb") Map("kind" -> "b") else Map())
+      var v = rnd.nextInt(50).toLong
+      val pts = (0L until 120 * m by 30000L).flatMap { t =>
+        if (rnd.nextInt(10) == 0) None
+        else {
+          v = if (rnd.nextInt(40) == 0) rnd.nextInt(5).toLong else v + rnd.nextInt(7)
+          Some(t -> v.toDouble)
+        }
+      }
+      labels -> (pts :+ (pts.last._1 + 30000L -> Samples.StaleNaN))
+    }): _*).withColumn("sig", Samples.sigExpr(col("labels"))).cache()
+    val dir = java.nio.file.Files.createTempDirectory("graft-sel-prop").toString
+    graft.storage.ChunkStore.write(df, dir)
+    val decoded = graft.storage.ChunkStore.read(spark, dir)
+    val rung = Ingest.foldPartials(df, 5 * m).cache()
+    val plain = new PromQLEngine(spark, df)
+    val tiered = new PromQLEngine(spark, df, partialsLadder = Seq((rung, 5 * m)),
+      seriesIndex = Some(Ingest.seriesIndex(df)), chunkTier = Some(decoded))
+    // a metric-name part that never matches the empty string (the
+    // parser requires one) and 1-2 label matchers over a present
+    // label, a sometimes-absent one and an absent one; the first
+    // matcher cycles through every (operator, label) class
+    val names = Seq("ma", "mb", """__name__=~"m[ab]"""", """__name__=~"ma|mx"""",
+      """__name__=~"m.+"""")
+    val labels = Seq("job", "inst", "zone")
+    val values = Map("job" -> Seq("j0", "j1", "j[01]", "j.*", ""),
+      "inst" -> Seq("a", "", "a|b", ".+"), "zone" -> Seq("", "z1", ".*", "z.+"))
+    val ops = Seq("=", "!=", "=~", "!~")
+    def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+    def matcher(l: String, op: String) = s"""$l$op"${pick(values(l))}""""
+    val selectors = (0 until 12).map { i =>
+      val ms = matcher(labels(i % 3), ops(i % 4)) +:
+        Seq.fill(rnd.nextInt(2))(matcher(pick(labels), pick(ops)))
+      val n = pick(names)
+      if (n.startsWith("__name__")) (n +: ms).mkString("{", ", ", "}")
+      else ms.mkString(s"$n{", ", ", "}")
+    }
+    // (grid, start) — the rung-aligned grid starts on a 5 m boundary,
+    // the unaligned one 30 s past it; both step 5 m over 12 steps
+    val grids = Seq("aligned" -> 30 * m, "unaligned" -> (30 * m + 30000L))
+    var nonEmpty = 0
+    try for (vs <- selectors; (grid, start) <- grids;
+        (q, rungRoute, rawRoute) <- Seq(
+          (vs, "select_partials", "raw_general"),
+          (s"rate($vs[10m])", "rate_partials", "bucketed_query_time"),
+          (s"count_over_time($vs[10m])", "fold_partials", "bucketed_query_time"))) {
+      val ctx = s"$q on the $grid grid"
+      val before = tiered.routeHits.asScala.map { case (k, v) => k -> v.get() }.toMap
+      val b = asSet(tiered.rangeQuery(q, start, start + 12 * 5 * m, 5 * m))
+      val served = tiered.routeHits.asScala.map { case (k, v) =>
+        k -> (v.get() - before.getOrElse(k, 0L)) }.filter(_._2 > 0).toMap
+      val a = asSet(plain.rangeQuery(q, start, start + 12 * 5 * m, 5 * m))
+      assert(a == b, s"$ctx diverged")
+      if (a.nonEmpty) nonEmpty += 1
+      val want =
+        if (grid == "aligned") Map(s"$rungRoute:${5 * m}" -> 1L)
+        else Map(rawRoute -> 1L, "chunk_tier" -> 1L)
+      assert(served == want, s"$ctx served by $served, want $want")
+    } finally {
+      rung.unpersist()
+      df.unpersist()
+    }
+    assert(nonEmpty >= selectors.size, s"only $nonEmpty non-empty cases")
   }
 
   test("series and label-values APIs route through the index too") {
