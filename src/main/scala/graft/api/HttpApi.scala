@@ -525,29 +525,25 @@ class HttpApi(spark: SparkSession, engine0: PromQLEngine,
     // missing query = empty query, rejected by the parser as "no
     // expression found in input" (Go FormValue semantics)
     val query = one(p, "query").getOrElse("")
-    val pinned = one(p, "time").map(parseTime(_, "time"))
-    val ts = pinned.getOrElse(System.currentTimeMillis())
-    // cache only EXPLICITLY-pinned times: a now()-defaulted request has
-    // a unique key every call and would churn useful dashboard entries
-    // out of the 64-slot serving LRU
-    def evalInstant(q: String): org.apache.spark.sql.DataFrame =
-      if (pinned.isDefined) engine.instantCached(q, ts)
-      else engine.instant(q, ts)
+    // a now()-defaulted time re-binds the query shape's plan template
+    // like a pinned one (PromQLEngine.planTemplates)
+    val ts = one(p, "time").map(parseTime(_, "time"))
+      .getOrElse(System.currentTimeMillis())
     gatedBudget(requestBudgetMs(p)) {
       val expr = parseOr400(query)
       expr.typ match {
         case Ast.ValueType.Scalar =>
-          val rows = collectRows(evalInstant(query))
+          val rows = collectRows(engine.instantCached(query, ts))
           envelope("scalar", rows.headOption
             .map { case (_, t, v) => pointJson(t, v) }.getOrElse("null"))
         case Ast.ValueType.Vector =>
-          val rows = collectRows(evalInstant(query))
+          val rows = collectRows(engine.instantCached(query, ts))
             .sortBy { case (l, _, _) => l }(Samples.labelsOrdering)
           envelope("vector", rows.map { case (l, t, v) =>
             s"""{"metric":${metricJson(l)},"value":${pointJson(t, v)}}"""
           }.mkString("[", ",", "]"))
         case Ast.ValueType.Matrix => // raw range selector at an instant
-          val rows = collectRows(evalInstant(query))
+          val rows = collectRows(engine.instantCached(query, ts))
           val series = rows.groupBy(_._1).toSeq
             .sortBy { case (l, _) => l }(Samples.labelsOrdering)
           envelope("matrix", series.map { case (l, pts) =>
@@ -965,6 +961,18 @@ class HttpApi(spark: SparkSession, engine0: PromQLEngine,
     m("graft_engine_reagg_hits_total",
       "Aggregations served by re-aggregating a finer partial.", "counter",
       engine.reaggHits.get())
+    // compile churn without a profiler: a query whose plan template
+    // re-binds reuses its whole-stage classes, so compilations grow
+    // only with new query shapes (and codegen-cache evictions)
+    m("graft_codegen_compilations_total",
+      "Generated classes compiled by Janino in this JVM.", "counter",
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    m("graft_plan_template_hits_total",
+      "Queries served by re-binding their shape's plan template.", "counter",
+      engine.templateHits.get())
+    m("graft_plan_template_misses_total",
+      "Queries that built a new plan template.", "counter",
+      engine.templateMisses.get())
     m("graft_chunk_compactions_total",
       "Chunk-store date partitions compacted by the write path.",
       "counter", chunkCompactions.get())

@@ -1,8 +1,9 @@
 package graft.exec
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -147,7 +148,10 @@ class PromQLEngine(
   private def sigCol: Column =
     if (storedSig) col(SIG) else Samples.sigExpr(col(L))
 
-  /** Evaluation grid: instant = single step. */
+  /** Evaluation grid: instant = single step. Every value the plan
+    * derives from `startMs` or `endMs` enters it through [[atStart]] or
+    * [[atEnd]], folded to one [[TimeLit]], so the plan re-binds to
+    * another window of the same shape (see [[planTemplates]]). */
   case class EvalRange(startMs: Long, endMs: Long, stepMs: Long) {
     require(stepMs > 0, "zero or negative query resolution step")
     require(endMs >= startMs, "end timestamp must not be before start time")
@@ -158,8 +162,13 @@ class PromQLEngine(
     // points; the r13 boundary golden pins this off-by-one
     require(numSteps - 1 <= maxPointsPerSeries,
       "exceeded maximum resolution of 11,000 points per timeseries")
+    /** `startMs + d` / `endMs + d` as a plan literal. */
+    def atStart(d: Long): Column = TimeLit.column(fromEnd = false, d, startMs + d)
+    def atEnd(d: Long): Column = TimeLit.column(fromEnd = true, d, endMs + d)
+    /** Step `k`'s timestamp. */
+    def stepAt(k: Column): Column = atStart(0) + k * stepMs
     lazy val stepsDF: DataFrame = oneTask(spark.range(numSteps).toDF())
-      .select((lit(startMs) + col("id") * stepMs).as("t"))
+      .select(stepAt(col("id")).as("t"))
   }
 
   sealed trait Value
@@ -277,54 +286,117 @@ class PromQLEngine(
   def instant(query: String, tsMs: Long): DataFrame =
     finish(evalRoot(Parser.parse(query), EvalRange(tsMs, tsMs, 1000)))
 
-  /** Bound-plan LRU for the SERVING path (r13): a dashboard fleet
-    * re-issues the same query text at the same (aligned) timestamps,
-    * and per-request Catalyst analysis/optimization — NOT evaluation,
-    * and not JSON rendering — is the measured serving cost on Spark
-    * (tools/HttpBench at sf0.1: 0.65 s fresh-plan vs 0.03 s evaluation
-    * on the p7-shaped range; the HTTP layer itself added nothing).
-    * Keyed by the EXACT (query, start, end, step), so a hit returns
-    * the identical immutable DataFrame and re-collects it. Engine
-    * instances are swapped wholesale on write ([[graft.api.HttpApi
-    * .forTable]]), so a fresh engine starts empty and staleness cannot
-    * occur; plan CONSTRUCTION only lives here (the PlanCache liveness
-    * rule — the collect happens per request at the API layer). */
-  private val servingPlanCache: java.util.Map[(String, Long, Long, Long),
-    DataFrame] = graft.llm.PlanCache.bounded(64)
-
-  /** Get-else-compute with the plan build OUTSIDE the map lock: a
-    * 0.65 s Catalyst analysis inside `computeIfAbsent` would serialize
-    * every concurrent cache HIT behind it (the synchronizedMap holds
-    * one lock for the access-order LRU update too). A racing pair may
-    * both plan; the first-cached plan wins so shuffle-stage reuse
-    * concentrates on one DataFrame. */
-  private def cachedPlan(key: (String, Long, Long, Long))
-      (build: => DataFrame): DataFrame = {
-    val hit = servingPlanCache.get(key)
-    if (hit != null) return hit
-    val df = build
-    val prev = servingPlanCache.putIfAbsent(key, df)
-    if (prev != null) prev else df
+  def rangeQuery(query: String, startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
+    val expr = rangeExpr(query)
+    finish(evalRoot(expr, EvalRange(startMs, endMs, stepMs)))
   }
 
+  /** [[instant]] and [[rangeQuery]] for the SERVING path: the plan
+    * comes from the query shape's template (see [[planTemplates]]). */
   def instantCached(query: String, tsMs: Long): DataFrame =
-    cachedPlan((query, tsMs, tsMs, -1L))(instant(query, tsMs))
+    templated(query, Parser.parse(query), EvalRange(tsMs, tsMs, 1000))
 
   def rangeQueryCached(query: String, startMs: Long, endMs: Long,
-      stepMs: Long): DataFrame =
-    cachedPlan((query, startMs, endMs, stepMs))(
-      rangeQuery(query, startMs, endMs, stepMs))
+      stepMs: Long): DataFrame = {
+    val expr = rangeExpr(query)
+    templated(query, expr, EvalRange(startMs, endMs, stepMs))
+  }
 
-  def rangeQuery(query: String, startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
+  private def rangeExpr(query: String): Expr = {
     val expr = Parser.parse(query)
     expr.typ match {
-      case ValueType.Vector | ValueType.Scalar => ()
+      case ValueType.Vector | ValueType.Scalar => expr
       case t => throw new IllegalArgumentException(
         // verbatim engine.go:271 (%q around documentedType)
         s"""invalid expression type "$t" for range query, """ +
           "must be Scalar or instant Vector")
     }
-    finish(evalRoot(expr, EvalRange(startMs, endMs, stepMs)))
+  }
+
+  /** Plan templates for the SERVING path: one analyzed plan per query
+    * SHAPE, re-bound to each request's window. A dashboard refresh
+    * moves its window, so a cache keyed by the exact (query, start,
+    * end, step) missed on all but literal repeats, and each miss paid
+    * the DataFrame build (the evaluation walk plus Catalyst analysis,
+    * a median 0.08 s per dashboard request) and, with the window's
+    * times inlined in the generated code, ~50 fresh class compiles
+    * per refresh (SCALE.md §11). A re-bind moves literals only and
+    * skips analysis; the re-bound plan's code is already compiled.
+    *
+    * The shape ([[TemplateKey]]) holds every input route choice reads,
+    * so a template only serves requests that would have built its
+    * plan: the query text, the step and step count, each selector
+    * offset's [[bestPartials]] pick (the one route input that depends
+    * on the window's position) and the one-task gate; [[slidingWins]]
+    * and [[foldRungPays]] read only these plus the engine's table
+    * stats. Every time value in the plan is a [[TimeLit]] (see
+    * [[EvalRange]]), and [[TimeLit.bind]] moves them all to the new
+    * window. A template keeps its most recent binding, so an exact
+    * repeat re-collects the identical DataFrame; a re-bound plan
+    * replays the counter bumps of its build ([[tally]]), so the route
+    * counters read as if it had been built. Engine instances are
+    * swapped wholesale on write ([[graft.api.HttpApi.forTable]]), so a
+    * fresh engine starts empty and a template never outlives its
+    * table state. Plan CONSTRUCTION only lives here (the PlanCache
+    * liveness rule — the collect happens per request at the API
+    * layer). */
+  private val planTemplates: java.util.Map[TemplateKey, PlanTemplate] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[TemplateKey, PlanTemplate](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[TemplateKey, PlanTemplate]): Boolean =
+          size() > 64
+      })
+
+  private case class TemplateKey(query: String, stepMs: Long, numSteps: Long,
+      rungs: Seq[Long], singleTask: Boolean)
+
+  private final class PlanTemplate(plan: LogicalPlan, tallies: Seq[() => Unit],
+      @volatile var bound: (Long, Long, DataFrame)) {
+    def serve(tr: EvalRange): DataFrame = {
+      val (s, e, df) = bound
+      if (s == tr.startMs && e == tr.endMs) df
+      else {
+        tallies.foreach(_())
+        // re-binding changes literal values only, never a type or a
+        // reference, so the analysis of the template's plan holds
+        val fresh = GraftColumnBridge.analyzedFrame(spark,
+          TimeLit.bind(plan, tr.startMs, tr.endMs))
+        bound = (tr.startMs, tr.endMs, fresh)
+        fresh
+      }
+    }
+  }
+
+  /** Serving-path template counters, exported on `/metrics` as
+    * `graft_plan_template_{hits,misses}_total`; like [[routeHits]],
+    * scoped to this engine instance. */
+  private[graft] val templateHits = new java.util.concurrent.atomic.AtomicLong
+  private[graft] val templateMisses = new java.util.concurrent.atomic.AtomicLong
+
+  /** Serve `expr` on `tr` from its shape's template, building the
+    * template on a miss. The build runs OUTSIDE the map lock: a
+    * Catalyst analysis inside `computeIfAbsent` would serialize every
+    * concurrent hit behind it (the synchronizedMap holds one lock for
+    * the access-order LRU update too). A racing pair may both build;
+    * the first-cached template wins. */
+  private def templated(query: String, expr: Expr, tr: EvalRange): DataFrame = {
+    val key = TemplateKey(query, tr.stepMs, tr.numSteps,
+      selectorOffsets(expr).toSeq.sorted.map(o =>
+        bestPartials(tr.stepMs, tr.startMs - o).fold(0L)(_._2)),
+      singleTask)
+    val hit = planTemplates.get(key)
+    if (hit != null) {
+      templateHits.incrementAndGet()
+      return hit.serve(tr)
+    }
+    templateMisses.incrementAndGet()
+    val log = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    buildLog.set(log)
+    val df = try finish(evalRoot(expr, tr)) finally buildLog.remove()
+    planTemplates.putIfAbsent(key, new PlanTemplate(
+      df.queryExecution.analyzed, log.toSeq, (tr.startMs, tr.endMs, df)))
+    df
   }
 
   /** Evaluate to the canonical (labels, t, v) result frame. */
@@ -388,20 +460,20 @@ class PromQLEngine(
     val unstale =
       if (keepStale || !hasStale) src else src.filter(!col("stale"))
     val base = unstale.filter(selectorCond(vs))
-      .filter(col(T) >= tr.startMs - o - windowMs && col(T) <= tr.endMs - o)
+      .filter(col(T) >= tr.atStart(-o - windowMs) && col(T) <= tr.atEnd(-o))
       .select(sigCol.as(SIG), col(L), col(T).as(ST), col(V),
         staleCol.as("_stale"))
     // steps covered by a sample at st: step >= st+o  &&  step <= st+o+w
     // (integer form of  step-o-w <= st <= step-o), intersected with the
-    // grid and clamped to [start, end].
-    val tAdj = col(ST) + o
+    // grid and clamped to [start, end]. st+o-start is spelled
+    // st-(start-o), so the time value stays one literal.
     val stepD = lit(tr.stepMs.toDouble)
-    val firstStep = greatest(lit(tr.startMs),
-      (lit(tr.startMs) +
-        ceil((tAdj - tr.startMs).cast("double") / stepD) * tr.stepMs).cast("long"))
-    val lastStep = least(lit(tr.endMs),
-      (lit(tr.startMs) +
-        floor((tAdj + windowMs - tr.startMs).cast("double") / stepD) * tr.stepMs).cast("long"))
+    val firstStep = greatest(tr.atStart(0),
+      tr.stepAt(ceil((col(ST) - tr.atStart(-o)).cast("double") / stepD))
+        .cast("long"))
+    val lastStep = least(tr.atEnd(0),
+      tr.stepAt(floor((col(ST) - tr.atStart(-o - windowMs)).cast("double") / stepD))
+        .cast("long"))
     base
       .withColumn("_f", firstStep).withColumn("_l", lastStep)
       .filter(col("_f") <= col("_l"))
@@ -468,14 +540,14 @@ class PromQLEngine(
     * partials'. Input volume: series × buckets, never samples. */
   private def rungSlice(tbl: DataFrame, vs: VectorSelector, w: Long,
       tr: EvalRange): DataFrame = {
-    val anchor = tr.startMs - vs.offsetMs
+    val o = vs.offsetMs
     oneTask(tbl)
       .filter(selectorCond(vs))
-      .filter(col("bucket_start") >= anchor - w &&
-        col("bucket_start") <= tr.endMs - vs.offsetMs)
+      .filter(col("bucket_start") >= tr.atStart(-o - w) &&
+        col("bucket_start") <= tr.atEnd(-o))
       .select(tbl.columns.toSeq.map(c =>
-        if (Partials.timeCols(c)) (col(c) - anchor).as(c) else col(c)) ++
-        gridCols(col("bucket_start"), anchor, tr.stepMs): _*)
+        if (Partials.timeCols(c)) (col(c) - tr.atStart(-o)).as(c) else col(c)) ++
+        gridCols(col("bucket_start"), tr.atStart(-o), tr.stepMs): _*)
   }
 
   /** A rung's rows as step-bucket partials. At q = step/bucket = 1 each
@@ -539,7 +611,6 @@ class PromQLEngine(
       rung: Option[(DataFrame, Long)]): DataFrame = {
     val step = tr.stepMs
     val m = (lookbackMs / step).toInt
-    val anchor = tr.startMs - vs.offsetMs
     val partials = rung match {
       case Some(r) =>
         countRoute("select_partials", r._2)
@@ -566,9 +637,9 @@ class PromQLEngine(
         Partials.Latest.newest(col("_c.p.rel"), col("_c.p.v"),
           col("_c.p.stale")))
         .filter(!col("lsa")))
-      .withColumn(T, lit(tr.startMs) + col("_k") * step)
+      .withColumn(T, tr.stepAt(col("_k")))
       .select(col(SIG), col(L), col(T),
-        (col("lta") + anchor).as(ST), col("lva").as(V))
+        (col("lta") + tr.atStart(-vs.offsetMs)).as(ST), col("lva").as(V))
   }
 
   // ---------- evaluation ----------
@@ -748,11 +819,13 @@ class PromQLEngine(
     * side is bucketCount × m and sliding wins by the
     * samples-per-bucket factor. Estimated from the memoized table
     * stats under a uniform-cadence assumption, with 1.5× hysteresis
-    * toward the explode route (the single-stage plan). */
+    * toward the explode route (the single-stage plan). The query span
+    * is the grid's (steps and step only, never the window's position
+    * or an off-grid end), so the choice is one per plan template. */
   private def slidingWins(w: Long, tr: EvalRange): Boolean =
     tableStats.exists { case (t0, t1, rows, series) =>
       val span = math.max(1L, t1 - t0)
-      val qspan = math.min(span, (tr.endMs - tr.startMs) + w)
+      val qspan = math.min(span, (tr.numSteps - 1) * tr.stepMs + w)
       val m = (w / tr.stepMs).toDouble
       val perSeries = rows.toDouble / math.max(1L, series) * qspan / span
       val partials = math.min(perSeries, qspan.toDouble / tr.stepMs)
@@ -866,10 +939,24 @@ class PromQLEngine(
     * scoped to this engine instance. */
   private[graft] val routeHits = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.atomic.AtomicLong]()
-  private def countRoute(route: String, bucketMs: Long = -1L): Unit =
-    routeHits.computeIfAbsent(
-      if (bucketMs > 0) s"$route:$bucketMs" else route,
-      _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
+  private def countRoute(route: String, bucketMs: Long = -1L): Unit = {
+    val key = if (bucketMs > 0) s"$route:$bucketMs" else route
+    tally(() => routeHits.computeIfAbsent(key,
+      _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet())
+  }
+
+  /** The counter bumps of the template build running on this thread
+    * (see [[planTemplates]]), or null outside one. */
+  private val buildLog =
+    new ThreadLocal[scala.collection.mutable.ArrayBuffer[() => Unit]]
+
+  /** Apply one counter bump now and log it for the template build in
+    * progress, whose re-bound plans replay it. */
+  private def tally(bump: () => Unit): Unit = {
+    bump()
+    val log = buildLog.get
+    if (log != null) log += bump
+  }
 
   /** Queries planned on the one-task plan (see [[singleTask]]),
     * exported beside the route counters as
@@ -881,7 +968,7 @@ class PromQLEngine(
   private def evalRoot(e: Expr, tr: EvalRange): Value = {
     memo.get().clear()
     aggMemo.get().clear()
-    if (singleTask) singleTaskQueries.incrementAndGet()
+    if (singleTask) tally(() => singleTaskQueries.incrementAndGet())
     eval(e, tr)
   }
 
@@ -949,7 +1036,8 @@ class PromQLEngine(
       else agg.grouping.toSet.subsetOf(g.toSet)
     }
     val result = finer match {
-      case Some((_, df)) => reaggHits.incrementAndGet(); reAggregate(df, agg)
+      case Some((_, df)) =>
+        tally(() => reaggHits.incrementAndGet()); reAggregate(df, agg)
       case None => evalAggregateImpl(agg, tr)
     }
     aggMemo.get().updateWith(key)(prev =>
@@ -1494,10 +1582,10 @@ class PromQLEngine(
     val src = scanSource
     val unstale = if (hasStale && !keepStale) src.filter(!col("stale")) else src
     unstale.filter(selectorCond(selector))
-      .filter(col(T) >= tr.startMs - o - w && col(T) <= tr.endMs - o)
+      .filter(col(T) >= tr.atStart(-o - w) && col(T) <= tr.atEnd(-o))
       .select(Seq(sigCol.as(SIG), col(L), col(V),
         (if (hasStale) col("stale") else lit(false)).as("_st0")) ++
-        gridCols(col(T), tr.startMs - o, tr.stepMs): _*)
+        gridCols(col(T), tr.atStart(-o), tr.stepMs): _*)
   }
 
   /** Grid coordinates of time column `t` on a step grid anchored at
@@ -1505,7 +1593,7 @@ class PromQLEngine(
     * integer floor: the nonnegative remainder is subtracted first so
     * the division is of an exact multiple) and `_s0` (t sits ON a
     * step boundary). */
-  private def gridCols(t: Column, anchor: Long, step: Long): Seq[Column] = {
+  private def gridCols(t: Column, anchor: Column, step: Long): Seq[Column] = {
     val rel = t - anchor
     val rem = pmod(rel, lit(step))
     Seq(rel.as("_rel"), ((rel - rem) / lit(step.toDouble)).cast("long").as("_b"),
@@ -1643,7 +1731,7 @@ class PromQLEngine(
       case "avg_over_time" => sumV / cntD
     }
     joinLabels(windows)
-      .withColumn(T, lit(tr.startMs) + col("_k") * step)
+      .withColumn(T, tr.stepAt(col("_k")))
       .withColumn(V, value)
       .select(col(SIG), Samples.dropMetricName(col(L)).as(L), col(T),
         col(T).as(ST), col(V))
@@ -1703,7 +1791,7 @@ class PromQLEngine(
         sqrt(col("sumsq") / cntD - (col("sum") / cntD) * (col("sum") / cntD))
     }
     merged
-      .withColumn(T, lit(tr.startMs) + col("_k") * step)
+      .withColumn(T, tr.stepAt(col("_k")))
       .withColumn(V, value)
       .select(col(SIG), Samples.dropMetricName(col(L)).as(L), col(T),
         col(T).as(ST), col(V))
@@ -1753,7 +1841,7 @@ class PromQLEngine(
       .withColumn(V, Partials.Rate.finish(col("_ps"),
         (col("_k") - m) * step, col("_k") * step, w, isCounter, isRate))
       .filter(col(V).isNotNull)
-      .withColumn(T, lit(tr.startMs) + col("_k") * step)
+      .withColumn(T, tr.stepAt(col("_k")))
       .select(col(SIG), Samples.dropMetricName(col(L)).as(L), col(T),
         col(T).as(ST), col(V))
       .transform(reSig)
@@ -1798,7 +1886,7 @@ class PromQLEngine(
       Partials.Top2.merge(f => col(s"_c.p.$f"))))
       .withColumn(V, Partials.Top2.finish(isRate))
       .filter(col(V).isNotNull)
-      .withColumn(T, lit(tr.startMs) + col("_k") * step)
+      .withColumn(T, tr.stepAt(col("_k")))
       .select(col(SIG), Samples.dropMetricName(col(L)).as(L), col(T),
         col(T).as(ST), col(V))
       .transform(reSig)
@@ -2045,6 +2133,20 @@ object PromQLEngine {
   private[exec] val functions = Ast.functions
   private[exec] def shouldDropMetricName(op: String): Boolean =
     Ast.shouldDropMetricName(op)
+
+  /** The distinct offsets of an expression's selectors: the inputs of
+    * each selector's rung pick (see `bestPartials`). */
+  private def selectorOffsets(e: Expr): Set[Long] = e match {
+    case VectorSelector(_, _, off) => Set(off)
+    case MatrixSelector(sel, _) => Set(sel.offsetMs)
+    case ParenExpr(i) => selectorOffsets(i)
+    case UnaryExpr(_, i) => selectorOffsets(i)
+    case BinaryExpr(_, a, b, _, _) => selectorOffsets(a) ++ selectorOffsets(b)
+    case AggregateExpr(_, ex, p, _, _) =>
+      selectorOffsets(ex) ++ p.toSet.flatMap(selectorOffsets)
+    case Call(_, args) => args.toSet.flatMap(selectorOffsets)
+    case _ => Set.empty
+  }
 
   private[exec] val rangeFuncs: Set[String] = Set(
     "sum_over_time", "avg_over_time", "min_over_time", "max_over_time",

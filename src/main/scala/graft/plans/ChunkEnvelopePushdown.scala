@@ -57,17 +57,20 @@ object ChunkEnvelopePushdown extends Rule[LogicalPlan] {
 
   /** (lowerBoundMs, upperBoundMs) a conjunct imposes on the generated
     * `t` attribute, if any. Strictness is kept on the envelope side
-    * (`max_t > x` is as prunable as `>=`). */
+    * (`max_t > x` is as prunable as `>=`). The bound is the conjunct's
+    * own literal, reused as is on the envelope: a
+    * [[graft.exec.TimeLit]] stays one, so the envelope filter's
+    * generated code does not depend on the query window. */
   private def boundOf(tAttr: Attribute, c: Expression)
-      : Option[(Boolean, Boolean, Long)] = c match {
+      : Option[(Boolean, Boolean, Literal)] = c match {
     // (isLower, isStrict, literal)
-    case GreaterThanOrEqual(a: Attribute, Literal(x: Long, LongType))
+    case GreaterThanOrEqual(a: Attribute, x @ Literal(_: Long, LongType))
         if a.semanticEquals(tAttr) => Some((true, false, x))
-    case GreaterThan(a: Attribute, Literal(x: Long, LongType))
+    case GreaterThan(a: Attribute, x @ Literal(_: Long, LongType))
         if a.semanticEquals(tAttr) => Some((true, true, x))
-    case LessThanOrEqual(a: Attribute, Literal(x: Long, LongType))
+    case LessThanOrEqual(a: Attribute, x @ Literal(_: Long, LongType))
         if a.semanticEquals(tAttr) => Some((false, false, x))
-    case LessThan(a: Attribute, Literal(x: Long, LongType))
+    case LessThan(a: Attribute, x @ Literal(_: Long, LongType))
         if a.semanticEquals(tAttr) => Some((false, true, x))
     case _ => None
   }
@@ -92,19 +95,20 @@ object ChunkEnvelopePushdown extends Rule[LogicalPlan] {
     * envelope columns. Unknown shapes are left untouched (no change —
     * the rewrite is an optimization, never required). */
   private def inject(p: LogicalPlan,
-      bounds: Seq[(Boolean, Boolean, Long)]): LogicalPlan = p match {
+      bounds: Seq[(Boolean, Boolean, Literal)]): LogicalPlan = p match {
     case leaf if envelopeAttrs(leaf).isDefined =>
       val (minT, maxT, dateOpt) = envelopeAttrs(leaf).get
       val existing: Seq[Expression] = leaf match {
         case Filter(c, _) => splitConj(c)
         case _ => Nil
       }
-      val derived = bounds.flatMap { case (isLower, strict, x) =>
+      val derived = bounds.flatMap { case (isLower, strict, xLit) =>
+        val x = xLit.value.asInstanceOf[Long]
         val env: Expression =
-          if (isLower) { if (strict) GreaterThan(maxT, Literal(x, LongType))
-                         else GreaterThanOrEqual(maxT, Literal(x, LongType)) }
-          else { if (strict) LessThan(minT, Literal(x, LongType))
-                 else LessThanOrEqual(minT, Literal(x, LongType)) }
+          if (isLower) { if (strict) GreaterThan(maxT, xLit)
+                         else GreaterThanOrEqual(maxT, xLit) }
+          else { if (strict) LessThan(minT, xLit)
+                 else LessThanOrEqual(minT, xLit) }
         // ISO date strings order lexicographically only for years
         // 1000-9999; epoch-ms in [0, ~year 9999] is the served range.
         // Partition inference reads `date` back as DateType (epoch-day

@@ -48,6 +48,12 @@ object Serve {
       // heavy range query shares task slots with concurrent instants
       // instead of monopolizing the FIFO head
       .config("spark.scheduler.mode", "FAIR")
+      // Spark's static codegen cache holds 100 compiled classes by
+      // default; one dashboard refresh needs ~121 (measured on the
+      // perfbench dash_read refresh, SCALE.md §11), so a server at the
+      // default evicts and recompiles byte-identical classes on every
+      // refresh. 1000 holds eight such dashboards.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // materialize one parquet rollup per requested bucket size; the

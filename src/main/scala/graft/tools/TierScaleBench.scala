@@ -57,10 +57,11 @@ object TierScaleBench {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1")
+    val cpus = Runtime.getRuntime.availableProcessors()
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[$cpus]")
       .appName("tier-scale-bench")
-      .config("spark.sql.shuffle.partitions", 32)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", false)
       .getOrCreate()
@@ -105,8 +106,20 @@ object TierScaleBench {
     println(f"samples $nSamples%d  series $nSeries%d")
 
     // ---- tier store builds (ingest-side cost, timed separately) ----
-    def tmp(tag: String) = java.nio.file.Files
-      .createTempDirectory(s"tierbench-$tag").toString
+    // every store lives in a temp dir removed when the corpus is done
+    val stores = scala.collection.mutable.ArrayBuffer.empty[String]
+    def tmp(tag: String) = {
+      val p = java.nio.file.Files.createTempDirectory(s"tierbench-$tag").toString
+      stores += p
+      p
+    }
+    try measureCorpus(spark, samples, tmp)
+    finally stores.foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+  }
+
+  private def measureCorpus(spark: SparkSession, samples: DataFrame,
+      tmp: String => String): Unit = {
     var hourlyP: DataFrame = null; var dailyP: DataFrame = null
     var index: DataFrame = null; var chunkDir: String = null
     val tHourly = time {

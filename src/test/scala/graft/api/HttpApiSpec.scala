@@ -157,6 +157,38 @@ class HttpApiSpec extends SparkTestBase {
     assert(body.contains("graft_chunk_compactions_deferred_total"))
   }
 
+  test("/metrics exports the codegen-compilation and plan-template " +
+      "counters") {
+    def counters(): Map[String, Long] = {
+      val (code, body) = get("/metrics")
+      assert(code == 200)
+      Seq("graft_codegen_compilations_total", "graft_plan_template_hits_total",
+        "graft_plan_template_misses_total").map { n =>
+        assert(body.contains(s"# TYPE $n counter"), body)
+        n -> s"(?m)^$n ([0-9]+)$$".r.findFirstMatchIn(body)
+          .map(_.group(1).toLong).getOrElse(fail(s"$n missing:\n$body"))
+      }.toMap
+    }
+    val q = "/api/v1/query?query=" +
+      java.net.URLEncoder.encode("count_over_time(test_metric1[7m])", UTF_8)
+    val before = counters()
+    assert(get(s"$q&time=3000")._1 == 200) // a new shape: one miss
+    val built = counters()
+    assert(built("graft_plan_template_misses_total") ==
+      before("graft_plan_template_misses_total") + 1)
+    assert(built("graft_codegen_compilations_total") >=
+      before("graft_codegen_compilations_total"))
+    // the same shape at a new time, then with time defaulted to now():
+    // both re-bind the template
+    assert(get(s"$q&time=3060")._1 == 200)
+    assert(get(q)._1 == 200)
+    val after = counters()
+    assert(after("graft_plan_template_misses_total") ==
+      built("graft_plan_template_misses_total"))
+    assert(after("graft_plan_template_hits_total") ==
+      built("graft_plan_template_hits_total") + 2)
+  }
+
   test("quiesced drains the admission gate, runs, restores every slot; " +
       "an undrainable gate defers (returns None)") {
     // outer quiesced holds all 20 slots -> the nested barrier cannot
